@@ -13,7 +13,7 @@ Probes:
   latest_window / latest_bjoin   — latest_per_url modes over the bench corpus
   pipeline                       — full tile pipeline (bench shape, noop-free
                                    count, same as sec_tile_pipeline's run())
-  pip_relational / pip_indexed   — pip_join refine variants (count)
+  pip_indexed                    — pip_join indexed refine (count)
   minhash                        — minhash_lsh_pairs count (current code)
   tile_assign                    — q_tile_assign_multizoom(S.SPARK) collect
   knn                            — knn_embeddings(emb, emb, 5) count
@@ -142,18 +142,6 @@ def _pip_q(spark, refine):
     zones = gen_zones(spark, 20000, seed=1, radius_scale=0.1, nv_extra=40).cache()
     zones.count()
     return pip_join(pts, zones, res=10, refine=refine)
-
-
-def probe_pip_relational(reps):
-    spark = _session()
-    q = _pip_q(spark, "relational")
-    spark.sparkContext.setJobDescription("probe: pip relational")
-    state = {}
-
-    def run():
-        state["n"] = q.count()
-    r = _time(run, reps, discard=2)
-    return {"reps": r, "n_pairs": state["n"]}
 
 
 def probe_pip_indexed(reps):

@@ -12,7 +12,6 @@ dense-feasible cases, including through the batched slow_batch path, and
 (b) bounded peak allocation on the z12 worst cases.
 """
 
-import os
 import tracemalloc
 
 import numpy as np
@@ -153,14 +152,9 @@ def test_slow_batch_sparse_routing_matches_dense(grid_cap):
     assert dense.equals(chunked)
 
 
-def test_grid_cap_default():
-    assert "TILEGEN_GRID_CAP" not in os.environ or True
-    old = os.environ.pop("TILEGEN_GRID_CAP", None)
-    try:
-        assert K.grid_cap() == 65536
-    finally:
-        if old is not None:
-            os.environ["TILEGEN_GRID_CAP"] = old
+def test_grid_cap_default(monkeypatch):
+    monkeypatch.delenv("TILEGEN_GRID_CAP", raising=False)
+    assert K.grid_cap() == 65536
 
 
 def test_covering_runs_vectorized_parity():

@@ -441,8 +441,9 @@ def test_pip_join_shuffle_and_indexed_paths(spark):
     with contextlib.redirect_stdout(buf):
         shuffle_rel.explain()  # simple mode: each physical node appears once
     plan = buf.getvalue()
-    # zone dim prep (zones_covering_quadkeys / the cached synth source) are
-    # the only allowed Arrow stages; the candidate-side refine must be pure
+    # zone dim prep (zones_covering_quadkeys' MapInArrow over zone_id+ring /
+    # the cached synth source's MapInPandas) are the only allowed Arrow
+    # stages; the candidate-side refine must be pure
     # codegen — no pandas node may touch point rows (the old path's pandas
     # refine showed as a MapInPandas over point_id+ring)
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 0, plan

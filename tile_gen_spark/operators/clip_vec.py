@@ -523,6 +523,43 @@ def _row_weights(b: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return _row_weights_arrays(zs, nv, S, L, allv)
 
 
+def slow_cap() -> int:
+    """Work budget in grid-cell x vertex units (TILEGEN_SLOW_CAP, default
+    8M ~ 64 MB per float64 work array) that the batched clip and the PIP
+    zone covering split their rows by."""
+    import os
+    return int(os.environ.get("TILEGEN_SLOW_CAP", "8000000"))
+
+
+def chunk_plan(w: np.ndarray, alone: np.ndarray,
+               cap: int) -> list[tuple[int, int, bool]]:
+    """Greedy contiguous plan over rows with weights ``w``: a list of
+    (start, end, alone) row ranges in row order. ``alone`` rows get a
+    one-row range flagged True (the caller's per-row path); the rest are
+    packed into ranges whose weight sum stays under ``cap`` (a row over
+    ``cap`` on its own still forms a range of one)."""
+    n = w.size
+    if n == 0:
+        return []
+    if int(w.sum()) <= cap and not alone.any():
+        return [(0, n, False)]
+    plan: list[tuple[int, int, bool]] = []
+    start = acc = 0
+    for i in range(n):
+        if alone[i] or (acc and acc + w[i] > cap):
+            if i > start:
+                plan.append((start, i, False))
+            start, acc = i, 0
+        if alone[i]:
+            plan.append((i, i + 1, True))
+            start = i + 1
+            continue
+        acc += int(w[i])
+    if n > start:
+        plan.append((start, n, False))
+    return plan
+
+
 def slow_batch(b: pd.DataFrame, extent: int,
                cap: int | None = None, pack: bool = False,
                gcap: int | None = None) -> pd.DataFrame:
@@ -531,52 +568,30 @@ def slow_batch(b: pd.DataFrame, extent: int,
     Memory-bounded two ways:
      - a skewed batch of large low-zoom polygons (~10^3 covering tiles) is
        split into sub-batches whose estimated instance-vertex total stays
-       under ``cap`` (TILEGEN_SLOW_CAP, default 8M ~ 64 MB per float64 work
-       array), since the core materializes per-(tile, ring) instance arrays
-       for the whole batch at once;
+       under ``cap`` (slow_cap()), since the core materializes per-(tile,
+       ring) instance arrays for the whole batch at once;
      - a bbox-sparse row (candidate grid over TILEGEN_GRID_CAP cells — e.g. a
        continent-spanning diagonal line at z12, whose full bbox grid would be
        ~16.7M cells for O(10^3) actually-covered tiles) routes to
        _sparse_core, which enumerates the EXACT covering via the O(covered)
        kernels and clips only those units, in tile chunks sized to ``cap``.
-    Contiguous splits preserve row order => output order.
+    Contiguous splits (chunk_plan) preserve row order => output order.
     """
-    import os
-    n_rows = len(b)
-    if n_rows == 0:
+    if len(b) == 0:
         return _empty_frame()
     if cap is None:
-        cap = int(os.environ.get("TILEGEN_SLOW_CAP", "8000000"))
+        cap = slow_cap()
     w, g = _row_weights(b)
     if gcap is None:
         # standalone/test use only — plan-builders pass the driver-resolved
         # value (ADVICE r5: executor env != driver env on a real cluster)
         gcap = K.grid_cap()
-    if int(w.sum()) <= cap and int(g.max()) <= gcap:
-        return _slow_core(b, extent, pack)
-    # greedy contiguous split; oversized-grid rows go alone to _sparse_core
-    parts: list[pd.DataFrame] = []
-    start = 0
-    acc = 0
-
-    def flush(end: int) -> None:
-        nonlocal start, acc
-        if end > start:
-            parts.append(_slow_core(b.iloc[start:end], extent, pack))
-        start = end
-        acc = 0
-
-    for i in range(n_rows):
-        if g[i] > gcap:
-            flush(i)
-            parts.append(_sparse_core(b.iloc[i:i + 1], extent, cap, pack, gcap))
-            start = i + 1
-            continue
-        if acc and acc + w[i] > cap:
-            flush(i)
-        acc += int(w[i])
-    flush(n_rows)
+    parts = [_sparse_core(b.iloc[a:e], extent, cap, pack, gcap) if alone
+             else _slow_core(b.iloc[a:e], extent, pack)
+             for a, e, alone in chunk_plan(w, g > gcap, cap)]
     parts = [p for p in parts if len(p)]
+    if len(parts) == 1:
+        return parts[0]
     return pd.concat(parts, ignore_index=True) if parts else _empty_frame()
 
 
@@ -684,15 +699,29 @@ def _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
     tiles.clip_shapes_direct) output-for-output (modulo the r4 flat geom/off
     transport) over pre-flattened ring structures; see module docstring.
     """
-    n_rows = is_line_row.size
-    if n_rows == 0:
+    if is_line_row.size == 0:
         return []
-
-    # --- candidate grid per row: ring-0 vertex-tile bbox (the covering
-    # kernel's candidate grid) ----------------------------------------------
     r0 = row_first_ring[:-1]
-    L0 = ring_len[r0]
-    v0 = _gather(ring_start[r0], L0)
+    unit_row, unit_z, ux, uy, west, south, east, north, cov = covering_units(
+        zs, verts, ring_start[r0], ring_len[r0], is_line_row)
+    return _clip_units_parts(
+        is_line_row, row_ring_count, row_first_ring, ring_len, ring_start,
+        verts, unit_row, unit_z, ux, uy, fids[unit_row], west, south, east,
+        north, cov, extent, pack)
+
+
+def covering_units(zs, verts, S0, L0, is_line_row):
+    """Dense covering of every row of a batch in one vectorized pass.
+
+    Row i's ring 0 is ``verts[S0[i]:S0[i]+L0[i]]`` (L0 >= 1) at zoom
+    ``zs[i]``. Its candidates are the vertex-tile bbox grid (the covering
+    kernels' dense grid); one unit = one (row, candidate tile), rows in
+    order, tiles in raster (y, x) order within a row. ``cov`` marks the
+    units the reference kernels would emit. Shared by the multi-tile clip
+    and the PIP zone covering (spatial_join). Returns (unit_row, unit_z, ux,
+    uy, west, south, east, north, cov)."""
+    n_rows = zs.size
+    v0 = _gather(S0, L0)
     lon0 = np.nan_to_num(verts[v0, 0], nan=0.0, posinf=180.0, neginf=-180.0)
     lat0 = np.clip(np.nan_to_num(verts[v0, 1], nan=0.0, posinf=K.MAX_LAT,
                                  neginf=-K.MAX_LAT), -K.MAX_LAT, K.MAX_LAT)
@@ -729,12 +758,9 @@ def _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
     # would emit (grid candidates outside the geometry would otherwise leak
     # rare quantization slivers past the degenerate-drop) -------------------
     cov = _covering_mask(n_rows, n_unit, unit_row, unit_base, ux, uy,
-                         west, south, east, north, verts, ring_start[r0], L0,
+                         west, south, east, north, verts, S0, L0,
                          xt, yt, x0, y0, gx, is_line_row)
-    return _clip_units_parts(
-        is_line_row, row_ring_count, row_first_ring, ring_len, ring_start,
-        verts, unit_row, unit_z, ux, uy, fids[unit_row], west, south, east,
-        north, cov, extent, pack)
+    return unit_row, unit_z, ux, uy, west, south, east, north, cov
 
 
 def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
@@ -932,14 +958,12 @@ def slow_batch_arrow(rb, extent: int, cap: int | None = None,
                      pack: bool = False, gcap: int | None = None):
     """Arrow twin of slow_batch: one input RecordBatch of multi-tile
     (feature, _z) rows → list of output RecordBatches (CLIP_FLAT_SCHEMA).
-    Same greedy contiguous chunking and sparse routing, same part order,
-    zero per-row Python end to end."""
-    import os
-    n_rows = rb.num_rows
-    if n_rows == 0:
+    Same chunk_plan routing, same part order, zero per-row Python end to
+    end."""
+    if rb.num_rows == 0:
         return []
     if cap is None:
-        cap = int(os.environ.get("TILEGEN_SLOW_CAP", "8000000"))
+        cap = slow_cap()
     if gcap is None:
         gcap = K.grid_cap()
     (is_line, ring_len, ring_start, verts, row_ring_count, row_first_ring,
@@ -949,19 +973,18 @@ def slow_batch_arrow(rb, extent: int, cap: int | None = None,
     w, g = _row_weights_arrays(zs, nv_raw, r0_start, r0_len, verts)
 
     parts: list[tuple] = []
-
-    def run_range(a: int, b_: int) -> None:
-        if b_ <= a:
-            return
+    for a, b_, alone in chunk_plan(w, g > gcap, cap):
         rs, re = int(row_first_ring[a]), int(row_first_ring[b_])
-        parts.extend(_slow_core_parts(
-            is_line[a:b_], zs[a:b_], fids[a:b_], ring_len[rs:re], verts,
-            ring_start[rs:re], row_ring_count[a:b_],
-            row_first_ring[a:b_ + 1] - rs, extent, pack))
-
-    if int(w.sum()) <= cap and int(g.max()) <= gcap:
-        run_range(0, n_rows)
-        return parts_to_batches(parts, pack)
+        if alone:
+            parts.extend(_sparse_one_row_parts(
+                is_line[a:b_], int(zs[a]), int(fids[a]), ring_len[rs:re],
+                ring_start[rs:re], verts, extent, cap, pack, gcap))
+        else:
+            parts.extend(_slow_core_parts(
+                is_line[a:b_], zs[a:b_], fids[a:b_], ring_len[rs:re], verts,
+                ring_start[rs:re], row_ring_count[a:b_],
+                row_first_ring[a:b_ + 1] - rs, extent, pack))
+    return parts_to_batches(parts, pack)
     start = 0
     acc = 0
     for i in range(n_rows):

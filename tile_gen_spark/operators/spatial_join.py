@@ -6,8 +6,10 @@ join". Shape:
  1. **Bucket** both sides at a quadkey resolution ``res``:
     - points relationally (G2 tile math as Spark SQL expressions + G4 quadkey
       digits — zero Python, whole-stage-codegen'd);
-    - polygons via G8 covering tiles, Arrow-batched (one row per covering
-      quadkey, exploded).
+    - polygons via G8 covering tiles: one batched covering per Arrow batch
+      of zones (clip_vec.covering_units, the same pass the tile clip uses),
+      bbox-sparse or over-budget zones per zone through the kernel; one row
+      per covering quadkey.
  2. **Equi-join** the buckets. A point lives in exactly ONE bucket, so the
     join emits each candidate (point, zone) pair at most once — no
     dropDuplicates shuffle needed (cheaper than generic bucket joins that
@@ -31,6 +33,8 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
+from .clip_vec import (_row_weights_arrays, chunk_plan, covering_units,
+                       slow_cap)
 
 ZONE_QK_SCHEMA = ("zone_id bigint, qb bigint, bminx double, bmaxx double, "
                   "bminy double, bmaxy double")
@@ -92,36 +96,70 @@ def points_with_bucket(points: DataFrame, res: int,
         "qb", F.expr(f"coalesce(({x}) * {1 << res} + ({y}), -1)"))
 
 
+def zone_cover_batch(rb, res: int, gcap: int, cap: int):
+    """One Arrow batch of zones (zone_id, ring) → covering rows
+    (ZONE_QK_SCHEMA) in zone order, each zone's tiles in kernel order.
+
+    Rings are read as Arrow offsets plus flat values. clip_vec.chunk_plan
+    packs the zones into contiguous runs of at most ``cap`` grid-cell x
+    vertex units (the size of the work arrays covering_units allocates),
+    and each run is covered in one clip_vec.covering_units pass. A zone
+    whose candidate grid is over ``gcap`` cells, or whose own weight is
+    over ``cap`` (a large, high-vertex zone), goes alone through
+    K.polygon_covering_tiles, whose memory stays O(cells + vertices).
+    Either way the rows equal K.polygon_covering_tiles per zone (tests pin
+    it bit for bit).
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ring = rb.column(rb.schema.get_field_index("ring"))
+    ids = np.asarray(rb.column(rb.schema.get_field_index("zone_id"))).astype(np.int64)
+    n = np.asarray(pc.fill_null(pc.list_value_length(ring), 0)).astype(np.int64)
+    if (n % 2).any():
+        raise ValueError("zone ring with an odd number of coordinates")
+    L = n // 2
+    S = np.cumsum(L) - L
+    verts = np.asarray(pc.list_flatten(ring)).astype(np.float64).reshape(-1, 2)
+    keep = L > 0                      # a zone without vertices covers nothing
+    ids, S, L = ids[keep], S[keep], L[keep]
+    zs = np.full(ids.size, res, np.int64)
+    w, g = _row_weights_arrays(zs, L, S, L, verts)
+    out_zone, out_qb = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for a, e, alone in chunk_plan(w, (g > gcap) | (w > cap), cap):
+        if alone:
+            tiles = K.polygon_covering_tiles(verts[S[a]:S[a] + L[a]].ravel(),
+                                             res, cap=gcap)
+            out_zone.append(np.full(tiles.shape[0], a, np.int64))
+            out_qb.append(tiles[:, 0] * (1 << res) + tiles[:, 1])
+            continue
+        unit_row, _, ux, uy, *_, cov = covering_units(
+            zs[a:e], verts, S[a:e], L[a:e], np.zeros(e - a, bool))
+        out_zone.append(a + unit_row[cov])
+        out_qb.append(ux[cov] * (1 << res) + uy[cov])
+    zi = np.concatenate(out_zone)
+    cols = [ids[zi], np.concatenate(out_qb)]
+    for red, k, eps in ((np.minimum, 0, -_BBOX_EPS), (np.maximum, 0, _BBOX_EPS),
+                        (np.minimum, 1, -_BBOX_EPS), (np.maximum, 1, _BBOX_EPS)):
+        bb = red.reduceat(verts[:, k], S) if S.size else np.zeros(0)
+        cols.append(bb[zi] + eps)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c) for c in cols],
+        names=["zone_id", "qb", "bminx", "bmaxx", "bminy", "bmaxy"])
+
+
 def zones_covering_quadkeys(zones: DataFrame, res: int) -> DataFrame:
-    """G8 per zone → exploded (zone_id, qb) covering rows, Arrow-batched."""
-    gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "zone_id", "qb", "bminx", "bmaxx", "bminy", "bmaxy")}
-            for zid, ring in zip(b["zone_id"], b["ring"]):
-                r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
-                tiles = K.polygon_covering_tiles(r.ravel(), res, cap=gcap)
-                if tiles.size == 0:
-                    continue
-                qbs = tiles[:, 0] * (1 << res) + tiles[:, 1]
-                cols["zone_id"].extend([zid] * len(qbs))
-                cols["qb"].extend(qbs.tolist())
-                cols["bminx"].extend([float(r[:, 0].min()) - _BBOX_EPS] * len(qbs))
-                cols["bmaxx"].extend([float(r[:, 0].max()) + _BBOX_EPS] * len(qbs))
-                cols["bminy"].extend([float(r[:, 1].min()) - _BBOX_EPS] * len(qbs))
-                cols["bmaxy"].extend([float(r[:, 1].max()) + _BBOX_EPS] * len(qbs))
-            yield pd.DataFrame({
-                "zone_id": pd.Series(cols["zone_id"], dtype="int64"),
-                "qb": pd.Series(cols["qb"], dtype="int64"),
-                "bminx": pd.Series(cols["bminx"], dtype="float64"),
-                "bmaxx": pd.Series(cols["bmaxx"], dtype="float64"),
-                "bminy": pd.Series(cols["bminy"], dtype="float64"),
-                "bmaxy": pd.Series(cols["bmaxy"], dtype="float64"),
-            })
-
-    return zones.select("zone_id", "ring").mapInPandas(fn, ZONE_QK_SCHEMA)
+    """G8 per zone → exploded (zone_id, qb) covering rows plus the zone's
+    ±_BBOX_EPS bbox: one batched covering per Arrow batch
+    (zone_cover_batch, sharing clip_vec.covering_units with the tile clip),
+    sparse-grid and over-budget zones covered per zone by the kernel."""
+    # driver-resolved, shipped in the task closure: the sparse-routing grid
+    # cap and the work budget the multi-tile clip chunks by
+    gcap = K.grid_cap()
+    cap = slow_cap()
+    return zones.select("zone_id", "ring").mapInArrow(
+        lambda batches: (zone_cover_batch(rb, res, gcap, cap) for rb in batches),
+        ZONE_QK_SCHEMA)
 
 
 def pip_refine(candidates: DataFrame) -> DataFrame:
