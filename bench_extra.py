@@ -18,7 +18,6 @@ Probes:
   tile_assign                    — q_tile_assign_multizoom(S.SPARK) collect
   knn                            — knn_embeddings(emb, emb, 5) count
   extract                        — latest→extract_and_parse→validity noop
-  fastbatch                      — _fast_batch micro (no Spark)
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_PAGES, TILEGEN_* toggles.
 """
@@ -186,32 +185,6 @@ def probe_knn(reps):
     spark.sparkContext.setJobDescription("probe: knn_embeddings")
     r = _time(lambda: knn_embeddings(emb, emb, k=5).count(), reps)
     return {"reps": r}
-
-
-def probe_fastbatch(reps):
-    """_fast_batch micro over a synthetic shape batch (no Spark)."""
-    import numpy as np
-    import pandas as pd
-    from tile_gen_spark.operators.tiles import _fast_batch
-    rng = np.random.RandomState(7)
-    n = 20000
-    rows = {"feature_id": [], "kind": [], "coords": [], "_zs": []}
-    for i in range(n):
-        nv = 3 + int(rng.randint(5))
-        lon0, lat0 = rng.uniform(-170, 170), rng.uniform(-70, 70)
-        ring = np.column_stack([
-            lon0 + rng.uniform(0, 0.003, nv), lat0 + rng.uniform(0, 0.003, nv)])
-        rows["feature_id"].append(i)
-        rows["kind"].append("polygon" if i % 2 else "line")
-        rows["coords"].append([ring.ravel().tolist()])
-        rows["_zs"].append(list(range(0, 10)))
-    b = pd.DataFrame(rows)
-    out = []
-    for _ in range(reps):
-        t0 = time.time()
-        r = _fast_batch(b, 4096, pack=True)
-        out.append(round(time.time() - t0, 3))
-    return {"reps": out, "rows_out": len(r)}
 
 
 PROBES = [n[6:] for n in dir(sys.modules[__name__]) if n.startswith("probe_")]

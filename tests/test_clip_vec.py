@@ -1,9 +1,15 @@
 """Batched (ragged-numpy) clip vs the reference kernels — pure numpy."""
 
 import numpy as np
+import pyarrow as pa
 
 from tile_gen_spark.functions import kernels as K
 from tile_gen_spark.operators import clip_vec as CV
+
+#: input schema of clip_vec.slow_batch_arrow (the multi-tile clip stage)
+SLOW_SCHEMA = pa.schema([("feature_id", pa.int64()), ("kind", pa.string()),
+                         ("coords", pa.list_(pa.list_(pa.float64()))),
+                         ("_z", pa.int32())])
 
 
 def _rand_ring(rng, n):
@@ -29,7 +35,7 @@ def test_sh_pass_matches_clip_ring_bbox_fast():
     for ring, (w, s, e, n) in zip(rings, boxes):
         got = K.clip_ring_bbox_fast([tuple(p) for p in ring], w, s, e, n)
         want.append(np.asarray(got, dtype=np.float64).reshape(-1, 2))
-    # batched: strip closing like slow_batch, one call
+    # batched: strip closing like decode_clip_rings, one call
     stripped = []
     for ring in rings:
         a = ring.ravel()
@@ -92,8 +98,8 @@ def test_lb_batched_matches_clip_segments_bbox():
 
 def test_covering_mask_matches_reference_kernels():
     """Batched covering == polygon_covering_tiles / _line_covering_tiles per
-    row, incl. big multi-tile polygons and diagonal lines at z 8-12."""
-    import pandas as pd
+    row, incl. big multi-tile polygons and diagonal lines at z 8-12,
+    through the Arrow entry point slow_batch_arrow."""
     from tile_gen_spark.operators.tiles import _line_covering_tiles
 
     rng = np.random.default_rng(23)
@@ -120,21 +126,17 @@ def test_covering_mask_matches_reference_kernels():
             tiles = _line_covering_tiles(pts.ravel(), z)
         want[idx] = {(int(a), int(b)) for a, b in tiles}
 
-    b = pd.DataFrame({
-        "feature_id": np.arange(len(rows), dtype=np.int64),
-        "kind": pd.Series([r[0] for r in rows], dtype="string"),
-        "coords": pd.Series([[r[1].ravel().tolist()] for r in rows], dtype=object),
-        "props": pd.Series([{} for _ in rows], dtype=object),
-        "_z": pd.Series([r[2] for r in rows], dtype="int64"),
-    })
-    out = CV.slow_batch(b, 4096)
+    rb = pa.RecordBatch.from_pylist(
+        [{"feature_id": i, "kind": kind, "coords": [pts.ravel().tolist()],
+          "_z": z} for i, (kind, pts, z) in enumerate(rows)],
+        schema=SLOW_SCHEMA)
     got = {}
-    for _, r in out.iterrows():
-        got.setdefault(int(r["feature_id"]), set()).add((int(r["x"]), int(r["y"])))
+    for out in CV.slow_batch_arrow(rb, 4096):
+        for r in out.to_pylist():
+            got.setdefault(r["feature_id"], set()).add((r["x"], r["y"]))
     # emitted tiles ⊆ covering (degenerate clips drop); and every covered
     # tile with non-degenerate geometry must appear. Check both directions
     # against the full reference loop:
-    import os
     from tile_gen_spark.functions import kernels as KK
     for idx, (kind, pts, z) in enumerate(rows):
         ref_rows = set()

@@ -8,14 +8,14 @@ a per-segment column walk producing O(covered) candidates, re-apply the
 SAME exact covering tests, and (polygons) scanline-fill interior runs.
 
 These tests pin (a) bit-identical covering output sparse-vs-dense on
-dense-feasible cases, including through the batched slow_batch path, and
+dense-feasible cases, including through the batched slow_batch_arrow path, and
 (b) bounded peak allocation on the z12 worst cases.
 """
 
 import tracemalloc
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 import tile_gen_spark.functions.kernels as K
@@ -119,8 +119,9 @@ def test_continent_polygon_z12_bounded(grid_cap):
 
 
 def test_slow_batch_sparse_routing_matches_dense(grid_cap):
-    """slow_batch routes oversized-grid rows to _sparse_core; output must be
-    row-for-row identical to the dense core (including tile-chunked)."""
+    """slow_batch_arrow routes oversized-grid rows to the sparse per-row
+    core; output must be row-for-row identical to the dense core (including
+    tile-chunked)."""
     rng = np.random.default_rng(7)
     ang = np.linspace(0, 2 * np.pi, 30, endpoint=False)
     lv = np.column_stack([np.linspace(-100, 60, 15),
@@ -134,22 +135,24 @@ def test_slow_batch_sparse_routing_matches_dense(grid_cap):
              coords=[ext.ravel().tolist(), hole.ravel().tolist()], _z=6),
         dict(feature_id=3, kind="polygon", coords=[small.ravel().tolist()], _z=6),
     ]
-    b = pd.DataFrame(rows)
+    rb = pa.RecordBatch.from_pylist(rows, schema=pa.schema([
+        ("feature_id", pa.int64()), ("kind", pa.string()),
+        ("coords", pa.list_(pa.list_(pa.float64()))), ("_z", pa.int32())]))
 
-    def canon(df):
-        df = df.copy()
-        df["geom"] = df["geom"].apply(tuple)
-        df["off"] = df["off"].apply(lambda o: tuple(o) if o is not None else None)
-        return df.sort_values(["z", "x", "y", "feature_id", "geom"]).reset_index(drop=True)
+    def canon(batches):
+        return sorted(
+            (r["z"], r["x"], r["y"], r["feature_id"], tuple(r["geom"]),
+             None if r["off"] is None else tuple(r["off"]))
+            for b in batches for r in b.to_pylist())
 
     grid_cap(DENSE)
-    dense = canon(CV.slow_batch(b, 4096))
+    dense = canon(CV.slow_batch_arrow(rb, 4096))
     grid_cap("50")
-    sparse = canon(CV.slow_batch(b, 4096))
-    chunked = canon(CV.slow_batch(b, 4096, cap=2000))
+    sparse = canon(CV.slow_batch_arrow(rb, 4096))
+    chunked = canon(CV.slow_batch_arrow(rb, 4096, cap=2000))
     assert len(dense) > 0
-    assert dense.equals(sparse)
-    assert dense.equals(chunked)
+    assert dense == sparse
+    assert dense == chunked
 
 
 def test_grid_cap_default(monkeypatch):

@@ -2,11 +2,11 @@
 wall"): geom carries one (qx<<16|qy) int per VERTEX (half the array
 elements) and off is NULL for single-piece rows. These tests pin the
 relational decode and producer/consumer consistency; the end-to-end
-equality of all three props_modes packed-vs-unpacked is exercised through
-build_tile_features here, and the nested-reference parity pytest runs with
-the packed default."""
+equality packed-vs-unpacked is exercised through build_tile_features here,
+and the nested-reference parity pytest runs with the default transport.
+The r6 packed tile key (one bigint through the agg exchange) is pinned
+against the unpacked key, and its z <= 29 guard is exercised at z = 30."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,28 +42,26 @@ def test_packed_points_flat_matches_unpacked(spark):
     assert ka == kb and len(ka) == 100
 
 
+def _canon_tiles(df):
+    out = {}
+    for r in df.collect():
+        out[(r["z"], r["x"], r["y"])] = tuple(
+            (f["feature_id"], f["kind"],
+             tuple(tuple(p) for p in f["geom"]),
+             tuple(sorted((f["props"] or {}).items())))
+            for f in r["features"])
+    return out
+
+
 def test_packed_build_equals_unpacked_all_modes(spark, features, monkeypatch):
-    """build_tile_features output must be identical packed vs unpacked in
-    every props_mode (the transport is an encoding, not a semantic)."""
-
-    def canon(df):
-        out = {}
-        for r in df.collect():
-            out[(r["z"], r["x"], r["y"])] = tuple(
-                (f["feature_id"], f["kind"],
-                 tuple(tuple(p) for p in f["geom"]),
-                 tuple(sorted((f["props"] or {}).items())))
-                for f in r["features"])
-        return out
-
-    for mode in ("dim", "inline", "dim2"):
-        monkeypatch.setenv("TILEGEN_PROPS_MODE", mode)
-        monkeypatch.setenv("TILEGEN_GEOM_PACK", "0")
-        a = canon(T.build_tile_features(features, [3], salt=2))
-        monkeypatch.setenv("TILEGEN_GEOM_PACK", "1")
-        b = canon(T.build_tile_features(features, [3], salt=2))
-        assert len(a) > 20
-        assert a == b, f"packed transport diverged in props_mode={mode}"
+    """build_tile_features output must be identical packed vs unpacked (the
+    transport is an encoding, not a semantic)."""
+    monkeypatch.setenv("TILEGEN_GEOM_PACK", "0")
+    a = _canon_tiles(T.build_tile_features(features, [3], salt=2))
+    monkeypatch.setenv("TILEGEN_GEOM_PACK", "1")
+    b = _canon_tiles(T.build_tile_features(features, [3], salt=2))
+    assert len(a) > 20
+    assert a == b, "packed transport diverged"
 
 
 def test_pack_disabled_for_oversized_extent(monkeypatch):
@@ -75,31 +73,48 @@ def test_pack_disabled_for_oversized_extent(monkeypatch):
     assert T._pack_for(4096) is False
 
 
-def test_packed_tile_key_equals_unpacked(spark, features, monkeypatch):
-    """r6 packed tile key (TILEGEN_KEY_PACK): (z,x,y) ride the two agg
-    exchanges as ONE bigint. Pure transport — output must be bit-identical
-    to the unpacked key path, salted and unsalted."""
-
-    def canon(df):
-        out = {}
-        for r in df.collect():
-            out[(r["z"], r["x"], r["y"])] = tuple(
-                (f["feature_id"], f["kind"],
-                 tuple(tuple(p) for p in f["geom"]),
-                 tuple(sorted((f["props"] or {}).items())))
-                for f in r["features"])
-        return out
-
+def test_packed_tile_key_equals_unpacked(spark, features):
+    """r6 packed tile key: (z,x,y) ride the agg exchange as ONE bigint.
+    Pure transport — tile_feature_lists_dim's output must be bit-identical
+    with pack_key=True and pack_key=False, salted and unsalted."""
+    zooms = [3, 6]
+    flat = T.clip_points_flat(features.filter("kind='point'"), zooms).unionByName(
+        T.clip_shapes_flat(features.filter("kind!='point'"), zooms))
+    dim = features.select("feature_id", "kind", "props")
     for salt in (0, 2):
-        monkeypatch.setenv("TILEGEN_KEY_PACK", "0")
-        a = canon(T.build_tile_features(features, [3, 6], salt=salt))
-        monkeypatch.setenv("TILEGEN_KEY_PACK", "1")
-        b = canon(T.build_tile_features(features, [3, 6], salt=salt))
+        a = _canon_tiles(T.tile_feature_lists_dim(flat, dim, salt=salt,
+                                                  pack_key=False))
+        b = _canon_tiles(T.tile_feature_lists_dim(flat, dim, salt=salt,
+                                                  pack_key=True))
         assert len(a) > 20
         assert a == b, f"packed tile key diverged at salt={salt}"
-    # z > 29 must refuse the packed key (guard in build_tile_features)
-    assert T.key_pack() is True
-    assert (T.key_pack() and max([3, 30]) <= 29) is False
+
+
+def test_packed_tile_key_guard_z30(spark, features):
+    """z > 29 cannot be packed (x/y overflow into the z bits). A direct
+    tile_feature_lists_dim caller who leaves pack_key=None gets the in-plan
+    guard's error instead of corrupt keys; build_tile_features derives
+    pack_key from its zooms and returns exact z = 30 tiles through the
+    unpacked key."""
+    row = spark.createDataFrame(
+        [(30, 5, 7, 1, [1, 2, 3, 4], None)],
+        "z int, x bigint, y bigint, feature_id bigint, geom array<int>, "
+        "off array<int>")
+    dim = spark.createDataFrame([(1, "point", None)],
+                                "feature_id bigint, kind string, "
+                                "props map<string,string>")
+    with pytest.raises(Exception, match="requires z <= 29"):
+        T.tile_feature_lists_dim(row, dim, pack_key=None).collect()
+
+    pts = features.filter("kind = 'point'")
+    got = {(r["z"], r["x"], r["y"], f["feature_id"])
+           for r in T.build_tile_features(pts, [30]).collect()
+           for f in r["features"]}
+    want = {(r["z"], r["x"], r["y"], r["feature_id"])
+            for r in T.clip_points_relational(pts, [30]).collect()}
+    assert len(want) == pts.count() > 20
+    assert {k[0] for k in got} == {30}
+    assert got == want
 
 
 def test_packed_tile_key_pack_roundtrip(spark):
@@ -112,28 +127,3 @@ def test_packed_tile_key_pack_roundtrip(spark):
                    F.expr(f"shiftright(_txy, 29) & {T._TXY_MASK}").alias("x"),
                    F.expr(f"_txy & {T._TXY_MASK}").alias("y")))
     assert sorted(map(tuple, out.collect())) == sorted(rows)
-
-
-def test_arrow_agg_tail_equals_jvm(spark, features, monkeypatch):
-    """r7 Arrow aggregation tail (TILEGEN_AGG_ARROW, default off — measured
-    slower fused, kept as a profiling/reference variant): unpack + nest +
-    per-tile collect + feature_id sort in one vectorized Arrow pass must be
-    bit-identical to the JVM finish() path."""
-
-    def canon(df):
-        out = {}
-        for r in df.collect():
-            out[(r["z"], r["x"], r["y"])] = tuple(
-                (f["feature_id"], f["kind"],
-                 tuple(tuple(p) for p in f["geom"]),
-                 tuple(sorted((f["props"] or {}).items())))
-                for f in r["features"])
-        return out
-
-    monkeypatch.setenv("TILEGEN_GEOM_PACK", "1")   # the tail reads packed
-    monkeypatch.setenv("TILEGEN_AGG_ARROW", "0")
-    a = canon(T.build_tile_features(features, [3, 6], salt=2))
-    monkeypatch.setenv("TILEGEN_AGG_ARROW", "1")
-    b = canon(T.build_tile_features(features, [3, 6], salt=2))
-    assert len(a) > 20
-    assert a == b, "arrow agg tail diverged from the JVM tail"

@@ -509,11 +509,13 @@ def test_ann_recall_floors(spark):
 
 
 def test_clip_shapes_fastpath_parity(spark, features):
-    """r3 vectorized single-tile fast path == the per-row reference loop
-    (TILEGEN_FASTPATH=0), row-for-row over the synthetic corpus at z0-12 —
-    donuts, multi-tile polygons, lines, quantize-degenerate rings included."""
-    import os
-    from tile_gen_spark.operators.tiles import clip_shapes_direct
+    """Production shape clip (clip_shapes_direct: Arrow single-tile and
+    multi-tile passes + relational nesting) == the per-row reference loop
+    (clip_shapes_reference), row-for-row over the synthetic corpus at z0-12
+    — donuts, multi-tile polygons, lines, quantize-degenerate rings
+    included."""
+    from tile_gen_spark.operators.tiles import (clip_shapes_direct,
+                                                clip_shapes_reference)
 
     shp = features.filter(F.col("kind") != "point").cache()
     zooms = list(range(0, 13))
@@ -527,17 +529,8 @@ def test_clip_shapes_fastpath_parity(spark, features):
                      geom, props))
         return out
 
-    old_env = os.environ.get("TILEGEN_FASTPATH")
-    try:
-        os.environ["TILEGEN_FASTPATH"] = "0"
-        ref = canon(clip_shapes_direct(shp, zooms))
-        os.environ["TILEGEN_FASTPATH"] = "1"
-        new = canon(clip_shapes_direct(shp, zooms))
-    finally:
-        if old_env is None:
-            os.environ.pop("TILEGEN_FASTPATH", None)
-        else:
-            os.environ["TILEGEN_FASTPATH"] = old_env
+    ref = canon(clip_shapes_reference(shp, zooms))
+    new = canon(clip_shapes_direct(shp, zooms))
     assert len(ref) > 1000
     missing = ref - new
     extra = new - ref
@@ -567,11 +560,15 @@ def test_run_tile_job_mvt_sink(spark, features, tmp_path):
 
 
 def test_flat_pipeline_equals_reference_nested(spark, features):
-    """r4 flat transport end-to-end: build_tile_features (flat clip -> flat
-    salted agg -> post-agg enrich) == the fully nested per-row reference
-    pipeline (TILEGEN_FASTPATH=0), tile-for-tile and feature-for-feature —
+    """r4 flat transport end-to-end: build_tile_features (flat clip -> one
+    agg exchange -> dim join + nest + collect) == the fully nested per-row
+    reference pipeline (tile_feature_lists over clip_points_relational ∪
+    clip_shapes_reference), tile-for-tile and feature-for-feature —
     geometry ints, ring nesting, kind and props all identical."""
-    from tile_gen_spark.operators.tiles import build_tile_features
+    from tile_gen_spark.operators.tiles import (build_tile_features,
+                                                clip_points_relational,
+                                                clip_shapes_reference,
+                                                tile_feature_lists)
 
     def canon(df):
         out = {}
@@ -585,23 +582,13 @@ def test_flat_pipeline_equals_reference_nested(spark, features):
         return out
 
     zooms = [3, 7]
-    old_env = os.environ.get("TILEGEN_FASTPATH")
-    try:
-        os.environ["TILEGEN_FASTPATH"] = "0"
-        ref = canon(build_tile_features(features, zooms, salt=0))
-        os.environ["TILEGEN_FASTPATH"] = "1"
-        new_dim = canon(build_tile_features(features, zooms, salt=2,
-                                            props_mode="dim"))
-        new_inl = canon(build_tile_features(features, zooms, salt=2,
-                                            props_mode="inline"))
-    finally:
-        if old_env is None:
-            os.environ.pop("TILEGEN_FASTPATH", None)
-        else:
-            os.environ["TILEGEN_FASTPATH"] = old_env
+    nested = clip_points_relational(
+        features.filter(F.col("kind") == "point"), zooms).unionByName(
+        clip_shapes_reference(features.filter(F.col("kind") != "point"), zooms))
+    ref = canon(tile_feature_lists(nested, salt=0))
+    new = canon(build_tile_features(features, zooms, salt=2))
     assert len(ref) > 50
-    assert new_dim == ref
-    assert new_inl == ref
+    assert new == ref
 
 
 def test_ann_recall_clustered_regime(spark):
@@ -672,37 +659,6 @@ def test_dim_agg_shuffle_join_fallback(spark, features):
 
     a = canon(tile_feature_lists_dim(flat, dim, salt=2, broadcast_dim=True))
     b = canon(tile_feature_lists_dim(flat, dim, salt=2, broadcast_dim=False))
-    assert len(a) > 20
-    assert a == b
-
-
-def test_enrich_shuffle_join_fallback(spark, features):
-    """enrich_tile_features(broadcast_dim=False) — the huge-dim fallback of
-    the post-agg rejoin (props_mode="dim2" reachable path, VERDICT r4
-    missing #3) — must produce exactly the broadcast path's tiles."""
-    from tile_gen_spark.operators.tiles import (clip_points_flat,
-                                                clip_shapes_flat,
-                                                enrich_tile_features,
-                                                tile_feature_lists_flat)
-
-    zooms = [4]
-    flat = clip_points_flat(features.filter("kind='point'"), zooms).unionByName(
-        clip_shapes_flat(features.filter("kind!='point'"), zooms))
-    dim = features.select("feature_id", "kind", "props")
-    tiled = tile_feature_lists_flat(flat, salt=2)
-
-    def canon(df):
-        out = {}
-        for r in df.collect():
-            out[(r["z"], r["x"], r["y"])] = tuple(
-                (f["feature_id"], f["kind"],
-                 tuple(tuple(p) for p in f["geom"]),
-                 tuple(sorted((f["props"] or {}).items())))
-                for f in r["features"])
-        return out
-
-    a = canon(enrich_tile_features(tiled, dim, broadcast_dim=True))
-    b = canon(enrich_tile_features(tiled, dim, broadcast_dim=False))
     assert len(a) > 20
     assert a == b
 

@@ -131,34 +131,8 @@ def test_zoom_filter_pushdown(spark, tmp_path):
     assert re.search(r"PartitionFilters: \[.*\(z#\d+ >= 3\).*\(z#\d+ <= 5\)", plan)
 
 
-def test_flat_agg_enrich_is_exchange_free(spark):
-    """r4 flat transport: the post-agg enrich (explode -> broadcast dim join
-    -> nested-geom rebuild -> re-agg) must add ZERO shuffle exchanges — the
-    flat agg's hash(z,x,y) partitioning carries through Generate and the
-    broadcast join, so the whole plan has exactly the two salted-agg
-    exchanges plus one BroadcastExchange for the kind/props dim."""
-    from tile_gen_spark.operators.tiles import (enrich_tile_features,
-                                                tile_feature_lists_flat)
-    clipped = spark.range(200).select(
-        (F.col("id") % 2).cast("int").alias("z"), (F.col("id") % 4).alias("x"),
-        (F.col("id") % 3).alias("y"), F.col("id").alias("feature_id"),
-        F.array(F.lit(1), F.lit(2)).cast("array<int>").alias("geom"),
-        F.array(F.lit(0), F.lit(2)).cast("array<int>").alias("off"))
-    dim = spark.range(200).select(
-        F.col("id").alias("feature_id"), F.lit("point").alias("kind"),
-        F.create_map(F.lit("k"), F.lit("v")).alias("props"))
-    out = enrich_tile_features(tile_feature_lists_flat(clipped, salt=4), dim)
-    plan = _plan(out)
-    # formatted mode lists each node once in the detail section as "(n) Name"
-    n_shuffle = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    assert n_shuffle == 2, plan
-    assert "BroadcastExchange" in plan
-    # nested-geom rebuild is pure Catalyst: no Python nodes anywhere
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
-
-
 def test_dim_agg_props_skip_all_exchanges(spark):
-    """Default props_mode="dim" plan shape (tile_feature_lists_dim): exactly
+    """build_tile_features' agg plan shape (tile_feature_lists_dim): exactly
     ONE exchange (r7 — the salted two-phase's second exchange + explode was
     measured pure overhead in this variant since every post-exchange stage
     runs per row in one task either way), lean rows (no kind/props columns

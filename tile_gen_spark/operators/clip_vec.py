@@ -27,20 +27,8 @@ loop's rows exactly (pinned by the fastpath parity pytest).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from ..functions import kernels as K
-
-CLIP_COLUMNS = ("z", "x", "y", "feature_id", "geom", "off")
-
-
-def _empty_frame() -> pd.DataFrame:
-    return pd.DataFrame({
-        "z": pd.Series([], dtype="int32"), "x": pd.Series([], dtype="int64"),
-        "y": pd.Series([], dtype="int64"),
-        "feature_id": pd.Series([], dtype="int64"),
-        "geom": pd.Series([], dtype=object),
-        "off": pd.Series([], dtype=object)})
 
 
 def _ragged_arange(lens: np.ndarray) -> np.ndarray:
@@ -132,9 +120,10 @@ def finalize_instances(qx: np.ndarray, qy: np.ndarray, L: np.ndarray,
 
 def assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
                     unit_z, unit_x, unit_y, unit_fid, pack: bool = False):
-    """assemble_rows' array-native core (r7): one output row per unit with
-    >= 1 kept instance, as FLAT COLUMNS + LIST BUFFERS instead of Python
-    lists — ``(z, x, y, fid, geom_vals, geom_offsets, off_vals,
+    """One output row per unit with >= 1 kept instance (geom pieces in
+    instance order; kept instances of a unit are contiguous because
+    inst_unit is non-decreasing in every caller), as FLAT COLUMNS + LIST
+    BUFFERS — ``(z, x, y, fid, geom_vals, geom_offsets, off_vals,
     off_offsets, off_single)`` where row i's geom is
     ``geom_vals[geom_offsets[i]:geom_offsets[i+1]]`` and its off list is
     ``off_vals[off_offsets[i]:off_offsets[i+1]]`` (``off_single[i]`` marks
@@ -189,64 +178,6 @@ def assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
             np.asarray(unit_y)[u_ids].astype(np.int64),
             np.asarray(unit_fid)[u_ids].astype(np.int64),
             geom_vals, geom_offsets, off_vals, off_offsets, off_single)
-
-
-def assemble_rows(rows: dict[str, list], qx3, qy3, S3, L3, inst_keep, flip,
-                  inst_unit, unit_z, unit_x, unit_y, unit_fid,
-                  pack: bool = False) -> None:
-    """Append one output row per unit with >= 1 kept instance (geom pieces
-    in instance order) into the `rows` dict-of-lists.
-
-    FLAT transport (r4): each row carries one concatenated int list `geom`
-    plus prefix offsets `off` ([0, l1, l1+l2, ...]) instead of the nested
-    array<array<int>> — and no kind/props. The per-(tile, zoom) row payload
-    through the two agg exchanges was ~2x what it needed to be (VERDICT r3
-    "What's wrong #1"); kind/props rejoin once per FEATURE post-agg and the
-    nested view is rebuilt relationally (tiles.nest_geom).
-
-    r7: vectorized — one gather with per-instance optional reversal over all
-    kept instances, np.split at per-unit boundaries (kept instances of a
-    unit are contiguous: inst_unit is non-decreasing by construction in
-    every caller), so per-row Python shrinks from slice/flip/ravel/tolist
-    per instance (~6.6 µs/output row, cProfile) to one split+tolist.
-    Output rows and values are byte-identical to the loop form."""
-    kept = np.nonzero(inst_keep)[0]
-    if kept.size == 0:
-        return
-    if pack:
-        # r5 packed transport: one (qx<<16|qy) int per vertex
-        out = (qx3.astype(np.int32) << np.int32(16)) | qy3.astype(np.int32)
-        width = 1
-    else:
-        out = np.empty((qx3.size, 2), dtype=np.int32)
-        out[:, 0] = qx3
-        out[:, 1] = qy3
-        width = 2
-    Lk = L3[kept].astype(np.int64)
-    fk = flip[kept]
-    start = np.where(fk, S3[kept] + Lk - 1, S3[kept])
-    step = np.where(fk, np.int64(-1), np.int64(1))
-    vidx = np.repeat(start, Lk) + _ragged_arange(Lk) * np.repeat(step, Lk)
-    vals = out[vidx].ravel()
-    units = inst_unit[kept]
-    ub = np.nonzero(np.diff(units))[0] + 1
-    u_starts = np.concatenate([[0], ub]).astype(np.int64)
-    u_end = np.concatenate([ub, [kept.size]]).astype(np.int64)
-    u_ids = units[u_starts]
-    ints_per_inst = Lk * width
-    csum = np.cumsum(ints_per_inst)
-    row_ints = np.add.reduceat(ints_per_inst, u_starts)
-    splits = np.cumsum(row_ints)[:-1]
-    rows["z"].extend(np.asarray(unit_z)[u_ids].tolist())
-    rows["x"].extend(np.asarray(unit_x)[u_ids].tolist())
-    rows["y"].extend(np.asarray(unit_y)[u_ids].tolist())
-    rows["feature_id"].extend(np.asarray(unit_fid)[u_ids].tolist())
-    rows["geom"].extend(a.tolist() for a in np.split(vals, splits))
-    pre = np.concatenate([[0], csum[:-1]])
-    rel = csum - np.repeat(pre[u_starts], u_end - u_starts)
-    off_all = rel.tolist()
-    rows["off"].extend([0] + off_all[s:e]
-                       for s, e in zip(u_starts.tolist(), u_end.tolist()))
 
 
 def _sh_pass(vx: np.ndarray, vy: np.ndarray, L: np.ndarray,
@@ -480,8 +411,13 @@ def _covering_mask(n_rows, n_unit, unit_row, unit_base, ux, uy, west, south,
 def _row_weights_arrays(zs: np.ndarray, nv: np.ndarray, r0_start: np.ndarray,
                         r0_len: np.ndarray,
                         verts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """_row_weights core over flat structures: ring-0 slices (vertex start +
-    length into the global ``verts``) and per-row total vertex counts."""
+    """Cheap per-row cost estimate for chunking: candidate-grid tile count x
+    total ring vertices (the instance-array footprint the clip passes
+    allocate). Uses ring-0's vertex-tile bbox only — an upper-bound proxy,
+    not the exact covering. Inputs are ring-0 slices (vertex start + length
+    into the global ``verts``) and per-row total vertex counts; returns
+    (weight, grid_cells) so slow_batch_arrow can route bbox-sparse rows
+    (grid over TILEGEN_GRID_CAP) to _sparse_one_row_parts."""
     idx = _gather(r0_start, r0_len)
     lon = np.nan_to_num(verts[idx, 0], nan=0.0, posinf=180.0, neginf=-180.0)
     lat = np.clip(np.nan_to_num(verts[idx, 1], nan=0.0, posinf=K.MAX_LAT,
@@ -497,30 +433,6 @@ def _row_weights_arrays(zs: np.ndarray, nv: np.ndarray, r0_start: np.ndarray,
             * (np.maximum.reduceat(yt, S) - np.minimum.reduceat(yt, S) + 1.0)
             ).astype(np.int64)
     return np.maximum(grid * nv, 1), grid
-
-
-def _row_weights(b: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Cheap per-row cost estimate for chunking: candidate-grid tile count x
-    total ring vertices (the instance-array footprint the clip passes
-    allocate). Uses ring-0's vertex-tile bbox only — an upper-bound proxy, not
-    the exact covering (which is what the clip itself computes). Returns
-    (weight, grid_cells) so slow_batch can route bbox-sparse rows (grid over
-    TILEGEN_GRID_CAP) to the sparse core."""
-    # vectorized over the whole batch — the per-row loop (scalar
-    # nan_to_num + a point_to_tile call per row) cost ~165 µs/row, more
-    # than the chunking it guards saves (cProfile: ~4 of the slow stage's
-    # 6.4 s wall went to this estimator). One concatenated ring-0 vertex
-    # array + segment min/max via reduceat computes identical weights.
-    n = len(b)
-    zs = b["_z"].to_numpy(np.int64)
-    coords_list = b["coords"].tolist()
-    nv = np.fromiter((sum(len(c) for c in cs) // 2 for cs in coords_list),
-                     np.int64, n)
-    r0 = [np.asarray(cs[0], np.float64) for cs in coords_list]
-    L = np.fromiter((a.size // 2 for a in r0), np.int64, n)
-    allv = np.concatenate(r0).reshape(-1, 2)
-    S = np.cumsum(L) - L
-    return _row_weights_arrays(zs, nv, S, L, allv)
 
 
 def slow_cap() -> int:
@@ -560,41 +472,6 @@ def chunk_plan(w: np.ndarray, alone: np.ndarray,
     return plan
 
 
-def slow_batch(b: pd.DataFrame, extent: int,
-               cap: int | None = None, pack: bool = False,
-               gcap: int | None = None) -> pd.DataFrame:
-    """One Arrow batch of multi-tile (feature, _z) rows → clipped tile rows.
-
-    Memory-bounded two ways:
-     - a skewed batch of large low-zoom polygons (~10^3 covering tiles) is
-       split into sub-batches whose estimated instance-vertex total stays
-       under ``cap`` (slow_cap()), since the core materializes per-(tile,
-       ring) instance arrays for the whole batch at once;
-     - a bbox-sparse row (candidate grid over TILEGEN_GRID_CAP cells — e.g. a
-       continent-spanning diagonal line at z12, whose full bbox grid would be
-       ~16.7M cells for O(10^3) actually-covered tiles) routes to
-       _sparse_core, which enumerates the EXACT covering via the O(covered)
-       kernels and clips only those units, in tile chunks sized to ``cap``.
-    Contiguous splits (chunk_plan) preserve row order => output order.
-    """
-    if len(b) == 0:
-        return _empty_frame()
-    if cap is None:
-        cap = slow_cap()
-    w, g = _row_weights(b)
-    if gcap is None:
-        # standalone/test use only — plan-builders pass the driver-resolved
-        # value (ADVICE r5: executor env != driver env on a real cluster)
-        gcap = K.grid_cap()
-    parts = [_sparse_core(b.iloc[a:e], extent, cap, pack, gcap) if alone
-             else _slow_core(b.iloc[a:e], extent, pack)
-             for a, e, alone in chunk_plan(w, g > gcap, cap)]
-    parts = [p for p in parts if len(p)]
-    if len(parts) == 1:
-        return parts[0]
-    return pd.concat(parts, ignore_index=True) if parts else _empty_frame()
-
-
 def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
                           ring_len: np.ndarray, ring_start: np.ndarray,
                           verts: np.ndarray, extent: int, cap: int,
@@ -632,72 +509,13 @@ def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
     return parts
 
 
-def _sparse_core(b: pd.DataFrame, extent: int, cap: int,
-                 pack: bool = False, gcap: int | None = None) -> pd.DataFrame:
-    """Pandas front-end of _sparse_one_row_parts (tests / slow_batch)."""
-    parts: list[tuple] = []
-    for i in range(len(b)):
-        row = b.iloc[i:i + 1]
-        is_line_row = row["kind"].to_numpy() == "line"
-        z = int(row["_z"].iloc[0])
-        (ring_len, verts, ring_start, _rrc, _rfr) = _flatten_rings(
-            row, is_line_row)
-        parts.extend(_sparse_one_row_parts(
-            is_line_row, z, int(row["feature_id"].iloc[0]), ring_len,
-            ring_start, verts, extent, cap, pack, gcap))
-    return _parts_to_pandas(parts, pack)
-
-
-def _flatten_rings(b: pd.DataFrame, is_line_row: np.ndarray):
-    """Flatten rings (lines: ring 0 only; polys: strip exact closing).
-    Returns (ring_len, verts, ring_start, row_ring_count, row_first_ring)."""
-    n_rows = len(b)
-    ring_list: list[np.ndarray] = []
-    ring_len_l: list[int] = []
-    row_ring_count = np.empty(n_rows, np.int64)
-    for i, coords in enumerate(b["coords"]):
-        if is_line_row[i]:
-            row_ring_count[i] = 1
-            a = np.asarray(coords[0], np.float64)
-            ring_list.append(a)
-            ring_len_l.append(a.size // 2)
-        else:
-            row_ring_count[i] = len(coords)
-            for c in coords:
-                a = np.asarray(c, np.float64)
-                if a.size >= 4 and a[0] == a[-2] and a[1] == a[-1]:
-                    a = a[:-2]       # clip_ring_bbox_fast closing-strip
-                ring_list.append(a)
-                ring_len_l.append(a.size // 2)
-    ring_len = np.asarray(ring_len_l, np.int64)
-    verts = (np.concatenate(ring_list) if ring_list else np.zeros(0)).reshape(-1, 2)
-    ring_start = np.cumsum(ring_len) - ring_len
-    row_first_ring = np.concatenate([[0], np.cumsum(row_ring_count)])
-    return ring_len, verts, ring_start, row_ring_count, row_first_ring
-
-
-def _slow_core(b: pd.DataFrame, extent: int, pack: bool = False) -> pd.DataFrame:
-    """Pandas front-end of _slow_core_parts (tests / slow_batch)."""
-    n_rows = len(b)
-    if n_rows == 0:
-        return _empty_frame()
-    kinds = b["kind"].to_numpy()
-    zs = b["_z"].to_numpy(np.int64)
-    fids = b["feature_id"].to_numpy()
-    is_line_row = kinds == "line"
-    (ring_len, verts, ring_start, row_ring_count,
-     row_first_ring) = _flatten_rings(b, is_line_row)
-    return _parts_to_pandas(
-        _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
-                         row_ring_count, row_first_ring, extent, pack), pack)
-
-
 def _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
                      row_ring_count, row_first_ring, extent: int,
                      pack: bool = False) -> list[tuple]:
-    """Mirrors the reference per-row loop (TILEGEN_FASTPATH=0 in
-    tiles.clip_shapes_direct) output-for-output (modulo the r4 flat geom/off
-    transport) over pre-flattened ring structures; see module docstring.
+    """Mirrors the reference per-row loop (tiles.clip_shapes_reference)
+    output-for-output (modulo the r4 flat geom/off transport) over
+    pre-flattened ring structures; see module docstring. Called by
+    slow_batch_arrow for each dense run of rows.
     """
     if is_line_row.size == 0:
         return []
@@ -769,9 +587,9 @@ def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
                       pack: bool = False) -> list[tuple]:
     """Clip + quantize + finalize + assemble over an explicit unit set (one
     unit = one (tile, row) pair), returning assemble_arrays part tuples
-    (polygons part, then lines part). Shared by _slow_core (dense grid
-    units, covering-masked) and _sparse_core (exact covering units, cov
-    all-true)."""
+    (polygons part, then lines part). Shared by _slow_core_parts (dense
+    grid units, covering-masked) and _sparse_one_row_parts (exact covering
+    units, cov all-true)."""
     n_unit = unit_row.size
     r0 = row_first_ring[:-1]
     parts: list[tuple] = []
@@ -825,34 +643,6 @@ def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
     return parts
 
 
-def _parts_to_pandas(parts: list[tuple], pack: bool) -> pd.DataFrame:
-    """assemble_arrays part tuples → the historical pandas output (geom/off
-    as Python lists, packed single-piece off as None)."""
-    rows: dict[str, list] = {k: [] for k in CLIP_COLUMNS}
-    for (z, x, y, fid, gvals, goff, ovals, ooff, osingle) in parts:
-        if z.size == 0:
-            continue
-        rows["z"].extend(z.tolist())
-        rows["x"].extend(x.tolist())
-        rows["y"].extend(y.tolist())
-        rows["feature_id"].extend(fid.tolist())
-        rows["geom"].extend(a.tolist() for a in np.split(gvals, goff[1:-1]))
-        # r7b: NULL off for single-piece rows in BOTH transports (was
-        # packed-only) — ~90% of rows drop the off array from the exchange
-        # and nest via a single array(geom) wrap
-        offs = [a.tolist() for a in np.split(ovals, ooff[1:-1])]
-        offs = [None if s else o for o, s in zip(offs, osingle)]
-        rows["off"].extend(offs)
-    return pd.DataFrame({
-        "z": pd.Series(rows["z"], dtype="int32"),
-        "x": pd.Series(rows["x"], dtype="int64"),
-        "y": pd.Series(rows["y"], dtype="int64"),
-        "feature_id": pd.Series(rows["feature_id"], dtype="int64"),
-        "geom": pd.Series(rows["geom"], dtype=object),
-        "off": pd.Series(rows["off"], dtype=object),
-    })
-
-
 def parts_to_batches(parts: list[tuple], pack: bool):
     """assemble_arrays part tuples → pyarrow RecordBatches (CLIP_FLAT_SCHEMA):
     the list columns are built straight from (values, offsets) buffers —
@@ -876,37 +666,27 @@ def parts_to_batches(parts: list[tuple], pack: bool):
     return out
 
 
-def _clip_units(is_line_row, row_ring_count, row_first_ring, ring_len,
-                ring_start, verts, unit_row, unit_z, ux, uy, unit_fid,
-                west, south, east, north, cov, extent,
-                pack: bool = False) -> pd.DataFrame:
-    """Pandas front-end of _clip_units_parts (tests / non-Arrow callers)."""
-    return _parts_to_pandas(
-        _clip_units_parts(is_line_row, row_ring_count, row_first_ring,
-                          ring_len, ring_start, verts, unit_row, unit_z, ux,
-                          uy, unit_fid, west, south, east, north, cov,
-                          extent, pack), pack)
-
-
 # ---------------------------------------------------------------------------
-# r7 Arrow-native entry (guide §4.2): mapInArrow front-end — ring structures
-# decoded straight from the ListArray offset/value buffers (no per-row
-# Python lists on input) and output RecordBatches built from the
-# assemble_arrays buffers (no np.split/tolist per row on output). The pandas
-# front-ends above remain the reference/test surface; parity is pinned by
-# the fastpath-vs-reference pytest and a direct arrow-vs-pandas test.
+# Arrow-native entry points (guide §4.2): slow_batch_arrow here and
+# tiles._fast_batch_arrow are the mapInArrow front-ends of the shape clip —
+# ring structures decoded straight from the ListArray offset/value buffers
+# (no per-row Python lists on input) and output RecordBatches built from the
+# assemble_arrays buffers (no np.split/tolist per row on output). Their
+# reference is the per-row loop behind tiles.clip_shapes_reference; parity
+# is pinned by the fastpath parity pytest and the Spark-free differential
+# test (tests/test_clip_differential.py).
 # ---------------------------------------------------------------------------
 
 def decode_clip_rings(rb, strip: bool = True):
     """RecordBatch with (kind, coords) → flat ring structures, straight from
-    the ListArray offset/value buffers. ``strip=True`` matches
-    _flatten_rings exactly (lines: ring 0 only; polys: strip the exact
-    closing vertex — representable as ring_len−1 with the same start, so no
-    bytes are copied); ``strip=False`` matches _fast_batch's flatten (all
-    rings, untouched). Returns (is_line, ring_len, ring_start, verts,
-    row_ring_count, row_first_ring, raw) where ``raw`` =
-    (nv_raw, r0_start, r0_len) feeds _row_weights_arrays (which uses the
-    UNSTRIPPED ring 0 and all-raw-ring vertex counts, like _row_weights)."""
+    the ListArray offset/value buffers. ``strip=True`` is the multi-tile
+    clip's view (lines: ring 0 only; polys: strip the exact closing vertex,
+    as kernels.clip_ring_bbox_fast does — representable as ring_len−1 with
+    the same start, so no bytes are copied); ``strip=False`` is the
+    single-tile clip's view (all rings, untouched). Returns (is_line,
+    ring_len, ring_start, verts, row_ring_count, row_first_ring, raw) where
+    ``raw`` = (nv_raw, r0_start, r0_len) feeds _row_weights_arrays (which
+    uses the UNSTRIPPED ring 0 and all-raw-ring vertex counts)."""
     import pyarrow.compute as pc
     cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
     is_line = np.asarray(pc.equal(cols["kind"], "line"))
@@ -956,10 +736,25 @@ def decode_clip_rings(rb, strip: bool = True):
 
 def slow_batch_arrow(rb, extent: int, cap: int | None = None,
                      pack: bool = False, gcap: int | None = None):
-    """Arrow twin of slow_batch: one input RecordBatch of multi-tile
-    (feature, _z) rows → list of output RecordBatches (CLIP_FLAT_SCHEMA).
-    Same chunk_plan routing, same part order, zero per-row Python end to
-    end."""
+    """One input RecordBatch of multi-tile (feature, _z) rows → list of
+    output RecordBatches (CLIP_FLAT_SCHEMA), zero per-row Python end to end.
+
+    Memory-bounded two ways:
+     - a skewed batch of large low-zoom polygons (~10^3 covering tiles) is
+       split into sub-batches whose estimated instance-vertex total stays
+       under ``cap`` (slow_cap()), since the core materializes per-(tile,
+       ring) instance arrays for the whole batch at once;
+     - a bbox-sparse row (candidate grid over ``gcap`` = TILEGEN_GRID_CAP
+       cells — e.g. a continent-spanning diagonal line at z12, whose full
+       bbox grid would be ~16.7M cells for O(10^3) actually-covered tiles)
+       routes to _sparse_one_row_parts, which enumerates the EXACT covering
+       via the O(covered) kernels and clips only those units, in tile
+       chunks sized to ``cap``.
+    Contiguous splits (chunk_plan) preserve row order => output order.
+    ``gcap`` None reads K.grid_cap() here (standalone/test use only —
+    plan-builders pass the driver-resolved value, since executor env can
+    differ from driver env on a real cluster).
+    """
     if rb.num_rows == 0:
         return []
     if cap is None:
@@ -984,23 +779,4 @@ def slow_batch_arrow(rb, extent: int, cap: int | None = None,
                 is_line[a:b_], zs[a:b_], fids[a:b_], ring_len[rs:re], verts,
                 ring_start[rs:re], row_ring_count[a:b_],
                 row_first_ring[a:b_ + 1] - rs, extent, pack))
-    return parts_to_batches(parts, pack)
-    start = 0
-    acc = 0
-    for i in range(n_rows):
-        if g[i] > gcap:
-            run_range(start, i)
-            rs, re = int(row_first_ring[i]), int(row_first_ring[i + 1])
-            parts.extend(_sparse_one_row_parts(
-                is_line[i:i + 1], int(zs[i]), int(fids[i]), ring_len[rs:re],
-                ring_start[rs:re], verts, extent, cap, pack, gcap))
-            start = i + 1
-            acc = 0
-            continue
-        if acc and acc + w[i] > cap:
-            run_range(start, i)
-            start = i
-            acc = 0
-        acc += int(w[i])
-    run_range(start, n_rows)
     return parts_to_batches(parts, pack)

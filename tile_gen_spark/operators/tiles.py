@@ -10,9 +10,10 @@ Scale design:
  - POINT assignment is pure relational Spark SQL (floor/trig from
    plans/sqlgen.py — no Python crossing at all), so Catalyst pushes filters
    and prunes columns around it, and it whole-stage-codegens.
- - Polygon/line covering + clipping are Arrow-batched ``mapInPandas`` over
-   numpy kernels — the only Python crossings, placed AFTER relational filters
-   (UDF-barrier management, SURVEY.md §4.2).
+ - Polygon/line covering + clipping are Arrow-native ``mapInArrow`` passes
+   over ragged numpy (single-tile zooms: _fast_batch_arrow; multi-tile
+   zooms: clip_vec.slow_batch_arrow) — the only Python crossings, placed
+   AFTER relational filters (UDF-barrier management, SURVEY.md §4.2).
  - The per-tile ``collect_list`` agg is non-algebraic, so hot tiles are salted
    two-phase when requested (A2/J9): agg by (z,x,y,salt) then flatten — AQE
    alone cannot fix aggregation skew.
@@ -38,7 +39,7 @@ CLIP_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, kind string, "
 # that crosses Arrow and both agg exchanges carries a single flat int array
 # plus ring prefix offsets — no nested array-of-arrays headers, no kind, and
 # crucially no per-row copy of the feature's props map. kind/props ship ONCE
-# per feature (dim join post-agg, enrich_tile_features); the nested
+# per feature (dim join after the agg exchange); the nested
 # array<array<int>> public view is rebuilt relationally (nest_geom).
 CLIP_FLAT_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, "
                     "geom array<int>, off array<int>")
@@ -227,86 +228,6 @@ def assign_features(features: DataFrame, zooms: list[int]) -> DataFrame:
     return assign_points(pts, zooms).unionByName(assign_shapes(shp, zooms))
 
 
-def clip_features(features: DataFrame, assignments: DataFrame,
-                  extent: int = K.MVT_EXTENT) -> DataFrame:
-    """G9+G11: join features to their tiles, clip to tile bbox, quantize.
-
-    Scale split:
-     - POINTS (the bulk of assignments) never touch Python: quantization is
-       the pure-SQL expression (tile_fraction − tile_index)·extent
-       (plans/sqlgen.quantize_*), whole-stage-codegen'd.
-     - LINES/POLYGONS go through one Arrow batch pass; tile bounds and
-       mercator constants are computed vectorized per batch, the per-feature
-       loop only runs the O(vertices) clip kernels.
-    The join is a plain equi-join on feature_id (AQE picks broadcast/SMJ/SHJ
-    and splits skewed tiles).
-    """
-    joined = assignments.join(
-        features.select("feature_id", "kind", "coords", "props"), "feature_id")
-
-    pts = joined.filter(F.col("kind") == "point")
-    qx = S.quantize_x("coords[0][0]", "CAST(z AS DOUBLE)", "CAST(x AS DOUBLE)", extent)
-    qy = S.quantize_y("coords[0][1]", "CAST(z AS DOUBLE)", "CAST(y AS DOUBLE)", extent)
-    pts_out = pts.select(
-        "z", "x", "y", "feature_id", "kind",
-        F.array(F.array(F.expr(qx), F.expr(qy))).alias("geom"),
-        "props")
-
-    shp = joined.filter(F.col("kind") != "point")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            zs = b["z"].to_numpy(np.int64)
-            xs = b["x"].to_numpy(np.float64)
-            ys = b["y"].to_numpy(np.float64)
-            # vectorized tile bounds for the whole batch (lon/lat bbox)
-            nn = np.power(2.0, zs.astype(np.float64))
-            west = xs / nn * 360.0 - 180.0
-            east = (xs + 1.0) / nn * 360.0 - 180.0
-            north = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * ys / nn))))
-            south = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (ys + 1.0) / nn))))
-            rows: dict[str, list] = {k: [] for k in ("z", "x", "y", "feature_id", "kind", "geom", "props")}
-            for i, (fid, kind, coords, props) in enumerate(zip(
-                    b["feature_id"], b["kind"], b["coords"], b["props"])):
-                z, x, y = int(zs[i]), int(xs[i]), int(ys[i])
-                if kind == "line":
-                    ring = np.asarray(coords[0], dtype=np.float64)
-                    pieces = K.clip_segments_bbox(ring, west[i], south[i], east[i], north[i])
-                    geom = []
-                    for p in pieces:
-                        gx, gy = K.quantize_to_tile(p[:, 0], p[:, 1], z, x, y, extent)
-                        gx, gy = K.dedupe_consecutive(gx, gy)
-                        if gx.size < 2:
-                            continue
-                        geom.append(np.column_stack([gx, gy]).ravel().astype(np.int32).tolist())
-                else:
-                    clipped = [K.clip_ring_bbox(r, west[i], south[i], east[i], north[i])
-                               for r in _coord_rings(coords)]
-                    geom = _quantize_polygon_rings(clipped, z, x, y, extent)
-                if not geom:
-                    continue
-                rows["z"].append(z)
-                rows["x"].append(x)
-                rows["y"].append(y)
-                rows["feature_id"].append(fid)
-                rows["kind"].append(kind)
-                rows["geom"].append(geom)
-                rows["props"].append(props)
-            yield pd.DataFrame({
-                "z": pd.Series(rows["z"], dtype="int32"),
-                "x": pd.Series(rows["x"], dtype="int64"),
-                "y": pd.Series(rows["y"], dtype="int64"),
-                "feature_id": pd.Series(rows["feature_id"], dtype="int64"),
-                "kind": pd.Series(rows["kind"], dtype="string"),
-                "geom": pd.Series(rows["geom"], dtype=object),
-                "props": pd.Series(rows["props"], dtype=object),
-            })
-
-    return pts_out.unionByName(shp.mapInPandas(fn, CLIP_SCHEMA))
-
-
 def clip_points_relational(points: DataFrame, zooms: list[int],
                            extent: int = K.MVT_EXTENT) -> DataFrame:
     """Fused assign+quantize for points — pure Spark SQL, no join, no Python.
@@ -332,69 +253,25 @@ def clip_points_relational(points: DataFrame, zooms: list[int],
                     F.array(F.array("t.qx", "t.qy")).alias("geom"), "props"))
 
 
-def _fast_batch(b: pd.DataFrame, extent: int, pack: bool = False) -> pd.DataFrame:
-    """Vectorized single-tile clip: every (feature, z) unit in this batch is
-    guaranteed (by the relational corner-tile split in clip_shapes_direct) to
-    fit in ONE tile at z, so the clip is the identity and the whole batch
-    reduces to quantize + dedupe + winding — computed with numpy over ONE
-    flat vertex array instead of per-row kernel calls (the r2 profile showed
-    ~0.38 ms/row of per-call overhead; this path amortizes it to ~µs/row).
-
-    Input columns: feature_id, kind, coords, _zs (array<int> of the
-    feature's single-tile zooms). Semantics identical to the per-row loop
-    (quantize_to_tile → dedupe_consecutive → closing-vertex strip →
-    degenerate-ring drop → MVT winding), verified by the parity pytest.
-    Output is the r4 FLAT transport (CLIP_FLAT_SCHEMA): one concatenated int
-    array + ring prefix offsets, no kind/props (those rejoin post-agg).
-    """
-    from .clip_vec import _parts_to_pandas
-    n_feat = len(b)
-    empty = pd.DataFrame({
-        "z": pd.Series([], dtype="int32"), "x": pd.Series([], dtype="int64"),
-        "y": pd.Series([], dtype="int64"),
-        "feature_id": pd.Series([], dtype="int64"),
-        "geom": pd.Series([], dtype=object),
-        "off": pd.Series([], dtype=object)})
-    if n_feat == 0:
-        return empty
-
-    # --- flatten: rings → one (V, 2) vertex array + offset tables ---------
-    ring_list: list[np.ndarray] = []
-    ring_len_l: list[int] = []
-    feat_ring_count = np.empty(n_feat, np.int64)
-    for i, coords in enumerate(b["coords"]):
-        feat_ring_count[i] = len(coords)
-        for c in coords:
-            a = np.asarray(c, dtype=np.float64)
-            ring_list.append(a)
-            ring_len_l.append(a.size // 2)
-    ring_len = np.asarray(ring_len_l, np.int64)
-    verts = np.concatenate(ring_list).reshape(-1, 2) if ring_list else np.zeros((0, 2))
-    ring_start = np.cumsum(ring_len) - ring_len
-
-    # --- units (feature × zoom) ---------------------------------------------
-    zs_list = [np.asarray(z, np.int64) for z in b["_zs"]]
-    m = np.asarray([z.size for z in zs_list], np.int64)
-    unit_feat = np.repeat(np.arange(n_feat), m)
-    if unit_feat.size == 0:
-        return empty
-    unit_z = np.concatenate(zs_list)
-    parts = _fast_core(
-        b["kind"].to_numpy() == "line", b["feature_id"].to_numpy(),
-        feat_ring_count, ring_len, ring_start, verts, unit_feat, unit_z,
-        extent, pack)
-    out = _parts_to_pandas(parts, pack)
-    return out if len(out) else empty
-
-
 def _fast_core(is_line: np.ndarray, fids: np.ndarray,
                feat_ring_count: np.ndarray, ring_len: np.ndarray,
                ring_start: np.ndarray, verts: np.ndarray,
                unit_feat: np.ndarray, unit_z: np.ndarray, extent: int,
                pack: bool) -> list:
-    """_fast_batch's array core (r7): flattened ring structures in,
-    assemble_arrays part tuples out — shared by the pandas front-end above
-    and the Arrow front-end (_fast_batch_arrow)."""
+    """Vectorized single-tile clip: every (feature, z) unit is guaranteed
+    (by the relational corner-tile split in clip_shapes_flat) to fit in ONE
+    tile at z, so the clip is the identity and the whole batch reduces to
+    quantize + dedupe + winding — computed with numpy over ONE flat vertex
+    array instead of per-row kernel calls (the r2 profile showed ~0.38
+    ms/row of per-call overhead; this path amortizes it to ~µs/row).
+
+    Flattened ring structures in, assemble_arrays part tuples out (the r4
+    FLAT transport: one concatenated int array + ring prefix offsets, no
+    kind/props — those rejoin post-agg). Semantics identical to the per-row
+    loop behind clip_shapes_reference (quantize_to_tile →
+    dedupe_consecutive → closing-vertex strip → degenerate-ring drop → MVT
+    winding), pinned by the fastpath parity pytest and the differential
+    test. Called by _fast_batch_arrow."""
     from .clip_vec import assemble_arrays
     n_unit = unit_feat.size
     feat_first_ring = np.concatenate([[0], np.cumsum(feat_ring_count)])
@@ -488,10 +365,12 @@ def _fast_core(is_line: np.ndarray, fids: np.ndarray,
 
 
 def _fast_batch_arrow(rb, extent: int, pack: bool = False):
-    """Arrow twin of _fast_batch (guide §4.2): ring structures straight from
-    the ListArray buffers (no per-row Python lists, no closing strip, lines
-    keep all rings — exactly the pandas flatten), output RecordBatches from
-    the assemble buffers."""
+    """Arrow entry point of the single-tile clip (guide §4.2): one input
+    RecordBatch (feature_id, kind, coords, _zs = array<int> of the
+    feature's single-tile zooms) → list of CLIP_FLAT_SCHEMA RecordBatches.
+    Ring structures come straight from the ListArray buffers (no per-row
+    Python lists, no closing strip, lines keep all rings); output batches
+    are built from the assemble buffers."""
     from .clip_vec import decode_clip_rings, parts_to_batches
     if rb.num_rows == 0:
         return []
@@ -518,6 +397,111 @@ def _n_clip_parts(df: DataFrame) -> int:
     return base * int(os.environ.get("TILEGEN_CLIP_OVERPART", "4"))
 
 
+def clip_reference_batch(b: pd.DataFrame, extent: int = K.MVT_EXTENT,
+                         gcap: int | None = None) -> pd.DataFrame:
+    """The per-row reference clip (the pre-r3 single path) over one pandas
+    batch of (feature_id, kind, coords, props, _z) rows → CLIP_SCHEMA rows,
+    nested geom built directly in Python: one covering-kernel call and one
+    scalar clip per (feature, zoom, tile). Production never runs it; it is
+    what the parity and differential tests compare the batched clip
+    against. ``gcap`` None reads K.grid_cap()."""
+    if gcap is None:
+        gcap = K.grid_cap()
+    rows: dict[str, list] = {k: [] for k in ("z", "x", "y", "feature_id", "kind", "geom", "props")}
+    for fid, kind, coords, props, z in zip(
+            b["feature_id"], b["kind"], b["coords"], b["props"], b["_z"]):
+        rings_ll = _coord_rings(coords)
+        ring = rings_ll[0].ravel()
+        z = int(z)
+        allv = rings_ll[0] if len(rings_ll) == 1 else np.concatenate(rings_ll)
+        vtx, vty = K.point_to_tile(allv[:, 0], allv[:, 1], z)
+        if vtx.min() == vtx.max() and vty.min() == vty.max():
+            # fast path (the majority at z ≤ ~9 for city-scale
+            # features): every vertex (all rings) in one tile ⇒
+            # covering = that tile and the clip is the identity
+            x, y = int(vtx[0]), int(vty[0])
+            if kind == "line":
+                gx, gy = K.quantize_to_tile(allv[:, 0], allv[:, 1], z, x, y, extent)
+                gx, gy = K.dedupe_consecutive(gx, gy)
+                if gx.size < 2:
+                    continue
+                geom = [np.column_stack([gx, gy]).ravel().astype(np.int32).tolist()]
+            else:
+                geom = _quantize_polygon_rings(rings_ll, z, x, y, extent)
+            if not geom:
+                continue
+            rows["z"].append(z)
+            rows["x"].append(x)
+            rows["y"].append(y)
+            rows["feature_id"].append(fid)
+            rows["kind"].append(kind)
+            rows["geom"].append(geom)
+            rows["props"].append(props)
+            continue
+        if kind == "polygon":
+            tiles = K.polygon_covering_tiles(ring, z, cap=gcap)
+        else:
+            tiles = _line_covering_tiles(ring, z, cap=gcap)
+        if tiles.shape[0] == 0:
+            continue
+        n_t = float(1 << z)
+        west = tiles[:, 0] / n_t * 360.0 - 180.0
+        east = (tiles[:, 0] + 1.0) / n_t * 360.0 - 180.0
+        north = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * tiles[:, 1] / n_t))))
+        south = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (tiles[:, 1] + 1.0) / n_t))))
+        rings_t = [[tuple(v) for v in r] for r in rings_ll]
+        for i in range(tiles.shape[0]):
+            x, y = int(tiles[i, 0]), int(tiles[i, 1])
+            if kind == "line":
+                pieces = K.clip_segments_bbox(ring, west[i], south[i], east[i], north[i])
+                geom = []
+                for p in pieces:
+                    gx, gy = K.quantize_to_tile(p[:, 0], p[:, 1], z, x, y, extent)
+                    gx, gy = K.dedupe_consecutive(gx, gy)
+                    if gx.size < 2:
+                        continue
+                    geom.append(np.column_stack([gx, gy]).ravel().astype(np.int32).tolist())
+            else:
+                clipped = []
+                for rt in rings_t:
+                    c = K.clip_ring_bbox_fast(rt, west[i], south[i], east[i], north[i])
+                    clipped.append(np.asarray(c, dtype=np.float64).reshape(-1, 2))
+                geom = _quantize_polygon_rings(clipped, z, x, y, extent)
+            if not geom:
+                continue
+            rows["z"].append(z)
+            rows["x"].append(x)
+            rows["y"].append(y)
+            rows["feature_id"].append(fid)
+            rows["kind"].append(kind)
+            rows["geom"].append(geom)
+            rows["props"].append(props)
+    return pd.DataFrame({
+        "z": pd.Series(rows["z"], dtype="int32"),
+        "x": pd.Series(rows["x"], dtype="int64"),
+        "y": pd.Series(rows["y"], dtype="int64"),
+        "feature_id": pd.Series(rows["feature_id"], dtype="int64"),
+        "kind": pd.Series(rows["kind"], dtype="string"),
+        "geom": pd.Series(rows["geom"], dtype=object),
+        "props": pd.Series(rows["props"], dtype=object),
+    })
+
+
+def clip_shapes_reference(shapes: DataFrame, zooms: list[int],
+                          extent: int = K.MVT_EXTENT) -> DataFrame:
+    """Nested per-row reference for clip_shapes_direct: every (feature,
+    zoom) row through clip_reference_batch in a ``mapInPandas`` (CLIP_SCHEMA
+    out), spread on (feature_id, _z) like the production multi-tile clip."""
+    gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
+    sel = (shapes.select("feature_id", "kind", "coords", "props")
+           .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
+           .repartition(_n_clip_parts(shapes), "feature_id", "_z"))
+    return sel.mapInPandas(
+        lambda batches: (clip_reference_batch(b, extent, gcap)
+                         for b in batches),
+        CLIP_SCHEMA)
+
+
 def clip_shapes_direct(shapes: DataFrame, zooms: list[int],
                        extent: int = K.MVT_EXTENT) -> DataFrame:
     """Fused covering+clip+quantize for lines/polygons — ONE Arrow crossing,
@@ -528,104 +512,14 @@ def clip_shapes_direct(shapes: DataFrame, zooms: list[int],
     Zoom split (r3): a relational corner-tile test (same G2 SQL text as the
     point path) partitions each feature's zooms into SINGLE-TILE zooms
     (bbox corners share a tile ⇒ the clip is the identity — the vectorized
-    _fast_batch handles thousands of rows per numpy call and ships coords
-    ONCE per feature instead of once per zoom) and MULTI-TILE zooms (the
-    per-(feature,z) covering+clip loop below). Monotonicity makes the split
-    exact: if the bbox fits one tile at z it fits at every z' < z."""
-    gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows: dict[str, list] = {k: [] for k in ("z", "x", "y", "feature_id", "kind", "geom", "props")}
-            for fid, kind, coords, props, z in zip(
-                    b["feature_id"], b["kind"], b["coords"], b["props"], b["_z"]):
-                rings_ll = _coord_rings(coords)
-                ring = rings_ll[0].ravel()
-                z = int(z)
-                allv = rings_ll[0] if len(rings_ll) == 1 else np.concatenate(rings_ll)
-                vtx, vty = K.point_to_tile(allv[:, 0], allv[:, 1], z)
-                if vtx.min() == vtx.max() and vty.min() == vty.max():
-                    # fast path (the majority at z ≤ ~9 for city-scale
-                    # features): every vertex (all rings) in one tile ⇒
-                    # covering = that tile and the clip is the identity
-                    x, y = int(vtx[0]), int(vty[0])
-                    if kind == "line":
-                        gx, gy = K.quantize_to_tile(allv[:, 0], allv[:, 1], z, x, y, extent)
-                        gx, gy = K.dedupe_consecutive(gx, gy)
-                        if gx.size < 2:
-                            continue
-                        geom = [np.column_stack([gx, gy]).ravel().astype(np.int32).tolist()]
-                    else:
-                        geom = _quantize_polygon_rings(rings_ll, z, x, y, extent)
-                    if not geom:
-                        continue
-                    rows["z"].append(z)
-                    rows["x"].append(x)
-                    rows["y"].append(y)
-                    rows["feature_id"].append(fid)
-                    rows["kind"].append(kind)
-                    rows["geom"].append(geom)
-                    rows["props"].append(props)
-                    continue
-                if kind == "polygon":
-                    tiles = K.polygon_covering_tiles(ring, z, cap=gcap)
-                else:
-                    tiles = _line_covering_tiles(ring, z, cap=gcap)
-                if tiles.shape[0] == 0:
-                    continue
-                n_t = float(1 << z)
-                west = tiles[:, 0] / n_t * 360.0 - 180.0
-                east = (tiles[:, 0] + 1.0) / n_t * 360.0 - 180.0
-                north = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * tiles[:, 1] / n_t))))
-                south = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (tiles[:, 1] + 1.0) / n_t))))
-                rings_t = [[tuple(v) for v in r] for r in rings_ll]
-                for i in range(tiles.shape[0]):
-                    x, y = int(tiles[i, 0]), int(tiles[i, 1])
-                    if kind == "line":
-                        pieces = K.clip_segments_bbox(ring, west[i], south[i], east[i], north[i])
-                        geom = []
-                        for p in pieces:
-                            gx, gy = K.quantize_to_tile(p[:, 0], p[:, 1], z, x, y, extent)
-                            gx, gy = K.dedupe_consecutive(gx, gy)
-                            if gx.size < 2:
-                                continue
-                            geom.append(np.column_stack([gx, gy]).ravel().astype(np.int32).tolist())
-                    else:
-                        clipped = []
-                        for rt in rings_t:
-                            c = K.clip_ring_bbox_fast(rt, west[i], south[i], east[i], north[i])
-                            clipped.append(np.asarray(c, dtype=np.float64).reshape(-1, 2))
-                        geom = _quantize_polygon_rings(clipped, z, x, y, extent)
-                    if not geom:
-                        continue
-                    rows["z"].append(z)
-                    rows["x"].append(x)
-                    rows["y"].append(y)
-                    rows["feature_id"].append(fid)
-                    rows["kind"].append(kind)
-                    rows["geom"].append(geom)
-                    rows["props"].append(props)
-            yield pd.DataFrame({
-                "z": pd.Series(rows["z"], dtype="int32"),
-                "x": pd.Series(rows["x"], dtype="int64"),
-                "y": pd.Series(rows["y"], dtype="int64"),
-                "feature_id": pd.Series(rows["feature_id"], dtype="int64"),
-                "kind": pd.Series(rows["kind"], dtype="string"),
-                "geom": pd.Series(rows["geom"], dtype=object),
-                "props": pd.Series(rows["props"], dtype=object),
-            })
-
-    if os.environ.get("TILEGEN_FASTPATH", "1") == "0":
-        # escape hatch + parity-test reference: the pre-r3 single path
-        # (per-row kernel loop, nested CLIP_SCHEMA built directly in Python)
-        sel = (shapes.select("feature_id", "kind", "coords", "props")
-               .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
-               .repartition(_n_clip_parts(shapes), "feature_id", "_z"))
-        return sel.mapInPandas(fn, CLIP_SCHEMA)
-
-    # production path: flat core + relational nested view + per-FEATURE
-    # kind/props rejoin (parity pytest compares this whole composition —
-    # flat kernels AND reconstruction — against the per-row loop above).
+    _fast_batch_arrow handles thousands of rows per numpy call and ships
+    coords ONCE per feature instead of once per zoom) and MULTI-TILE zooms
+    (the batched covering+clip of clip_vec.slow_batch_arrow). Monotonicity
+    makes the split exact: if the bbox fits one tile at z it fits at every
+    z' < z. Output rows equal clip_shapes_reference's."""
+    # flat core + relational nested view + per-FEATURE kind/props rejoin
+    # (the parity pytest compares this whole composition — flat kernels AND
+    # reconstruction — against clip_shapes_reference).
     # The dim join follows the TILEGEN_BROADCAST_DIM policy (default
     # broadcast: without the hint Catalyst planned a wide shuffle join AND
     # re-ran the shapes lineage scan on the dim side — ADVICE r4 #3)
@@ -719,20 +613,13 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
                            "v -> v >= 0)").alias("_zs"))
             .filter(F.size("_zs") > 0))
     # r7: Arrow-native crossing (guide §4.2) — ring buffers decoded and
-    # rebuilt as ListArray (values, offsets) pairs with zero per-row Python;
-    # TILEGEN_CLIP_ARROW=0 restores the pandas front-ends for A/B.
-    use_arrow = os.environ.get("TILEGEN_CLIP_ARROW", "1") == "1"
-    if use_arrow:
-        fast_out = fast.mapInArrow(
-            lambda batches: (out for rb in batches
-                             for out in _fast_batch_arrow(rb, extent, pack)),
-            CLIP_FLAT_SCHEMA)
-    else:
-        fast_out = fast.mapInPandas(
-            lambda batches: (_fast_batch(bt, extent, pack) for bt in batches),
-            CLIP_FLAT_SCHEMA)
+    # rebuilt as ListArray (values, offsets) pairs with zero per-row Python
+    fast_out = fast.mapInArrow(
+        lambda batches: (out for rb in batches
+                         for out in _fast_batch_arrow(rb, extent, pack)),
+        CLIP_FLAT_SCHEMA)
 
-    from .clip_vec import slow_batch
+    from .clip_vec import slow_batch_arrow
     # The (feature_id, _z) re-spread ships coords once per multi-tile zoom
     # (~3.4× the barrier's bytes — 143 vs 42 MB). An r7 ABBA A/B of dropping
     # it (inheriting the barrier's hash(feature_id) spread) measured −0.5 s
@@ -747,18 +634,11 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
                         "v -> v >= 0)")).alias("_z"))
             .repartition(n_parts, "feature_id", "_z"))
     gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
-    if use_arrow:
-        from .clip_vec import slow_batch_arrow
-        slow_out = slow.mapInArrow(
-            lambda batches: (out for rb in batches
-                             for out in slow_batch_arrow(
-                                 rb, extent, pack=pack, gcap=gcap)),
-            CLIP_FLAT_SCHEMA)
-    else:
-        slow_out = slow.mapInPandas(
-            lambda batches: (slow_batch(bt, extent, pack=pack, gcap=gcap)
-                             for bt in batches),
-            CLIP_FLAT_SCHEMA)
+    slow_out = slow.mapInArrow(
+        lambda batches: (out for rb in batches
+                         for out in slow_batch_arrow(
+                             rb, extent, pack=pack, gcap=gcap)),
+        CLIP_FLAT_SCHEMA)
     return fast_out.unionByName(slow_out)
 
 
@@ -823,27 +703,6 @@ def clip_points_flat(points: DataFrame, zooms: list[int],
                      F.lit(None).cast("array<int>").alias("off"))
 
 
-#: inline-mode finisher: rebuild the public nested struct from the flat agg
-#: output in ONE Catalyst projection (no explode, no join, no re-agg).
-INLINE_NEST_EXPR = (
-    "transform(features, f -> named_struct("
-    "'feature_id', f.feature_id, 'kind', f.kind, "
-    "'geom', if(f.off IS NULL, array(f.geom), "
-    "transform(sequence(1, size(f.off) - 1), "
-    "i -> slice(f.geom, f.off[i-1] + 1, f.off[i] - f.off[i-1]))), "
-    "'props', f.props))")
-
-PACKED_INLINE_NEST_EXPR = (
-    "transform(features, f -> named_struct("
-    "'feature_id', f.feature_id, 'kind', f.kind, "
-    "'geom', if(f.off IS NULL, "
-    "array(flatten(transform(f.geom, v -> array(shiftright(v, 16), v & 65535)))), "
-    "transform(sequence(1, size(f.off) - 1), "
-    "i -> flatten(transform(slice(f.geom, f.off[i-1] + 1, f.off[i] - f.off[i-1]), "
-    "v -> array(shiftright(v, 16), v & 65535))))), "
-    "'props', f.props))")
-
-
 def _dim_join_side(dim: DataFrame, broadcast_dim: bool | None) -> DataFrame:
     """Resolve how the per-feature kind/props dim enters a join:
     True → force broadcast (bypasses autoBroadcastJoinThreshold — right when
@@ -860,62 +719,31 @@ def _dim_join_side(dim: DataFrame, broadcast_dim: bool | None) -> DataFrame:
 
 def build_tile_features(features: DataFrame, zooms: list[int],
                         salt: int = 0, extent: int = K.MVT_EXTENT,
-                        props_mode: str | None = None,
                         broadcast_dim: bool | None = None) -> DataFrame:
     """EP2 pipeline: features → clipped per-tile rows → MVT-equivalent lists.
 
-    Points take the zero-Python relational path; shapes take the single-pass
-    Arrow path. r4: the whole clip→agg pipeline runs on the FLAT transport
-    (geom as one flat int array + ring offsets — no nested-array headers in
-    Arrow or the shuffles); the public nested schema is rebuilt relationally
-    at the end. ``props_mode`` picks how kind/props travel (both measured,
-    both exact — see BENCH/BASELINE.md):
-
-    - ``"inline"``: a map-side broadcast dim join attaches kind/props to
-      the flat rows AFTER the Arrow clip (they never cross Python) but
-      BEFORE the agg, so they ride both salted exchanges; the nested view is
-      then ONE projection (INLINE_NEST_EXPR) — no second aggregation. Best
-      when props are small relative to geometry.
-    - ``"dim"`` (default): kind/props never enter any exchange — the salted
-      partial collect runs on (feature_id, geom, off) only and the dim joins
-      BETWEEN the last exchange and the single full-width collect
-      (tile_feature_lists_dim; partitioning-preserving, zero added
-      shuffles). Minimum shuffle bytes AND one full collect — wins when
-      props are WIDE (real-world tags) or the agg is shuffle-bound.
-    - ``"dim2"`` (measured alternative, kept selectable): lean agg
-      end-to-end, then enrich_tile_features re-collects post-agg (explode →
-      dim join → re-agg) — a second full-width collect, measured slower.
+    Points take the zero-Python relational path; shapes take the Arrow clip
+    path. r4: the whole clip→agg pipeline runs on the FLAT transport (geom
+    as one flat int array + ring offsets — no nested-array headers in Arrow
+    or the shuffles); kind/props never enter any exchange — the dim joins
+    BETWEEN the single agg exchange and the single full-width collect, and
+    the public nested schema is rebuilt relationally there
+    (tile_feature_lists_dim). The tile key rides the exchange packed into
+    one bigint whenever every zoom is ≤ 29.
     ``broadcast_dim``: True forces the kind/props dim broadcast, False
     leaves the join unhinted (AQE sizes it), None reads
     TILEGEN_BROADCAST_DIM (the huge-dim escape hatch, no code change).
-    TILEGEN_FASTPATH=0 falls back to the fully nested reference pipeline."""
-    if os.environ.get("TILEGEN_FASTPATH", "1") == "0":
-        pts = clip_points_relational(features.filter(F.col("kind") == "point"), zooms, extent)
-        shp = clip_shapes_direct(features.filter(F.col("kind") != "point"), zooms, extent)
-        return tile_feature_lists(pts.unionByName(shp), salt=salt)
-    props_mode = props_mode or os.environ.get("TILEGEN_PROPS_MODE", "dim")
+    Output equals tile_feature_lists over clip_points_relational ∪
+    clip_shapes_reference (the nested per-row reference pipeline)."""
     pack = _pack_for(extent)
     pts = clip_points_flat(features.filter(F.col("kind") == "point"), zooms,
                            extent, pack=pack)
     shp = clip_shapes_flat(features.filter(F.col("kind") != "point"), zooms,
                            extent, pack=pack)
-    flat = pts.unionByName(shp)
     dim = features.select("feature_id", "kind", "props")
-    if props_mode == "inline":
-        enriched = flat.join(_dim_join_side(dim, broadcast_dim), "feature_id")
-        tiled = tile_feature_lists_flat(enriched, salt=salt,
-                                        extra=("kind", "props"))
-        return tiled.withColumn("features", F.expr(
-            PACKED_INLINE_NEST_EXPR if pack else INLINE_NEST_EXPR))
-    if props_mode == "dim2":
-        # measured alternative kept for reference: lean agg end-to-end, then
-        # a full post-agg re-collect (enrich_tile_features)
-        tiled = tile_feature_lists_flat(flat, salt=salt)
-        return enrich_tile_features(tiled, dim, broadcast_dim=broadcast_dim,
-                                    packed=pack)
-    return tile_feature_lists_dim(flat, dim, salt=salt,
+    return tile_feature_lists_dim(pts.unionByName(shp), dim, salt=salt,
                                   broadcast_dim=broadcast_dim, packed=pack,
-                                  pack_key=key_pack() and max(zooms) <= 29)
+                                  pack_key=max(zooms) <= 29)
 
 
 #: r6 packed tile key: (z,x,y) as ONE bigint through the agg exchanges.
@@ -928,130 +756,12 @@ _TXY_PACK = "(CAST(z AS BIGINT) << 58) | (x << 29) | y"
 _TXY_MASK = (1 << 29) - 1
 
 
-def key_pack() -> bool:
-    """Tile-key transport mode (TILEGEN_KEY_PACK, default 1) — resolved at
-    plan-build time in the driver, like geom_pack()."""
-    return os.environ.get("TILEGEN_KEY_PACK", "1") == "1"
-
-
-#: public per-tile schema produced by the Arrow tile builder (identical to
-#: the JVM finish() path's schema, column-for-column and field-for-field)
-TILE_LISTS_SCHEMA = (
-    "z int, x bigint, y bigint, "
-    "features array<struct<feature_id:bigint,kind:string,"
-    "geom:array<array<int>>,props:map<string,string>>>, n_features int")
-
-
-def _tile_rows_arrow():
-    """r7 (guide §4.2): the post-exchange tail of the dim-mode aggregation —
-    packed-geom unpack/nest, per-tile collect, feature_id sort — as ONE
-    vectorized Arrow pass instead of JVM interpreted expressions.
-
-    The JVM tail was measured (noop-isolated, bench shape, 12.75M rows):
-    PACKED_NEST_GEOM_EXPR ≈ 2.9 s (transform/flatten are CodegenFallback —
-    interpreted lambda eval + a 2-int array alloc per vertex), collect_list
-    + interpreted-comparator array_sort ≈ 2.5 s. Here the same work is one
-    np.lexsort over the partition, one take per column, and ListArray
-    re-assembly over the flat int buffer (shift/mask on the whole vertex
-    array at once). Correct by the exchange's contract: the input is
-    hash-partitioned on _txy, so every row of a tile is in exactly one
-    partition, and batches are accumulated per partition before grouping.
-    Feature order inside a tile is ascending feature_id — exactly _by_fid
-    (ids are unique per tile, so the sort is total either way).
-    """
-    import pyarrow as pa
-    mask = _TXY_MASK
-
-    def _one(col):
-        c = col.combine_chunks()
-        return c.chunk(0) if isinstance(c, pa.ChunkedArray) else c
-
-    def fn(batches):
-        bl = list(batches)
-        if not bl:
-            return
-        tb = pa.Table.from_batches(bl)
-        n = tb.num_rows
-        if n == 0:
-            return
-        txy = tb.column("_txy").to_numpy(zero_copy_only=False)
-        fid = tb.column("feature_id").to_numpy(zero_copy_only=False)
-        order = np.lexsort((fid, txy))
-        ts = tb.take(pa.array(order, type=pa.int64()))
-        txy_s = txy[order]
-        fid_s = np.ascontiguousarray(fid[order])
-        geom = _one(ts.column("geom"))
-        offc = _one(ts.column("off"))
-        kind_a = _one(ts.column("kind"))
-        props_a = _one(ts.column("props"))
-        # --- ring structure from the (geom, off) flat transport -----------
-        gl = np.diff(geom.offsets.to_numpy(zero_copy_only=False))
-        vals = geom.flatten().to_numpy(zero_copy_only=False).astype(
-            np.int32, copy=False)
-        off_null = pa.compute.is_null(offc).to_numpy(zero_copy_only=False)
-        off_len = np.diff(offc.offsets.to_numpy(zero_copy_only=False))
-        ofv = offc.flatten().to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        # rings per row: NULL off ⇒ single piece; else len(off)-1 slices
-        rc = np.where(off_null, 1, np.maximum(off_len - 1, 0)).astype(np.int64)
-        n_rings = int(rc.sum())
-        ring_start = np.cumsum(rc) - rc
-        rv = np.zeros(n_rings, dtype=np.int64)      # vertices per ring
-        if off_null.any():
-            rv[ring_start[off_null]] = gl[off_null]
-        nn = ~off_null
-        if nn.any() and ofv.size > 1:
-            d = np.diff(ofv)
-            keep = np.ones(ofv.size - 1, dtype=bool)
-            ends = np.cumsum(off_len[nn])
-            keep[ends[:-1] - 1] = False             # drop cross-row diffs
-            from .clip_vec import _gather
-            rv[_gather(ring_start[nn], rc[nn])] = d[keep]
-        # --- unpack (qx<<16)|qy → interleaved [x, y, …] ints --------------
-        qx = vals >> 16
-        qy = np.bitwise_and(vals, np.int32(0xFFFF))
-        inter = np.empty(vals.size * 2, dtype=np.int32)
-        inter[0::2] = qx
-        inter[1::2] = qy
-        inner_off = np.zeros(n_rings + 1, dtype=np.int32)
-        np.cumsum(2 * rv, out=inner_off[1:])
-        outer_off = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(rc, out=outer_off[1:])
-        ring_arr = pa.ListArray.from_arrays(
-            pa.array(inner_off, type=pa.int32()),
-            pa.array(inter, type=pa.int32()))
-        geom_nested = pa.ListArray.from_arrays(
-            pa.array(outer_off, type=pa.int32()), ring_arr)
-        feat_struct = pa.StructArray.from_arrays(
-            [pa.array(fid_s, type=pa.int64()), kind_a, geom_nested, props_a],
-            names=["feature_id", "kind", "geom", "props"])
-        # --- tile boundaries over the sorted keys -------------------------
-        brk = np.nonzero(np.diff(txy_s))[0]
-        tstart = np.concatenate(([0], brk + 1))
-        counts = np.diff(np.concatenate((tstart, [n])))
-        toff = np.zeros(tstart.size + 1, dtype=np.int32)
-        np.cumsum(counts, out=toff[1:])
-        features = pa.ListArray.from_arrays(
-            pa.array(toff, type=pa.int32()), feat_struct)
-        txy_t = txy_s[tstart]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array((txy_t >> 58).astype(np.int32), type=pa.int32()),
-             pa.array((txy_t >> 29) & mask, type=pa.int64()),
-             pa.array(txy_t & mask, type=pa.int64()),
-             features,
-             pa.array(counts.astype(np.int32), type=pa.int32())],
-            names=["z", "x", "y", "features", "n_features"])
-
-    return fn
-
-
 def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
                            broadcast_dim: bool | None = None,
                            packed: bool | None = None,
                            pack_key: bool | None = None) -> DataFrame:
-    """A1/A2 with the props dim joined AFTER the last exchange (default
-    props_mode="dim"): kind/props never enter ANY shuffle, and — unlike the
-    post-agg enrich variant — there is exactly ONE full-width collect.
+    """A1/A2 with the props dim joined AFTER the last exchange: kind/props
+    never enter ANY shuffle, and there is exactly ONE full-width collect.
 
     Shape (r7): ONE exchange — repartition(n, key) → broadcast kind/props
     join + relational geom re-nesting (both preserve the hash(key)
@@ -1069,12 +779,11 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
     shuffle (+ phase-1 list building). Measured: 15.2 → 10.0 s for the agg
     phase at the bench shape, identical rows (the salted-vs-unsalted parity
     pytest covers this by construction). ``salt`` is kept in the signature
-    (callers pass it for the flat/nested variants, where phase 2 merges
-    LISTS without exploding) and ignored here; TILEGEN_DIM_TWOPHASE=1
-    restores the pre-r7 shape for A/B.
+    and ignored here; TILEGEN_DIM_TWOPHASE=1 restores the pre-r7 shape for
+    A/B.
 
-    ``pack_key`` (None → TILEGEN_KEY_PACK, default on; requires z ≤ 29):
-    the tile key through the exchange is ONE packed bigint instead of
+    ``pack_key`` (requires z ≤ 29; None packs too, behind an in-plan z
+    guard): the tile key through the exchange is ONE packed bigint instead of
     (z int, x, y bigint) — −16 UnsafeRow bytes on every exchange row, with
     the unpack a post-agg projection on one row per TILE (so partitioning
     propagation never sees the unpacked columns and no exchange is added).
@@ -1085,12 +794,12 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
     # r7 (ADVICE r6): a direct caller with z > 29 used to get silently
     # corrupted packed keys (x bits overflow into the z field). When the
     # caller did NOT certify the zoom range by passing pack_key explicitly
-    # (build_tile_features passes key_pack() and max(zooms) <= 29), the
-    # pack expression carries an in-plan guard — one int compare per row —
-    # that raises instead of corrupting.
+    # (build_tile_features passes max(zooms) <= 29), the pack expression
+    # carries an in-plan guard — one int compare per row — that raises
+    # instead of corrupting.
     guarded = pack_key is None
     if pack_key is None:
-        pack_key = key_pack()
+        pack_key = True
     d = _dim_join_side(dim.select("feature_id", "kind", "props"), broadcast_dim)
     spark = clipped.sparkSession
     try:
@@ -1114,25 +823,6 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
     src = (clipped.select(F.expr(pack_expr).alias("_txy"),
                           "feature_id", "geom", "off")
            if pack_key else clipped)
-
-    # r7 Arrow tail (TILEGEN_AGG_ARROW, default OFF — a committed NEGATIVE
-    # result): the post-exchange tail (unpack/nest, per-tile collect, sort)
-    # as one vectorized Arrow pass. Bit-identical to the JVM tail (parity
-    # pytest) but measured SLOWER fused (17.9 s pipeline vs 16.75 packed-JVM
-    # vs 14.5 unpacked-JVM): the win inside the pass (~1 s of numpy vs
-    # ~5.4 s of interpreted nest + collect/sort) is more than repaid by
-    # moving 12.75M rows of kind/props maps across Arrow and converting the
-    # deep nested output back to UnsafeRows. Kept selectable for profiling,
-    # and as the reference that the JVM tail's remaining cost is boundary-
-    # bound, not compute-bound. Requires the packed geom transport.
-    if (pack_key and (packed if packed is not None else geom_pack())
-            and os.environ.get("TILEGEN_AGG_ARROW", "0") == "1"
-            and os.environ.get("TILEGEN_DIM_TWOPHASE", "0") != "1"):
-        joined = (src.repartition(n_agg, "_txy")
-                  .join(d, "feature_id", "left")
-                  .select("_txy", "feature_id", "geom", "off", "kind",
-                          "props"))
-        return joined.mapInArrow(_tile_rows_arrow(), TILE_LISTS_SCHEMA)
 
     def finish(rows: DataFrame) -> DataFrame:
         full = (nest_geom(rows, packed=packed).join(d, "feature_id", "left")
@@ -1167,73 +857,14 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
     return finish(rows)
 
 
-def tile_feature_lists_flat(clipped: DataFrame, salt: int = 0,
-                            extra: tuple = ()) -> DataFrame:
-    """A1/A2 over the FLAT transport: per-tile list of (feature_id, geom,
-    off[, *extra]) structs, sorted by feature_id. Same two-phase salted
-    shape as tile_feature_lists; the rows carry no nested arrays (and in
-    "dim" mode no kind/props), shrinking both exchanges (VERDICT r3 #1)."""
-    feat = F.struct(F.col("feature_id"),
-                    *[F.col(c) for c in ("geom", "off", *extra)])
-    if salt <= 1:
-        return (clipped
-                .groupBy("z", "x", "y")
-                .agg(_by_fid(F.collect_list(feat)).alias("features"))
-                .withColumn("n_features", F.size("features")))
-    spark = clipped.sparkSession
-    try:
-        n_agg = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_agg = spark.sparkContext.defaultParallelism
-    # same rationale as tile_feature_lists: explicit AQE-exempt partition
-    # counts on BOTH exchanges so the agg scales with cores
-    two = (clipped
-           .withColumn("_salt", F.pmod(F.hash("feature_id"), F.lit(salt)))
-           .repartition(n_agg * 2, "z", "x", "y", "_salt")
-           .groupBy("z", "x", "y", "_salt")
-           .agg(F.collect_list(feat).alias("_part")))
-    return (two.repartition(n_agg, "z", "x", "y")
-            .groupBy("z", "x", "y")
-            .agg(_by_fid(F.flatten(F.collect_list("_part"))).alias("features"))
-            .withColumn("n_features", F.size("features")))
-
-
-def enrich_tile_features(tiled: DataFrame, dim: DataFrame,
-                         broadcast_dim: bool | None = None,
-                         packed: bool | None = None) -> DataFrame:
-    """Rebuild the public per-tile schema from the flat agg output: nested
-    geom via the pure-Catalyst NEST_GEOM_EXPR, kind/props joined back ONCE
-    per feature from the dim.
-
-    Exchange-free by construction on the default path: the flat agg's output
-    is hash-partitioned on (z,x,y); explode (Generate) and a broadcast hash
-    join both preserve that partitioning, so the re-agg's ClusteredDistribution
-    is already satisfied and Catalyst inserts NO new shuffle — the only added
-    exchange is the dim broadcast (asserted by tests/test_plans.py).
-    ``broadcast_dim=False`` is the huge-dim fallback (unhinted join — AQE
-    picks shuffle hash on feature_id + one re-agg exchange — for feature
-    dims too big to broadcast); None reads TILEGEN_BROADCAST_DIM.
-    """
-    d = _dim_join_side(dim.select("feature_id", "kind", "props"), broadcast_dim)
-    ex = (tiled.select("z", "x", "y", F.explode("features").alias("f"))
-          .select("z", "x", "y", F.col("f.feature_id").alias("feature_id"),
-                  F.col("f.geom").alias("geom"), F.col("f.off").alias("off")))
-    j = nest_geom(ex, packed=packed).join(d, "feature_id", "left")
-    feat = F.struct(
-        F.col("feature_id"), F.col("kind"), F.col("geom"), F.col("props"))
-    return (j.groupBy("z", "x", "y")
-            .agg(_by_fid(F.collect_list(feat)).alias("features"))
-            .withColumn("n_features", F.size("features")))
-
-
 def tile_feature_lists(clipped: DataFrame, salt: int = 0) -> DataFrame:
     """A1/A2: per-tile deterministic sorted feature list (MVT-equivalent).
 
     salt > 0 → two-phase: agg by (z,x,y,salt buckets) first, then flatten and
     re-sort — bounds any single reducer's list size on hot city tiles
     (``BASELINE.json:6,14``; collect_list has no partial-merge, SURVEY §4.2).
-    (Nested-schema variant, kept for CLIP_SCHEMA inputs; build_tile_features
-    uses tile_feature_lists_flat + enrich_tile_features.)
+    (Nested-schema variant for CLIP_SCHEMA inputs — the reference pipeline;
+    build_tile_features uses tile_feature_lists_dim.)
     """
     feat = F.struct(
         F.col("feature_id"), F.col("kind"), F.col("geom"), F.col("props"))
