@@ -22,16 +22,16 @@ single-sample noise. Big sections discard WARM full-size passes first (C2
 JIT needs ~2 full passes to compile the big codegen stages — measured
 19s → 7s on the pip probe, 181s → 132s on the pipeline).
 
-Sections run under the SAME pre-registered steal rule as the scaling
-protocol (tools/bench_scaling.py): hypervisor steal is measured across each
-child; a section over BENCH_STEAL_MAX % of the box re-runs immediately
-(≤ BENCH_STEAL_RETRIES), the last attempt is kept and annotated
-(<name>_steal_pct_of_box / _steal_attempts) — so committed BENCH_rN medians
-are noise-rejected the way the protocol's runs are (VERDICT r5 #1).
+Sections run under a pre-registered steal rule: hypervisor steal is
+measured across each child; a section over BENCH_STEAL_MAX % of the box
+re-runs immediately (≤ BENCH_STEAL_RETRIES), the last attempt is kept and
+annotated (<name>_steal_pct_of_box / _steal_attempts) — so committed
+BENCH_rN medians are noise-rejected (VERDICT r5 #1).
 
 Env knobs: BENCH_REPS (timed reps, default 3), BENCH_ONLY (comma list of
 sections), BENCH_PAGES, BENCH_PIP_POINTS, SPARK_GRAFT_SF_DIR,
-SPARK_GRAFT_CPUS, BENCH_STEAL_MAX (default 2.0, percent of box),
+SPARK_GRAFT_CPUS (default: the cores this process may run on),
+BENCH_STEAL_MAX (default 2.0, percent of box),
 BENCH_STEAL_RETRIES (default 2). BENCH_SECTION is internal
 (single-section child mode).
 
@@ -51,7 +51,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_PAGES = int(os.environ.get("BENCH_PAGES", "400000"))
 REPS = max(1, int(os.environ.get("BENCH_REPS", "3")))
 ZOOMS = list(range(0, 13))
@@ -226,10 +226,10 @@ def sec_dedup_minhash() -> dict:
 
 # --- orchestrator ----------------------------------------------------------
 
-# PRE-REGISTERED steal rule, ported from tools/bench_scaling.py (VERDICT r5
-# #1: BENCH_r05's committed medians regressed 21-30% purely on host-noise
-# windows the scaling protocol caught and this artifact didn't — two
-# artifacts measuring the same code a factor apart is an evidence bug). A
+# PRE-REGISTERED steal rule (VERDICT r5 #1: BENCH_r05's committed medians
+# regressed 21-30% purely on host-noise windows a steal-ruled protocol
+# caught and this artifact didn't — two artifacts measuring the same code a
+# factor apart is an evidence bug). A
 # section whose measured hypervisor steal exceeds BENCH_STEAL_MAX % of the
 # box is re-run immediately (≤ BENCH_STEAL_RETRIES); the last attempt is
 # kept either way, every attempt's steal lands in the JSON.

@@ -1,7 +1,6 @@
 """Protocol-tooling CI guards (VERDICT r4 #7): a cheap end-to-end smoke of
-bench.py's JSON contract plus unit tests of bench_scaling's pre-registered
-steal rule and error-row exclusion — so tooling regressions can't silently
-corrupt a multi-hour protocol run."""
+bench.py's JSON contract plus unit tests of its pre-registered steal rule —
+so tooling regressions can't silently corrupt a multi-hour protocol run."""
 
 import json
 import os
@@ -54,41 +53,6 @@ def test_bench_failed_section_named():
     assert lines
     j = json.loads(lines[-1])
     assert j["failed_sections"] == ["dedup_minhash"]
-
-
-def test_steal_rule_reruns(monkeypatch):
-    """The pre-registered steal rule re-runs over-threshold runs (bounded by
-    STEAL_RETRIES), keeps the last attempt, and logs discards."""
-    import tools.bench_scaling as BS
-
-    seq = [{"value": 1.0, "steal_pct_of_box": 5.0},
-           {"value": 2.0, "steal_pct_of_box": 4.0},
-           {"value": 3.0, "steal_pct_of_box": 0.5}]
-    calls = iter(seq)
-    monkeypatch.setattr(BS, "run_once_with_steal", lambda cpus: dict(next(calls)))
-    monkeypatch.setattr(BS, "STEAL_MAX", 2.0)
-    monkeypatch.setattr(BS, "STEAL_RETRIES", 2)
-    discarded: list = []
-    r = BS.run_with_steal_rule(8, discarded)
-    assert r["value"] == 3.0 and r["steal_attempts"] == 3
-    assert [d["value"] for d in discarded] == [1.0, 2.0]
-
-    # retries exhausted: last attempt kept even though still over threshold
-    seq2 = iter([{"value": 1.0, "steal_pct_of_box": 9.0},
-                 {"value": 2.0, "steal_pct_of_box": 9.0},
-                 {"value": 3.0, "steal_pct_of_box": 9.0},
-                 {"value": 99.0, "steal_pct_of_box": 9.0}])
-    monkeypatch.setattr(BS, "run_once_with_steal", lambda cpus: dict(next(seq2)))
-    discarded2: list = []
-    r2 = BS.run_with_steal_rule(8, discarded2)
-    assert r2["value"] == 3.0 and len(discarded2) == 2
-
-    # error rows bypass the rule entirely
-    monkeypatch.setattr(BS, "run_once_with_steal",
-                        lambda cpus: {"error": "boom", "steal_pct_of_box": 9.0})
-    discarded3: list = []
-    r3 = BS.run_with_steal_rule(8, discarded3)
-    assert "error" in r3 and discarded3 == []
 
 
 def test_bench_section_steal_rule(monkeypatch):

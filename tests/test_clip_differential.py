@@ -7,7 +7,8 @@ and through tiles.clip_reference_batch (the per-row loop behind
 clip_shapes_reference). Routing follows the production zoom split: a zoom
 where every vertex falls in one tile goes through tiles._fast_batch_arrow,
 any other zoom through clip_vec.slow_batch_arrow. The rows must agree
-exactly on (z, x, y, feature_id, ring list), in both geom transports.
+exactly on (z, x, y, feature_id, ring list), the flat (geom, off) output
+re-nested as tiles.NEST_GEOM_EXPR does.
 """
 
 import numpy as np
@@ -74,38 +75,34 @@ def _reference(kind, coords, z):
                   for r in out.itertuples())
 
 
-def _nest(geom, off, pack):
-    """Flat (geom, off) transport → ring list (tiles.NEST_GEOM_EXPR /
-    PACKED_NEST_GEOM_EXPR in numpy)."""
+def _nest(geom, off):
+    """Flat (geom, off) transport → ring list (tiles.NEST_GEOM_EXPR in
+    Python)."""
     if off is None:
         off = [0, len(geom)]
-    rings = [geom[a:b] for a, b in zip(off[:-1], off[1:])]
-    if pack:
-        rings = [[c for v in ring for c in (v >> 16, v & 0xFFFF)]
-                 for ring in rings]
-    return tuple(tuple(ring) for ring in rings)
+    return tuple(tuple(geom[a:b]) for a, b in zip(off[:-1], off[1:]))
 
 
-def _production(kind, coords, z, pack):
+def _production(kind, coords, z):
     allv = np.concatenate([np.reshape(c, (-1, 2)) for c in coords])
     tx, ty = K.point_to_tile(allv[:, 0], allv[:, 1], z)
     if tx.min() == tx.max() and ty.min() == ty.max():
         rb = pa.RecordBatch.from_pylist(
             [{"feature_id": 7, "kind": kind, "coords": coords, "_zs": [z]}],
             schema=FAST_SCHEMA)
-        out = T._fast_batch_arrow(rb, EXTENT, pack)
+        out = T._fast_batch_arrow(rb, EXTENT)
     else:
         rb = pa.RecordBatch.from_pylist(
             [{"feature_id": 7, "kind": kind, "coords": coords, "_z": z}],
             schema=SLOW_SCHEMA)
-        out = CV.slow_batch_arrow(rb, EXTENT, pack=pack)
+        out = CV.slow_batch_arrow(rb, EXTENT)
     return sorted((r["z"], r["x"], r["y"], r["feature_id"],
-                   _nest(r["geom"], r["off"], pack))
+                   _nest(r["geom"], r["off"]))
                   for b in out for r in b.to_pylist())
 
 
 @settings(max_examples=600, deadline=None, derandomize=True, database=None)
-@given(shapes(), st.booleans())
-def test_arrow_clip_matches_reference(shape, pack):
+@given(shapes())
+def test_arrow_clip_matches_reference(shape):
     kind, coords, z = shape
-    assert _production(kind, coords, z, pack) == _reference(kind, coords, z)
+    assert _production(kind, coords, z) == _reference(kind, coords, z)

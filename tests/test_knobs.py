@@ -17,7 +17,6 @@ KNOBS = {
     "TILEGEN_CC_MAX_ITER",
     "TILEGEN_CLIP_OVERPART",
     "TILEGEN_DIM_TWOPHASE",
-    "TILEGEN_GEOM_PACK",
     "TILEGEN_GRID_CAP",
     "TILEGEN_KNN_QUERY_BLOCK",
     "TILEGEN_LATEST_MODE",

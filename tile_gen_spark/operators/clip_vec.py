@@ -119,15 +119,16 @@ def finalize_instances(qx: np.ndarray, qy: np.ndarray, L: np.ndarray,
 
 
 def assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
-                    unit_z, unit_x, unit_y, unit_fid, pack: bool = False):
+                    unit_z, unit_x, unit_y, unit_fid):
     """One output row per unit with >= 1 kept instance (geom pieces in
     instance order; kept instances of a unit are contiguous because
     inst_unit is non-decreasing in every caller), as FLAT COLUMNS + LIST
     BUFFERS — ``(z, x, y, fid, geom_vals, geom_offsets, off_vals,
-    off_offsets, off_single)`` where row i's geom is
-    ``geom_vals[geom_offsets[i]:geom_offsets[i+1]]`` and its off list is
+    off_offsets, off_single)`` where row i's geom is the interleaved
+    ``[qx, qy, …]`` slice ``geom_vals[geom_offsets[i]:geom_offsets[i+1]]``
+    and its off list (prefix offsets into that slice, one end per piece) is
     ``off_vals[off_offsets[i]:off_offsets[i+1]]`` (``off_single[i]`` marks
-    single-piece rows, the ones the packed transport nulls out). These are
+    single-piece rows, whose off goes out NULL). These are
     EXACTLY Arrow ListArray (values, offsets) buffers, so the Arrow path
     emits them with zero per-row Python (guide §4.2: a list column is one
     data buffer plus an offsets array — compute the offsets, never split).
@@ -140,14 +141,9 @@ def assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
     kept = np.nonzero(inst_keep)[0]
     if kept.size == 0:
         return empty
-    if pack:
-        vals_src = (qx3.astype(np.int32) << np.int32(16)) | qy3.astype(np.int32)
-        width = 1
-    else:
-        vals_src = np.empty((qx3.size, 2), dtype=np.int32)
-        vals_src[:, 0] = qx3
-        vals_src[:, 1] = qy3
-        width = 2
+    vals_src = np.empty((qx3.size, 2), dtype=np.int32)
+    vals_src[:, 0] = qx3
+    vals_src[:, 1] = qy3
     Lk = L3[kept].astype(np.int64)
     fk = flip[kept]
     start = np.where(fk, S3[kept] + Lk - 1, S3[kept])
@@ -159,7 +155,7 @@ def assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
     u_starts = np.concatenate([[0], ub]).astype(np.int64)
     u_end = np.concatenate([ub, [kept.size]]).astype(np.int64)
     u_ids = units[u_starts]
-    ints_per_inst = Lk * width
+    ints_per_inst = Lk * 2
     csum = np.cumsum(ints_per_inst)
     row_ints = np.add.reduceat(ints_per_inst, u_starts)
     geom_offsets = np.concatenate([[0], np.cumsum(row_ints)])
@@ -475,7 +471,7 @@ def chunk_plan(w: np.ndarray, alone: np.ndarray,
 def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
                           ring_len: np.ndarray, ring_start: np.ndarray,
                           verts: np.ndarray, extent: int, cap: int,
-                          pack: bool, gcap: int | None) -> list[tuple]:
+                          gcap: int | None) -> list[tuple]:
     """One bbox-sparse row (KEPT/stripped ring slices into the global
     ``verts``): exact covering via the O(covered) scalar kernels, then the
     same batched clip over exactly those (tile, row) units — per-row work
@@ -505,13 +501,12 @@ def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
             is_line1, rrc, rfr, ring_len, ring_start, verts,
             np.zeros(ku, np.int64), np.full(ku, z, np.int64), ux, uy,
             np.full(ku, fid, np.int64), west, south, east, north,
-            np.ones(ku, bool), extent, pack))
+            np.ones(ku, bool), extent))
     return parts
 
 
 def _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
-                     row_ring_count, row_first_ring, extent: int,
-                     pack: bool = False) -> list[tuple]:
+                     row_ring_count, row_first_ring, extent: int) -> list[tuple]:
     """Mirrors the reference per-row loop (tiles.clip_shapes_reference)
     output-for-output (modulo the r4 flat geom/off transport) over
     pre-flattened ring structures; see module docstring. Called by
@@ -525,7 +520,7 @@ def _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
     return _clip_units_parts(
         is_line_row, row_ring_count, row_first_ring, ring_len, ring_start,
         verts, unit_row, unit_z, ux, uy, fids[unit_row], west, south, east,
-        north, cov, extent, pack)
+        north, cov, extent)
 
 
 def covering_units(zs, verts, S0, L0, is_line_row):
@@ -583,8 +578,7 @@ def covering_units(zs, verts, S0, L0, is_line_row):
 
 def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
                       ring_start, verts, unit_row, unit_z, ux, uy, unit_fid,
-                      west, south, east, north, cov, extent,
-                      pack: bool = False) -> list[tuple]:
+                      west, south, east, north, cov, extent) -> list[tuple]:
     """Clip + quantize + finalize + assemble over an explicit unit set (one
     unit = one (tile, row) pair), returning assemble_arrays part tuples
     (polygons part, then lines part). Shared by _slow_core_parts (dense
@@ -613,7 +607,7 @@ def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
                                  np.ones(Lc.size, dtype=bool), ring_ord,
                                  n_unit)
         parts.append(assemble_arrays(*fin, p_inst_unit, unit_z, ux, uy,
-                                     unit_fid, pack))
+                                     unit_fid))
 
     # --- lines --------------------------------------------------------------
     lu = np.nonzero(is_line_row[unit_row] & cov)[0]
@@ -639,15 +633,16 @@ def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
                                      np.zeros(pieceL.size, dtype=bool),
                                      np.zeros(pieceL.size, np.int64), n_unit)
             parts.append(assemble_arrays(*fin, piece_unit, unit_z, ux, uy,
-                                         unit_fid, pack))
+                                         unit_fid))
     return parts
 
 
-def parts_to_batches(parts: list[tuple], pack: bool):
+def parts_to_batches(parts: list[tuple]):
     """assemble_arrays part tuples → pyarrow RecordBatches (CLIP_FLAT_SCHEMA):
     the list columns are built straight from (values, offsets) buffers —
-    zero per-row Python (guide §4.2). Packed single-piece rows get a NULL
-    off via the ListArray validity mask."""
+    zero per-row Python (guide §4.2). geom is the interleaved [qx, qy, …]
+    int32 list; single-piece rows get a NULL off via the ListArray validity
+    mask (NEST_GEOM_EXPR wraps their geom as one ring)."""
     import pyarrow as pa
     out = []
     for (z, x, y, fid, gvals, goff, ovals, ooff, osingle) in parts:
@@ -735,7 +730,7 @@ def decode_clip_rings(rb, strip: bool = True):
 
 
 def slow_batch_arrow(rb, extent: int, cap: int | None = None,
-                     pack: bool = False, gcap: int | None = None):
+                     gcap: int | None = None):
     """One input RecordBatch of multi-tile (feature, _z) rows → list of
     output RecordBatches (CLIP_FLAT_SCHEMA), zero per-row Python end to end.
 
@@ -773,10 +768,10 @@ def slow_batch_arrow(rb, extent: int, cap: int | None = None,
         if alone:
             parts.extend(_sparse_one_row_parts(
                 is_line[a:b_], int(zs[a]), int(fids[a]), ring_len[rs:re],
-                ring_start[rs:re], verts, extent, cap, pack, gcap))
+                ring_start[rs:re], verts, extent, cap, gcap))
         else:
             parts.extend(_slow_core_parts(
                 is_line[a:b_], zs[a:b_], fids[a:b_], ring_len[rs:re], verts,
                 ring_start[rs:re], row_ring_count[a:b_],
-                row_first_ring[a:b_ + 1] - rs, extent, pack))
-    return parts_to_batches(parts, pack)
+                row_first_ring[a:b_ + 1] - rs, extent))
+    return parts_to_batches(parts)

@@ -37,11 +37,3 @@ def suggest_salt(assignments: DataFrame, target_per_reducer: int = 5000,
     salt = int((mx + target_per_reducer - 1) // target_per_reducer)
     return max(1, min(salt, max_salt))
 
-
-def salted_repartition(df: DataFrame, keys: list[str], salt: int,
-                       num_partitions: int | None = None) -> DataFrame:
-    """J9: spread hot key groups over `salt` buckets before a wide stage."""
-    out = df.withColumn("_salt", F.pmod(F.hash(*keys), F.lit(salt)))
-    cols = [F.col(k) for k in keys] + [F.col("_salt")]
-    return (out.repartition(num_partitions, *cols) if num_partitions
-            else out.repartition(*cols))

@@ -14,9 +14,10 @@ Scale design:
    over ragged numpy (single-tile zooms: _fast_batch_arrow; multi-tile
    zooms: clip_vec.slow_batch_arrow) — the only Python crossings, placed
    AFTER relational filters (UDF-barrier management, SURVEY.md §4.2).
- - The per-tile ``collect_list`` agg is non-algebraic, so hot tiles are salted
-   two-phase when requested (A2/J9): agg by (z,x,y,salt) then flatten — AQE
-   alone cannot fix aggregation skew.
+ - The per-tile ``collect_list`` agg (tile_feature_lists_dim) runs on ONE
+   over-partitioned hash(tile key) exchange and ignores ``salt``; the salted
+   two-phase shape (agg by (z,x,y,salt) then flatten, A2/J9) remains in the
+   nested reference tile_feature_lists and behind TILEGEN_DIM_TWOPHASE.
 """
 
 from __future__ import annotations
@@ -45,60 +46,19 @@ CLIP_FLAT_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, "
                     "geom array<int>, off array<int>")
 
 #: flat (geom, off) → the public nested array<array<int>> ring list —
-#: pure Catalyst expression, no Python. r7b: off is NULL for single-piece
-#: rows in BOTH transports (~90% of rows at the bench shape) — those nest
-#: via ONE array(geom) wrap instead of sequence/transform/slice, and the
-#: off array leaves the exchange entirely.
+#: pure Catalyst expression, no Python. geom is interleaved [qx, qy, …]; off
+#: holds ring prefix offsets into it and is NULL for single-piece rows (~90%
+#: of rows at the bench shape) — those nest via ONE array(geom) wrap instead
+#: of sequence/transform/slice, and the off array leaves the exchange
+#: entirely.
 NEST_GEOM_EXPR = ("if(off IS NULL, array(geom), "
                   "transform(sequence(1, size(off) - 1), "
                   "i -> slice(geom, off[i-1] + 1, off[i] - off[i-1])))")
 
-#: r5 PACKED transport decode: geom carries ONE int per VERTEX
-#: ((qx << 16) | qy — lossless for extent ≤ 32767), off counts vertices and
-#: is NULL for single-piece rows ([0, size] implied). Halves the geom
-#: payload and drops the off array from ~85% of rows in both salted agg
-#: exchanges and the Arrow crossing; the unpack back to interleaved
-#: [x, y, …] ring lists is pure shift/mask inside whole-stage codegen.
-PACKED_NEST_GEOM_EXPR = (
-    "if(off IS NULL, "
-    "array(flatten(transform(geom, v -> array(shiftright(v, 16), v & 65535)))), "
-    "transform(sequence(1, size(off) - 1), "
-    "i -> flatten(transform(slice(geom, off[i-1] + 1, off[i] - off[i-1]), "
-    "v -> array(shiftright(v, 16), v & 65535)))))")
 
-
-def geom_pack() -> bool:
-    """Transport mode (TILEGEN_GEOM_PACK): resolved at PLAN BUILD time in
-    the driver — producers capture it in their task closures and consumers
-    pick the matching decode, so one plan is always consistent.
-
-    r7: default flipped to UNPACKED (0). The packed decode
-    (PACKED_NEST_GEOM_EXPR) pays an interpreted lambda + 2-int array alloc
-    PER VERTEX (~5/row), where the unpacked decode slices PER RING
-    (~1.04/row): measured on the bench agg (12.75M rows, local[32]) the
-    packed tail costs 7.8-8.3 s vs 5.4-5.6 s unpacked — a 2.3 s fused
-    pipeline win (16.75 → 14.5 s). The byte cost of unpacking is small
-    because fixed per-row columns dominate exchange bytes (r6 byte probe:
-    rows average 5 vertices; the whole r5 geom pack was worth −5%
-    compressed), and the r5/r6 scaling analysis attributes the agg ceiling
-    to memory bandwidth/CPU, not network — so trading ~5% exchange bytes
-    for ~30% less decode CPU is the right default at cluster scale too.
-    TILEGEN_GEOM_PACK=1 restores the packed transport for byte-constrained
-    deployments (parity pytest pins both modes identical)."""
-    return os.environ.get("TILEGEN_GEOM_PACK", "0") == "1"
-
-
-def _pack_for(extent: int) -> bool:
-    """Packing needs qx ≤ 32767 (int32 stays positive) and qy < 65536."""
-    return geom_pack() and extent <= 32767
-
-
-def nest_geom(df: DataFrame, packed: bool | None = None) -> DataFrame:
+def nest_geom(df: DataFrame) -> DataFrame:
     """Replace flat (geom, off) columns with the nested CLIP_SCHEMA geom."""
-    if packed is None:
-        packed = geom_pack()
-    expr = PACKED_NEST_GEOM_EXPR if packed else NEST_GEOM_EXPR
-    return df.withColumn("geom", F.expr(expr)).drop("off")
+    return df.withColumn("geom", F.expr(NEST_GEOM_EXPR)).drop("off")
 
 
 def _by_fid(arr):
@@ -256,8 +216,7 @@ def clip_points_relational(points: DataFrame, zooms: list[int],
 def _fast_core(is_line: np.ndarray, fids: np.ndarray,
                feat_ring_count: np.ndarray, ring_len: np.ndarray,
                ring_start: np.ndarray, verts: np.ndarray,
-               unit_feat: np.ndarray, unit_z: np.ndarray, extent: int,
-               pack: bool) -> list:
+               unit_feat: np.ndarray, unit_z: np.ndarray, extent: int) -> list:
     """Vectorized single-tile clip: every (feature, z) unit is guaranteed
     (by the relational corner-tile split in clip_shapes_flat) to fit in ONE
     tile at z, so the clip is the identity and the whole batch reduces to
@@ -358,13 +317,13 @@ def _fast_core(is_line: np.ndarray, fids: np.ndarray,
     inst_keep = (poly_ok | line_ok) & ~unit_dead[inst_unit]
     flip = poly_ok & ((area2 > 0.0) != (ring_ord == 0))
 
-    # --- assemble (flat geom + prefix offsets; packed mode: one (qx<<16|qy)
-    # int per vertex, off NULL when single-piece) — array buffers out
+    # --- assemble (flat geom + prefix offsets, off NULL when single-piece)
+    # — array buffers out
     return [assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
-                            unit_z, tx, ty, fids[unit_feat], pack=pack)]
+                            unit_z, tx, ty, fids[unit_feat])]
 
 
-def _fast_batch_arrow(rb, extent: int, pack: bool = False):
+def _fast_batch_arrow(rb, extent: int):
     """Arrow entry point of the single-tile clip (guide §4.2): one input
     RecordBatch (feature_id, kind, coords, _zs = array<int> of the
     feature's single-tile zooms) → list of CLIP_FLAT_SCHEMA RecordBatches.
@@ -385,8 +344,8 @@ def _fast_batch_arrow(rb, extent: int, pack: bool = False):
     if unit_feat.size == 0:
         return []
     parts = _fast_core(is_line, fids, feat_ring_count, ring_len, ring_start,
-                       verts, unit_feat, unit_z, extent, pack)
-    return parts_to_batches(parts, pack)
+                       verts, unit_feat, unit_z, extent)
+    return parts_to_batches(parts)
 
 
 def _n_clip_parts(df: DataFrame) -> int:
@@ -523,22 +482,18 @@ def clip_shapes_direct(shapes: DataFrame, zooms: list[int],
     # The dim join follows the TILEGEN_BROADCAST_DIM policy (default
     # broadcast: without the hint Catalyst planned a wide shuffle join AND
     # re-ran the shapes lineage scan on the dim side — ADVICE r4 #3)
-    pack = _pack_for(extent)
-    flat = clip_shapes_flat(shapes, zooms, extent, pack=pack)
+    flat = clip_shapes_flat(shapes, zooms, extent)
     dim = _dim_join_side(shapes.select("feature_id", "kind", "props"), None)
-    return (nest_geom(flat, packed=pack).join(dim, "feature_id")
+    return (nest_geom(flat).join(dim, "feature_id")
             .select("z", "x", "y", "feature_id", "kind", "geom", "props"))
 
 
 def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
-                     extent: int = K.MVT_EXTENT,
-                     pack: bool | None = None) -> DataFrame:
+                     extent: int = K.MVT_EXTENT) -> DataFrame:
     """clip_shapes_direct's flat core (CLIP_FLAT_SCHEMA): what actually
     crosses Arrow and the downstream agg exchanges. No kind/props columns,
-    geom as ONE flat int array + ring prefix offsets (``pack``: one
-    (qx<<16|qy) int per vertex, NULL off for single-piece rows)."""
-    if pack is None:
-        pack = _pack_for(extent)
+    geom as ONE interleaved [qx, qy, …] int array + ring prefix offsets
+    (NULL off for single-piece rows)."""
     # Explode per (feature, zoom) BEFORE the Python stage and hash-spread on
     # (feature_id, z): clip CPU varies ~1000× per feature and grows with z, so
     # fine-grained rows pack the task waves evenly (the 64-partition version
@@ -616,7 +571,7 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
     # rebuilt as ListArray (values, offsets) pairs with zero per-row Python
     fast_out = fast.mapInArrow(
         lambda batches: (out for rb in batches
-                         for out in _fast_batch_arrow(rb, extent, pack)),
+                         for out in _fast_batch_arrow(rb, extent)),
         CLIP_FLAT_SCHEMA)
 
     from .clip_vec import slow_batch_arrow
@@ -637,17 +592,15 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
     slow_out = slow.mapInArrow(
         lambda batches: (out for rb in batches
                          for out in slow_batch_arrow(
-                             rb, extent, pack=pack, gcap=gcap)),
+                             rb, extent, gcap=gcap)),
         CLIP_FLAT_SCHEMA)
     return fast_out.unionByName(slow_out)
 
 
 def clip_points_flat(points: DataFrame, zooms: list[int],
-                     extent: int = K.MVT_EXTENT,
-                     pack: bool | None = None) -> DataFrame:
+                     extent: int = K.MVT_EXTENT) -> DataFrame:
     """clip_points_relational's flat twin (CLIP_FLAT_SCHEMA) — still pure
-    Spark SQL, zero Python; geom = [qx, qy] (packed: [(qx<<16)|qy], off
-    NULL), off = [0, 2].
+    Spark SQL, zero Python; geom = [qx, qy], off NULL (single piece).
 
     r7 (guide §1.2 per-task work, same restructure as the r7
     q_tile_assign_multizoom): the per-row tile FRACTIONS
@@ -662,8 +615,6 @@ def clip_points_flat(points: DataFrame, zooms: list[int],
     fastpath parity pytests. The fractions are computed in a projection
     BELOW the explode, so they are attributes (not inlined copies) inside
     the generator's 13 structs."""
-    if pack is None:
-        pack = _pack_for(extent)
     pts = with_lonlat(points).select("feature_id", "lon", "lat")
     la = S.clamped_lat("lat")
     merc = f"ln(tan(radians({la})) + 1.0 / cos(radians({la})))"
@@ -692,12 +643,6 @@ def clip_points_flat(points: DataFrame, zooms: list[int],
             F.expr(qx).alias("qx"),
             F.expr(qy).alias("qy")))
     ex = frac.select("feature_id", F.explode(F.array(*entries)).alias("t"))
-    if pack:
-        return ex.select(
-            "t.z", "t.x", "t.y", "feature_id",
-            F.expr("array(shiftleft(CAST(t.qx AS INT), 16) | CAST(t.qy AS INT))")
-            .alias("geom"),
-            F.lit(None).cast("array<int>").alias("off"))
     return ex.select("t.z", "t.x", "t.y", "feature_id",
                      F.array("t.qx", "t.qy").cast("array<int>").alias("geom"),
                      F.lit(None).cast("array<int>").alias("off"))
@@ -735,14 +680,13 @@ def build_tile_features(features: DataFrame, zooms: list[int],
     TILEGEN_BROADCAST_DIM (the huge-dim escape hatch, no code change).
     Output equals tile_feature_lists over clip_points_relational ∪
     clip_shapes_reference (the nested per-row reference pipeline)."""
-    pack = _pack_for(extent)
     pts = clip_points_flat(features.filter(F.col("kind") == "point"), zooms,
-                           extent, pack=pack)
+                           extent)
     shp = clip_shapes_flat(features.filter(F.col("kind") != "point"), zooms,
-                           extent, pack=pack)
+                           extent)
     dim = features.select("feature_id", "kind", "props")
     return tile_feature_lists_dim(pts.unionByName(shp), dim, salt=salt,
-                                  broadcast_dim=broadcast_dim, packed=pack,
+                                  broadcast_dim=broadcast_dim,
                                   pack_key=max(zooms) <= 29)
 
 
@@ -758,7 +702,6 @@ _TXY_MASK = (1 << 29) - 1
 
 def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
                            broadcast_dim: bool | None = None,
-                           packed: bool | None = None,
                            pack_key: bool | None = None) -> DataFrame:
     """A1/A2 with the props dim joined AFTER the last exchange: kind/props
     never enter ANY shuffle, and there is exactly ONE full-width collect.
@@ -825,7 +768,7 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
            if pack_key else clipped)
 
     def finish(rows: DataFrame) -> DataFrame:
-        full = (nest_geom(rows, packed=packed).join(d, "feature_id", "left")
+        full = (nest_geom(rows).join(d, "feature_id", "left")
                 .select(*keys,
                         F.struct("feature_id", "kind", "geom", "props").alias("f")))
         agged = (full.groupBy(*keys)

@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults (SURVEY.md §4).
 
-Settings chosen for the 100 TB design point, applied identically in the
-local[32] sandbox: AQE on (skew-join splitting + partition coalescing,
+Settings chosen for the 100 TB design point, applied identically in local
+mode (``local[N]``, N = SPARK_GRAFT_CPUS, default the cores this process
+may run on): AQE on (skew-join splitting + partition coalescing,
 ``BASELINE.json:6,14``), Arrow enabled for every Python crossing
 (``BASELINE.json:15``), shuffle partitions sized to the parallelism.
 """
@@ -15,7 +16,7 @@ from pyspark.sql import SparkSession
 
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus * 2, 8)
     b = (
@@ -46,10 +47,8 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
         # 16g measured flat-stable across reps — 8g went GC-bound on heavy
         # 32-thread stages, 48g spiked on heap expansion (4s → 50s outliers)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # UI off for bench hygiene; SPARK_GRAFT_UI=1 turns it on so
-        # tools/profile_phases.py can read per-stage GC/shuffle metrics
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false")
+        # UI off for bench hygiene (per-stage metrics come from the event log)
+        .config("spark.ui.enabled", "false")
     )
     # Local-mode shuffle files on tmpfs when available: all N threads share
     # ONE disk in local mode, which serializes shuffle-heavy stages — an
