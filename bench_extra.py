@@ -9,17 +9,14 @@ Usage:
   python bench_extra.py <probe> [reps]        # one probe, in-process
   python bench_extra.py all                   # every probe, isolated JVMs
 
-Probes:
+Probes (the rest are covered by bench.py sections via BENCH_ONLY and by
+the per-layer spans of ``perfbench/run.py --trace 1``):
   latest_window / latest_bjoin   — latest_per_url modes over the bench corpus
-  pipeline                       — full tile pipeline (bench shape, noop-free
-                                   count, same as sec_tile_pipeline's run())
-  pip_indexed                    — pip_join indexed refine (count)
-  minhash                        — minhash_lsh_pairs count (current code)
-  tile_assign                    — q_tile_assign_multizoom(S.SPARK) collect
-  knn                            — knn_embeddings(emb, emb, 5) count
-  extract                        — latest→extract_and_parse→validity noop
+                                   (go with TILEGEN_LATEST_MODE)
+  pip_indexed                    — pip_join indexed refine (count; goes with
+                                   the indexed-refine decision)
 
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_PAGES, TILEGEN_* toggles.
+Env: SPARK_GRAFT_CPUS, BENCH_PAGES, BENCH_PIP_POINTS, TILEGEN_* toggles.
 """
 
 from __future__ import annotations
@@ -33,19 +30,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_PAGES = int(os.environ.get("BENCH_PAGES", "400000"))
-ZOOMS = list(range(0, 13))
 
 
 def _session():
     from tile_gen_spark.plans.session import get_spark
-    from tile_gen_spark.sources.testdata import register_views
-    spark = get_spark("bench-extra", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS * 2)
-    register_views(spark, SF_DIR)
-    return spark
+    return get_spark("bench-extra", master=f"local[{CPUS}]",
+                     shuffle_partitions=CPUS * 2)
 
 
 def _pages(spark):
@@ -95,39 +87,6 @@ def _probe_latest(reps):
     return {"reps": r, "rows": n}
 
 
-def probe_extract(reps):
-    from tile_gen_spark.operators.extract import (extract_and_parse,
-                                                  latest_per_url,
-                                                  validity_filter)
-    spark = _session()
-    pages = _pages(spark)
-    q = validity_filter(extract_and_parse(latest_per_url(pages)))
-    spark.sparkContext.setJobDescription("probe: extract")
-    r = _time(lambda: _noop(q), reps)
-    return {"reps": r, "rows": q.count()}
-
-
-def probe_pipeline(reps):
-    from pyspark.sql import functions as F
-    from tile_gen_spark.operators.extract import (extract_and_parse,
-                                                  latest_per_url,
-                                                  validity_filter)
-    from tile_gen_spark.operators.tiles import build_tile_features
-    spark = _session()
-    pages = _pages(spark)
-    state = {}
-
-    def run():
-        feats = validity_filter(extract_and_parse(latest_per_url(pages))).persist()
-        tiles = build_tile_features(feats, ZOOMS, salt=8)
-        nt, nf = tiles.select(F.count("*"), F.sum("n_features")).first()
-        feats.unpersist()
-        state["n_tiles"], state["n_feat"] = int(nt), int(nf)
-
-    r = _time(run, reps, discard=2)
-    return {"reps": r, **state}
-
-
 def _pip_q(spark, refine):
     from pyspark.sql import functions as F
     from tile_gen_spark.sources.synth import gen_zones
@@ -153,38 +112,6 @@ def probe_pip_indexed(reps):
         state["n"] = q.count()
     r = _time(run, reps, discard=2)
     return {"reps": r, "n_pairs": state["n"]}
-
-
-def probe_minhash(reps):
-    from tile_gen_spark.operators.textops import minhash_lsh_pairs
-    spark = _session()
-    docs = spark.table("documents")
-    spark.sparkContext.setJobDescription("probe: minhash")
-    state = {}
-
-    def run():
-        state["n"] = minhash_lsh_pairs(docs, num_hashes=16, bands=4).count()
-    r = _time(run, reps)
-    return {"reps": r, "n_pairs": state["n"]}
-
-
-def probe_tile_assign(reps):
-    import __spark_entry__ as E
-    from tile_gen_spark.plans import sqlgen as S
-    spark = _session()
-    sql = E.q_tile_assign_multizoom(S.SPARK)
-    spark.sparkContext.setJobDescription("probe: tile_assign")
-    r = _time(lambda: spark.sql(sql).collect(), reps)
-    return {"reps": r}
-
-
-def probe_knn(reps):
-    from tile_gen_spark.operators.knn import knn_embeddings
-    spark = _session()
-    emb = spark.table("embeddings")
-    spark.sparkContext.setJobDescription("probe: knn_embeddings")
-    r = _time(lambda: knn_embeddings(emb, emb, k=5).count(), reps)
-    return {"reps": r}
 
 
 PROBES = [n[6:] for n in dir(sys.modules[__name__]) if n.startswith("probe_")]

@@ -9,7 +9,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from tile_gen_spark.plans.session import get_spark
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

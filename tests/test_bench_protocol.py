@@ -78,6 +78,27 @@ def test_bench_section_steal_rule(monkeypatch):
     r = B._run_section_with_steal_rule("tile_assign")
     assert r["v"] == 3 and r["tile_assign_steal_attempts"] == 3
     assert r["tile_assign_steal_pct_of_box"] == 0.5
+    assert r["tile_assign_steal_pcts"] == [5.0, 4.0, 0.5]
+
+    # every attempt over the threshold -> the least-steal attempt is kept:
+    # 5%, 8.5%, then 3% keeps the third
+    snaps = iter([(0, 0), (50, 1000), (50, 1000), (135, 2000),
+                  (135, 2000), (165, 3000)])
+    monkeypatch.setattr(B, "_steal_snap", lambda: next(snaps))
+    calls["n"] = 0
+    r = B._run_section_with_steal_rule("tile_assign")
+    assert r["v"] == 3 and r["tile_assign_steal_attempts"] == 3
+    assert r["tile_assign_steal_pct_of_box"] == 3.0
+    assert r["tile_assign_steal_pcts"] == [5.0, 8.5, 3.0]
+    # ... also when it is not the last attempt: 5%, 3%, 8.5% keeps the second
+    snaps = iter([(0, 0), (50, 1000), (50, 1000), (80, 2000),
+                  (80, 2000), (165, 3000)])
+    monkeypatch.setattr(B, "_steal_snap", lambda: next(snaps))
+    calls["n"] = 0
+    r = B._run_section_with_steal_rule("tile_assign")
+    assert r["v"] == 2 and r["tile_assign_steal_attempts"] == 3
+    assert r["tile_assign_steal_pct_of_box"] == 3.0
+    assert r["tile_assign_steal_pcts"] == [5.0, 3.0, 8.5]
 
     # a crashed section short-circuits (no re-run loop on None)
     monkeypatch.setattr(B, "_steal_snap", lambda: (0, 1))

@@ -5,7 +5,7 @@ closed, with or without a repeated vertex) and random lines, at zooms 0-12
 and scales 1e-4 to 3 degrees, go through the production Arrow entry points
 and through tiles.clip_reference_batch (the per-row loop behind
 clip_shapes_reference). Routing follows the production zoom split: a zoom
-where every vertex falls in one tile goes through tiles._fast_batch_arrow,
+where every vertex falls in one tile goes through clip_vec.fast_batch_arrow,
 any other zoom through clip_vec.slow_batch_arrow. The rows must agree
 exactly on (z, x, y, feature_id, ring list), the flat (geom, off) output
 re-nested as tiles.NEST_GEOM_EXPR does.
@@ -90,7 +90,7 @@ def _production(kind, coords, z):
         rb = pa.RecordBatch.from_pylist(
             [{"feature_id": 7, "kind": kind, "coords": coords, "_zs": [z]}],
             schema=FAST_SCHEMA)
-        out = T._fast_batch_arrow(rb, EXTENT)
+        out = CV.fast_batch_arrow(rb, EXTENT)
     else:
         rb = pa.RecordBatch.from_pylist(
             [{"feature_id": 7, "kind": kind, "coords": coords, "_z": z}],
@@ -106,3 +106,59 @@ def _production(kind, coords, z):
 def test_arrow_clip_matches_reference(shape):
     kind, coords, z = shape
     assert _production(kind, coords, z) == _reference(kind, coords, z)
+
+
+@st.composite
+def batches(draw):
+    """1-8 shapes for one RecordBatch, each at 1-3 zooms."""
+    out = []
+    for _ in range(draw(st.integers(1, 8))):
+        kind, coords, z = draw(shapes())
+        zs = sorted({z, *draw(st.lists(st.integers(0, 12), max_size=2))})
+        out.append((kind, coords, zs))
+    return out
+
+
+def _production_batch(rows):
+    """Production routing over a multi-row batch: each feature's single-tile
+    zooms ride one fast_batch_arrow row (its ``_zs`` list), every
+    multi-tile zoom one slow_batch_arrow row, run under the default caps
+    and under caps small enough to force the chunked and sparse routes."""
+    fast, slow = [], []
+    for fid, (kind, coords, zs) in enumerate(rows):
+        allv = np.concatenate([np.reshape(c, (-1, 2)) for c in coords])
+        single = []
+        for z in zs:
+            tx, ty = K.point_to_tile(allv[:, 0], allv[:, 1], z)
+            if tx.min() == tx.max() and ty.min() == ty.max():
+                single.append(z)
+            else:
+                slow.append({"feature_id": fid, "kind": kind,
+                             "coords": coords, "_z": z})
+        if single:
+            fast.append({"feature_id": fid, "kind": kind, "coords": coords,
+                         "_zs": single})
+    fast_out = CV.fast_batch_arrow(
+        pa.RecordBatch.from_pylist(fast, schema=FAST_SCHEMA), EXTENT)
+    slow_rb = pa.RecordBatch.from_pylist(slow, schema=SLOW_SCHEMA)
+    got = []
+    for caps in ({}, {"cap": 2000, "gcap": 50}):
+        out = fast_out + CV.slow_batch_arrow(slow_rb, EXTENT, **caps)
+        got.append(sorted((r["z"], r["x"], r["y"], r["feature_id"],
+                           _nest(r["geom"], r["off"]))
+                          for b in out for r in b.to_pylist()))
+    return got
+
+
+@settings(max_examples=150, deadline=None, derandomize=True, database=None)
+@given(batches())
+def test_arrow_clip_multi_row_batches_match_reference(rows):
+    b = pd.DataFrame([{"feature_id": fid, "kind": kind, "coords": coords,
+                       "props": None, "_z": z}
+                      for fid, (kind, coords, zs) in enumerate(rows)
+                      for z in zs])
+    want = sorted((int(r.z), int(r.x), int(r.y), int(r.feature_id),
+                   tuple(tuple(int(v) for v in ring) for ring in r.geom))
+                  for r in T.clip_reference_batch(b, EXTENT).itertuples())
+    for got in _production_batch(rows):
+        assert got == want

@@ -97,11 +97,9 @@ def test_lb_batched_matches_clip_segments_bbox():
 
 
 def test_covering_mask_matches_reference_kernels():
-    """Batched covering == polygon_covering_tiles / _line_covering_tiles per
+    """Batched covering == polygon_covering_tiles / line_covering_tiles per
     row, incl. big multi-tile polygons and diagonal lines at z 8-12,
     through the Arrow entry point slow_batch_arrow."""
-    from tile_gen_spark.operators.tiles import _line_covering_tiles
-
     rng = np.random.default_rng(23)
     rows = []
     for i in range(50):
@@ -123,7 +121,7 @@ def test_covering_mask_matches_reference_kernels():
         if kind == "polygon":
             tiles = K.polygon_covering_tiles(pts.ravel(), z)
         else:
-            tiles = _line_covering_tiles(pts.ravel(), z)
+            tiles = K.line_covering_tiles(pts.ravel(), z)
         want[idx] = {(int(a), int(b)) for a, b in tiles}
 
     rb = pa.RecordBatch.from_pylist(

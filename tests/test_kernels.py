@@ -138,8 +138,6 @@ def test_quantize_and_dedupe():
 def test_shoelace_and_winding():
     ccw = np.array([0, 0, 2, 0, 2, 2, 0, 2], dtype=float)
     assert K.ring_signed_area(ccw) == pytest.approx(4.0)
-    cw = K.normalize_winding(ccw, ccw=False)
-    assert K.ring_signed_area(cw) == pytest.approx(-4.0)
 
 
 def test_polygon_covering_tiles():

@@ -79,24 +79,27 @@ def mercator_to_lonlat(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.nda
 # Spark relational path, this numpy path, and the DuckDB oracle all agree.
 # ---------------------------------------------------------------------------
 
-def point_to_tile(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
-    n = float(1 << z)
+def point_to_tile(lon: np.ndarray, lat: np.ndarray,
+                  z: int | np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Tile (x, y) of each point at zoom ``z``: one zoom for all points, or
+    one per point (an array shaped like ``lon``)."""
+    n = np.ldexp(1.0, np.asarray(z, dtype=np.int32))   # exact 2^z
     # NaN/Inf are filtered upstream by the validity predicate (SURVEY.md P4);
     # defensively map them to 0.0 here so output stays in-range/deterministic.
     lon = np.nan_to_num(np.asarray(lon, dtype=np.float64), nan=0.0, posinf=180.0, neginf=-180.0)
     lat = np.nan_to_num(np.asarray(lat, dtype=np.float64), nan=0.0, posinf=MAX_LAT, neginf=-MAX_LAT)
-    lat = np.clip(lat, -MAX_LAT, MAX_LAT)
-    xt = np.floor((lon + 180.0) / 360.0 * n)
-    lat_r = np.radians(lat)
-    yt = np.floor((1.0 - np.log(np.tan(lat_r) + 1.0 / np.cos(lat_r)) / np.pi) / 2.0 * n)
-    xt = np.clip(xt, 0, n - 1).astype(np.int64)
-    yt = np.clip(yt, 0, n - 1).astype(np.int64)
+    xt = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+    yt = np.clip(np.floor(_merc_fy(lat, n)), 0, n - 1).astype(np.int64)
     return xt, yt
 
 
 # G3 — tile → lon/lat bounds (west, south, east, north)
 
 def tile_bounds(z: np.ndarray, x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Lon/lat bounds of tiles (x, y) at zoom ``z`` (one zoom, or one per
+    tile) — the one tile→bounds expression set every covering and clip path
+    shares, so dense grids, sparse candidates and the batched clip see
+    bit-identical bbox floats."""
     z = np.asarray(z, dtype=np.int64)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -225,12 +228,6 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -
 #   corner-in-polygon, (c) edge/bbox-edge intersection.
 # ---------------------------------------------------------------------------
 
-def _segments_intersect_bbox(r: np.ndarray, w: float, s: float, e: float, n: float) -> bool:
-    """Any polygon edge intersects the bbox boundary (Liang–Barsky per edge)."""
-    return bool(np.any(_edges_cross_bboxes(
-        r, np.array([w]), np.array([s]), np.array([e]), np.array([n]))))
-
-
 def _edges_cross_bboxes(r: np.ndarray, w: np.ndarray, s: np.ndarray,
                         e: np.ndarray, n: np.ndarray) -> np.ndarray:
     """For each of K bboxes, does ANY edge of polyline r intersect it?
@@ -259,18 +256,6 @@ def _edges_cross_bboxes(r: np.ndarray, w: np.ndarray, s: np.ndarray,
     return hit
 
 
-def _tile_bounds_for(z: int, xx: np.ndarray, yy: np.ndarray):
-    """Lon/lat bounds (w, s, e, n) for tile-index arrays at zoom z — the
-    single expression set every covering path shares, so dense grid and
-    sparse candidates see bit-identical bbox floats."""
-    n_t = float(1 << z)
-    w = xx / n_t * 360.0 - 180.0
-    e = (xx + 1.0) / n_t * 360.0 - 180.0
-    north = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * yy / n_t))))
-    south = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (yy + 1.0) / n_t))))
-    return w, south, e, north
-
-
 def _tile_bounds_grid(z: int, x0: int, x1: int, y0: int, y1: int):
     """Vectorized bounds for the candidate grid [x0..x1]×[y0..y1] at zoom z.
     Returns (xx, yy, w, s, e, n) flat arrays of length K."""
@@ -278,7 +263,7 @@ def _tile_bounds_grid(z: int, x0: int, x1: int, y0: int, y1: int):
     ys = np.arange(y0, y1 + 1, dtype=np.int64)
     XX, YY = np.meshgrid(xs, ys)
     xx, yy = XX.ravel(), YY.ravel()
-    w, south, e, north = _tile_bounds_for(z, xx, yy)
+    w, south, e, north = tile_bounds(z, xx, yy)
     return xx, yy, w, south, e, north
 
 
@@ -289,8 +274,8 @@ def grid_cap() -> int:
     return int(os.environ.get("TILEGEN_GRID_CAP", "65536"))
 
 
-def _merc_fy(lat: np.ndarray, n_t: float) -> np.ndarray:
-    """Float (unfloored) tile-y at zoom with 2^z = n_t."""
+def _merc_fy(lat: np.ndarray, n_t: float | np.ndarray) -> np.ndarray:
+    """Float (unfloored) tile-y at zoom with 2^z = n_t (lat clamped)."""
     lr = np.radians(np.clip(lat, -MAX_LAT, MAX_LAT))
     return (1.0 - np.log(np.tan(lr) + 1.0 / np.cos(lr)) / np.pi) / 2.0 * n_t
 
@@ -429,7 +414,7 @@ def polygon_covering_tiles(ring: np.ndarray, z: int,
                                     (ty << np.int64(32)) | tx]))
     xx = key & np.int64(0xFFFFFFFF)
     yy = key >> np.int64(32)
-    w, s, e, n = _tile_bounds_for(z, xx, yy)
+    w, s, e, n = tile_bounds(z, xx, yy)
     covered = np.zeros(xx.shape[0], dtype=bool)
     covered[np.searchsorted(key, (ty << np.int64(32)) | tx)] = True
     rem = ~covered
@@ -445,7 +430,7 @@ def polygon_covering_tiles(ring: np.ndarray, z: int,
     # scanline fill of non-candidate runs (uniform in/out per run)
     ry, rxa, rxb = _covering_runs(xx, yy, x0, x1, y0, y1)
     if ry.size:
-        rw, rs, _, _ = _tile_bounds_for(z, rxa, ry)
+        rw, rs, _, _ = tile_bounds(z, rxa, ry)
         fill = points_in_ring(rw, rs, r.ravel())
         ry, rxa, rxb = ry[fill], rxa[fill], rxb[fill]
         rl = rxb - rxa + 1
@@ -490,7 +475,7 @@ def line_covering_tiles(ring: np.ndarray, z: int,
                                     (ty << np.int64(32)) | tx]))
     xx = key & np.int64(0xFFFFFFFF)
     yy = key >> np.int64(32)
-    w, s, e, n = _tile_bounds_for(z, xx, yy)
+    w, s, e, n = tile_bounds(z, xx, yy)
     covered = np.zeros(xx.shape[0], dtype=bool)
     covered[np.searchsorted(key, (ty << np.int64(32)) | tx)] = True
     rem = ~covered
@@ -668,7 +653,7 @@ def dedupe_consecutive(qx: np.ndarray, qy: np.ndarray) -> tuple[np.ndarray, np.n
 
 
 # ---------------------------------------------------------------------------
-# G12 — shoelace signed area / winding normalization [MVT 2.1 §4.3.3.3]
+# G12 — shoelace signed area (MVT winding) [MVT 2.1 §4.3.3.3]
 # ---------------------------------------------------------------------------
 
 def ring_signed_area(ring: np.ndarray) -> float:
@@ -679,14 +664,6 @@ def ring_signed_area(ring: np.ndarray) -> float:
         return 0.0
     x, y = r[:, 0], r[:, 1]
     return 0.5 * float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
-
-
-def normalize_winding(ring: np.ndarray, ccw: bool = True) -> np.ndarray:
-    r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
-    a = ring_signed_area(r)
-    if (a < 0 and ccw) or (a > 0 and not ccw):
-        return r[::-1].copy()
-    return r
 
 
 # ---------------------------------------------------------------------------

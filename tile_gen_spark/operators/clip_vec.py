@@ -1,4 +1,5 @@
-"""Batched multi-tile clipping (the r3 "slow path" of clip_shapes_direct).
+"""The batched shape clip: both mapInArrow entry points of
+tiles.clip_shapes_flat and the ragged-array numpy they share.
 
 The r2 pipeline spent 74% of its local[32] wall time in per-(feature, zoom)
 Python: a covering-tiles kernel call per row plus a pure-Python
@@ -6,16 +7,20 @@ Sutherland–Hodgman / Liang–Barsky clip per covering tile (~0.38 ms/row of
 call overhead at 13.9M output rows). This module replaces that loop with
 ragged-array numpy over the WHOLE Arrow batch:
 
- - candidate tiles = the feature's vertex-tile bbox grid (exactly the grid
-   the covering kernel enumerated);
- - every (tile, ring) instance is clipped by FOUR vectorized half-plane
+ - multi-tile rows (slow_batch_arrow): candidate tiles = the feature's
+   vertex-tile bbox grid (exactly the grid the covering kernel enumerated);
+   every (tile, ring) instance is clipped by FOUR vectorized half-plane
    passes (Sutherland–Hodgman, same interpolation expression as
-   kernels.clip_ring_bbox_fast, so outputs are bit-identical);
- - lines run a vectorized Liang–Barsky over (tile, segment) instances with
+   kernels.clip_ring_bbox_fast, so outputs are bit-identical); lines run a
+   vectorized Liang–Barsky (_liang_barsky, the one copy of the parameter
+   loop, also the covering's edge test) over (tile, segment) instances with
    the same piece-joining rule as kernels.clip_segments_bbox;
- - quantize → dedupe → closing-strip → degenerate-drop → MVT winding runs
-   once over the flat instance arrays (shared finalize with the single-tile
-   fast path).
+ - single-tile rows (fast_batch_arrow): the clip is the identity, so each
+   (feature, zoom) unit is one instance per ring in its one tile;
+ - both then run the same quantize_instances → finalize_instances (dedupe
+   → closing-strip → degenerate-drop → MVT winding) → assemble_arrays over
+   the flat instance arrays. Tile ids and tile bounds come from
+   kernels.point_to_tile and kernels.tile_bounds.
 
 Dropping the explicit covering test is sound: a candidate tile disjoint
 from the geometry clips to a zero-area boundary chain (Sutherland–Hodgman
@@ -229,6 +234,28 @@ def clip_polys_batched(vx, vy, L, inst_unit, west, south, east, north):
     return vx, vy, L
 
 
+def _liang_barsky(x1, y1, x2, y2, w, s, e, n):
+    """Liang–Barsky parameter loop over (segment, bbox) instances, the
+    batched form of the per-segment loop in kernels.clip_segments_bbox and
+    kernels._edges_cross_bboxes (same four (p, q) pairs, same float order;
+    p == 0 implies a finite q, so their ``q < 0`` / ``q >= 0`` tests
+    agree). Returns (accept, t0, t1); the clipped piece is x1 + t·dx for t
+    in [t0, t1]."""
+    dx, dy = x2 - x1, y2 - y1
+    t0 = np.zeros(x1.size)
+    t1 = np.ones(x1.size)
+    ok = np.ones(x1.size, dtype=bool)
+    for p_a, q_a in ((-dx, x1 - w), (dx, e - x1), (-dy, y1 - s), (dy, n - y1)):
+        zero = p_a == 0
+        ok &= ~zero | (q_a >= 0)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            t = q_a / p_a
+        neg = p_a < 0
+        t0 = np.where(neg, np.maximum(t0, t), t0)
+        t1 = np.where(~neg & ~zero, np.minimum(t1, t), t1)
+    return ok & (t0 <= t1), t0, t1
+
+
 def clip_lines_batched(x1, y1, x2, y2, seg_unit, seg_first, west, south,
                        east, north):
     """Liang–Barsky over all (tile, segment) instances + piece assembly.
@@ -238,22 +265,10 @@ def clip_lines_batched(x1, y1, x2, y2, seg_unit, seg_first, west, south,
     previous segment was accepted, un-truncated at t1 == 1, and its exit
     point allcloses the next entry point).
     """
-    w_s, s_s = west[seg_unit], south[seg_unit]
-    e_s, n_s = east[seg_unit], north[seg_unit]
+    accept, t0, t1 = _liang_barsky(x1, y1, x2, y2, west[seg_unit],
+                                   south[seg_unit], east[seg_unit],
+                                   north[seg_unit])
     dx, dy = x2 - x1, y2 - y1
-    t0 = np.zeros(x1.size)
-    t1 = np.ones(x1.size)
-    reject = np.zeros(x1.size, dtype=bool)
-    for p_a, q_a in ((-dx, x1 - w_s), (dx, e_s - x1),
-                     (-dy, y1 - s_s), (dy, n_s - y1)):
-        zero = p_a == 0
-        reject |= zero & (q_a < 0)
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            t = q_a / p_a
-        neg = p_a < 0
-        t0 = np.where(neg, np.maximum(t0, t), t0)
-        t1 = np.where(~neg & ~zero, np.minimum(t1, t), t1)
-    accept = ~reject & (t0 <= t1)
     ax = x1 + t0 * dx
     ay = y1 + t0 * dy
     bx = x1 + t1 * dx
@@ -291,38 +306,16 @@ def clip_lines_batched(x1, y1, x2, y2, seg_unit, seg_first, west, south,
     return pvx, pvy, pieceL, piece_unit
 
 
-def _lb_edges_hit(units, iu, x1, y1, x2, y2, west, south, east, north,
-                  n_unit: int) -> np.ndarray:
-    """kernels._edges_cross_bboxes batched over (unit, edge) instances:
-    per-unit boolean 'any edge Liang–Barsky-accepts against the tile bbox'."""
-    w_i, s_i = west[iu], south[iu]
-    e_i, n_i = east[iu], north[iu]
-    dx, dy = x2 - x1, y2 - y1
-    t0 = np.zeros(x1.size)
-    t1 = np.ones(x1.size)
-    ok = np.ones(x1.size, dtype=bool)
-    for p_a, q_a in ((-dx, x1 - w_i), (dx, e_i - x1),
-                     (-dy, y1 - s_i), (dy, n_i - y1)):
-        zero = p_a == 0
-        ok &= ~zero | (q_a >= 0)
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            t = q_a / p_a
-        neg = p_a < 0
-        t0 = np.where(neg, np.maximum(t0, t), t0)
-        t1 = np.where(~neg & ~zero, np.minimum(t1, t), t1)
-    acc = ok & (t0 <= t1)
-    return np.bincount(iu[acc], minlength=n_unit) > 0
-
-
-def _covering_mask(n_rows, n_unit, unit_row, unit_base, ux, uy, west, south,
-                   east, north, verts, S0, L0, xt, yt, x0, y0, gx,
+def _covering_mask(n_rows, n_unit, unit_row, unit_base, west, south, east,
+                   north, verts, S0, L0, xt, yt, x0, y0, gx,
                    is_line_row) -> np.ndarray:
     """Batched replication of kernels.polygon_covering_tiles /
-    tiles._line_covering_tiles over every candidate unit: (a) vertex-tile
+    kernels.line_covering_tiles over every candidate unit: (a) vertex-tile
     marking, (b) tile-corner-in-ring (polygons; even-odd + the kernel's
     exact on-edge rule, wraparound edges of the allclose-stripped ring),
     (c) any-edge Liang–Barsky accept (closed ring for polygons, raw
-    polyline for lines). Same tests, same tolerances, same floats — so the
+    polyline for lines; kernels._edges_cross_bboxes batched over (unit,
+    edge) instances). Same tests, same tolerances, same floats — so the
     kept tile set equals the reference covering exactly."""
     covered = np.zeros(n_unit, dtype=bool)
 
@@ -389,18 +382,19 @@ def _covering_mask(n_rows, n_unit, unit_row, unit_base, ux, uy, west, south,
         iu = np.repeat(rem, ne)
         j = _ragged_arange(ne)
         i1 = crS[unit_row[iu]] + j
-        covered |= _lb_edges_hit(rem, iu, crx[i1], cry[i1], crx[i1 + 1],
-                                 cry[i1 + 1], west, south, east, north,
-                                 n_unit)
+        hit = _liang_barsky(crx[i1], cry[i1], crx[i1 + 1], cry[i1 + 1],
+                            west[iu], south[iu], east[iu], north[iu])[0]
+        covered |= np.bincount(iu[hit], minlength=n_unit) > 0
     rem = np.nonzero(~poly_u & ~covered)[0]
     if rem.size:
         ne = L0[unit_row[rem]] - 1
         iu = np.repeat(rem, ne)
         j = _ragged_arange(ne)
         i1 = np.repeat(S0[unit_row[rem]], ne) + j
-        covered |= _lb_edges_hit(rem, iu, verts[i1, 0], verts[i1, 1],
-                                 verts[i1 + 1, 0], verts[i1 + 1, 1],
-                                 west, south, east, north, n_unit)
+        hit = _liang_barsky(verts[i1, 0], verts[i1, 1], verts[i1 + 1, 0],
+                            verts[i1 + 1, 1], west[iu], south[iu], east[iu],
+                            north[iu])[0]
+        covered |= np.bincount(iu[hit], minlength=n_unit) > 0
     return covered
 
 
@@ -414,21 +408,19 @@ def _row_weights_arrays(zs: np.ndarray, nv: np.ndarray, r0_start: np.ndarray,
     into the global ``verts``) and per-row total vertex counts; returns
     (weight, grid_cells) so slow_batch_arrow can route bbox-sparse rows
     (grid over TILEGEN_GRID_CAP) to _sparse_one_row_parts."""
-    idx = _gather(r0_start, r0_len)
-    lon = np.nan_to_num(verts[idx, 0], nan=0.0, posinf=180.0, neginf=-180.0)
-    lat = np.clip(np.nan_to_num(verts[idx, 1], nan=0.0, posinf=K.MAX_LAT,
-                                neginf=-K.MAX_LAT), -K.MAX_LAT, K.MAX_LAT)
-    n_v = np.repeat(np.power(2.0, zs.astype(np.float64)), r0_len)
-    xt = np.clip(np.floor((lon + 180.0) / 360.0 * n_v), 0, n_v - 1)
-    lat_r = np.radians(lat)
-    yt = np.clip(np.floor(
-        (1.0 - np.log(np.tan(lat_r) + 1.0 / np.cos(lat_r)) / np.pi) / 2.0 * n_v),
-        0, n_v - 1)
-    S = np.cumsum(r0_len) - r0_len
-    grid = ((np.maximum.reduceat(xt, S) - np.minimum.reduceat(xt, S) + 1.0)
-            * (np.maximum.reduceat(yt, S) - np.minimum.reduceat(yt, S) + 1.0)
-            ).astype(np.int64)
+    _, _, x0, x1, y0, y1 = _vertex_tile_bbox(zs, verts, r0_start, r0_len)
+    grid = (x1 - x0 + 1) * (y1 - y0 + 1)
     return np.maximum(grid * nv, 1), grid
+
+
+def _vertex_tile_bbox(zs, verts, S0, L0):
+    """Per-vertex tiles (xt, yt) of each row's ring ``verts[S0:S0+L0]`` at
+    the row's zoom, and each row's tile bbox (x0, x1, y0, y1)."""
+    v = _gather(S0, L0)
+    xt, yt = K.point_to_tile(verts[v, 0], verts[v, 1], np.repeat(zs, L0))
+    vS = np.cumsum(L0) - L0
+    return (xt, yt, np.minimum.reduceat(xt, vS), np.maximum.reduceat(xt, vS),
+            np.minimum.reduceat(yt, vS), np.maximum.reduceat(yt, vS))
 
 
 def slow_cap() -> int:
@@ -496,7 +488,7 @@ def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
         ku = t.shape[0]
         ux = t[:, 0].astype(np.int64)
         uy = t[:, 1].astype(np.int64)
-        west, south, east, north = K._tile_bounds_for(z, ux, uy)
+        west, south, east, north = K.tile_bounds(z, ux, uy)
         parts.extend(_clip_units_parts(
             is_line1, rrc, rfr, ring_len, ring_start, verts,
             np.zeros(ku, np.int64), np.full(ku, z, np.int64), ux, uy,
@@ -534,22 +526,7 @@ def covering_units(zs, verts, S0, L0, is_line_row):
     and the PIP zone covering (spatial_join). Returns (unit_row, unit_z, ux,
     uy, west, south, east, north, cov)."""
     n_rows = zs.size
-    v0 = _gather(S0, L0)
-    lon0 = np.nan_to_num(verts[v0, 0], nan=0.0, posinf=180.0, neginf=-180.0)
-    lat0 = np.clip(np.nan_to_num(verts[v0, 1], nan=0.0, posinf=K.MAX_LAT,
-                                 neginf=-K.MAX_LAT), -K.MAX_LAT, K.MAX_LAT)
-    nz_v = np.repeat(np.power(2.0, zs.astype(np.float64)), L0)
-    xt = np.clip(np.floor((lon0 + 180.0) / 360.0 * nz_v), 0, nz_v - 1).astype(np.int64)
-    lr = np.radians(lat0)
-    yt = np.clip(np.floor(
-        (1.0 - np.log(np.tan(lr) + 1.0 / np.cos(lr)) / np.pi) / 2.0 * nz_v),
-        0, nz_v - 1).astype(np.int64)
-    vS = np.cumsum(L0) - L0
-    x0 = np.minimum.reduceat(xt, vS)
-    x1g = np.maximum.reduceat(xt, vS)
-    y0 = np.minimum.reduceat(yt, vS)
-    y1g = np.maximum.reduceat(yt, vS)
-
+    xt, yt, x0, x1g, y0, y1g = _vertex_tile_bbox(zs, verts, S0, L0)
     gx = x1g - x0 + 1
     Ku = gx * (y1g - y0 + 1)
     unit_base = np.cumsum(Ku) - Ku
@@ -560,19 +537,14 @@ def covering_units(zs, verts, S0, L0, is_line_row):
     n_unit = unit_row.size
     unit_z = zs[unit_row]
 
-    # tile lon/lat bounds (identical expressions to the reference loop)
-    n_t = np.power(2.0, unit_z.astype(np.float64))
-    west = ux / n_t * 360.0 - 180.0
-    east = (ux + 1.0) / n_t * 360.0 - 180.0
-    north = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * uy / n_t))))
-    south = np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * (uy + 1.0) / n_t))))
+    west, south, east, north = K.tile_bounds(unit_z, ux, uy)
 
     # --- covering filter: keep only tiles the reference covering kernels
     # would emit (grid candidates outside the geometry would otherwise leak
     # rare quantization slivers past the degenerate-drop) -------------------
-    cov = _covering_mask(n_rows, n_unit, unit_row, unit_base, ux, uy,
-                         west, south, east, north, verts, S0, L0,
-                         xt, yt, x0, y0, gx, is_line_row)
+    cov = _covering_mask(n_rows, n_unit, unit_row, unit_base, west, south,
+                         east, north, verts, S0, L0, xt, yt, x0, y0, gx,
+                         is_line_row)
     return unit_row, unit_z, ux, uy, west, south, east, north, cov
 
 
@@ -662,8 +634,9 @@ def parts_to_batches(parts: list[tuple]):
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native entry points (guide §4.2): slow_batch_arrow here and
-# tiles._fast_batch_arrow are the mapInArrow front-ends of the shape clip —
+# Arrow-native entry points (guide §4.2): slow_batch_arrow (multi-tile
+# zooms) and fast_batch_arrow (single-tile zooms) are the mapInArrow
+# front-ends of the shape clip and share one quantize/finalize/assemble —
 # ring structures decoded straight from the ListArray offset/value buffers
 # (no per-row Python lists on input) and output RecordBatches built from the
 # assemble_arrays buffers (no np.split/tolist per row on output). Their
@@ -775,3 +748,52 @@ def slow_batch_arrow(rb, extent: int, cap: int | None = None,
                 ring_start[rs:re], row_ring_count[a:b_],
                 row_first_ring[a:b_ + 1] - rs, extent))
     return parts_to_batches(parts)
+
+
+def _fast_core(is_line: np.ndarray, fids: np.ndarray,
+               feat_ring_count: np.ndarray, feat_first_ring: np.ndarray,
+               ring_len: np.ndarray, ring_start: np.ndarray, verts: np.ndarray,
+               unit_feat: np.ndarray, unit_z: np.ndarray, extent: int) -> list:
+    """Vectorized single-tile clip: every (feature, z) unit is guaranteed
+    (by the relational corner-tile split in tiles.clip_shapes_flat) to fit
+    in ONE tile at z, so the clip is the identity and the batch reduces to
+    the multi-tile clip's quantize + finalize + assemble over one instance
+    per (unit, ring), the tile taken from vertex 0 of ring 0. Output equals
+    the per-row loop behind tiles.clip_shapes_reference (pinned by the
+    fastpath parity pytest and the differential tests)."""
+    n_unit = unit_feat.size
+    inst_per_unit = feat_ring_count[unit_feat]
+    inst_unit = np.repeat(np.arange(n_unit), inst_per_unit)
+    ring_ord = _ragged_arange(inst_per_unit)
+    inst_ring = feat_first_ring[unit_feat[inst_unit]] + ring_ord
+    v0 = ring_start[feat_first_ring[unit_feat]]
+    tx, ty = K.point_to_tile(verts[v0, 0], verts[v0, 1], unit_z)
+    L = ring_len[inst_ring]
+    vidx = _gather(ring_start[inst_ring], L)
+    qx, qy = quantize_instances(verts[vidx, 0], verts[vidx, 1], L, inst_unit,
+                                unit_z, tx, ty, extent)
+    fin = finalize_instances(qx, qy, L, inst_unit,
+                             ~is_line[unit_feat[inst_unit]], ring_ord, n_unit)
+    return [assemble_arrays(*fin, inst_unit, unit_z, tx, ty, fids[unit_feat])]
+
+
+def fast_batch_arrow(rb, extent: int):
+    """One input RecordBatch of single-tile rows (feature_id, kind, coords,
+    _zs = array<int> of the feature's single-tile zooms) → list of
+    CLIP_FLAT_SCHEMA RecordBatches. Rings are decoded unstripped (lines keep
+    all rings; the closing vertex goes in finalize_instances)."""
+    if rb.num_rows == 0:
+        return []
+    import pyarrow.compute as pc
+    (is_line, ring_len, ring_start, verts, feat_ring_count, feat_first_ring,
+     _raw) = decode_clip_rings(rb, strip=False)
+    fids = np.asarray(rb.column(rb.schema.names.index("feature_id"))).astype(np.int64)
+    zs_col = rb.column(rb.schema.names.index("_zs"))
+    m = np.asarray(pc.list_value_length(zs_col)).astype(np.int64)
+    unit_z = np.asarray(pc.list_flatten(zs_col)).astype(np.int64)
+    unit_feat = np.repeat(np.arange(rb.num_rows), m)
+    if unit_feat.size == 0:
+        return []
+    return parts_to_batches(_fast_core(
+        is_line, fids, feat_ring_count, feat_first_ring, ring_len, ring_start,
+        verts, unit_feat, unit_z, extent))

@@ -6,8 +6,10 @@ fingerprinting) — all expressed as dialect-parametrized SQL (Spark SQL +
 DuckDB) generated from one builder, so every operator has a true cross-engine
 oracle. Everything is JVM-side built-in functions on the Spark path (split /
 transform / explode / md5 / window) — zero Python UDFs; at 100 TB the only
-shuffles are the groupBys on doc_id/bucket keys, and the LSH band join
-replaces the quadratic all-pairs comparison.
+shuffles are the groupBys on doc_id/bucket keys, one explicit
+``REPARTITION(doc_id, sh)`` exchange over the MinHash shingles (so every
+consumer reuses one materialization; see q_minhash_pairs), and the
+LSH band join, which replaces the quadratic all-pairs comparison.
 
 Hash portability: 60-bit md5 prefix (plans/sqlgen.md5_bigint) reduced mod the
 Mersenne prime 2^31-1 before the per-function affine step, so products stay

@@ -11,9 +11,12 @@ Scale design:
    plans/sqlgen.py — no Python crossing at all), so Catalyst pushes filters
    and prunes columns around it, and it whole-stage-codegens.
  - Polygon/line covering + clipping are Arrow-native ``mapInArrow`` passes
-   over ragged numpy (single-tile zooms: _fast_batch_arrow; multi-tile
-   zooms: clip_vec.slow_batch_arrow) — the only Python crossings, placed
-   AFTER relational filters (UDF-barrier management, SURVEY.md §4.2).
+   over ragged numpy, both in clip_vec (single-tile zooms:
+   fast_batch_arrow; multi-tile zooms: slow_batch_arrow; one shared
+   quantize/finalize) — the only Python crossings, placed AFTER relational
+   filters (UDF-barrier management, SURVEY.md §4.2). This module keeps the
+   Spark plan around them and the per-row reference clip
+   (clip_reference_batch), which shares none of their batched code.
  - The per-tile ``collect_list`` agg (tile_feature_lists_dim) runs on ONE
    over-partitioned hash(tile key) exchange and ignores ``salt``; the salted
    two-phase shape (agg by (z,x,y,salt) then flatten, A2/J9) remains in the
@@ -32,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
+from .clip_vec import fast_batch_arrow, slow_batch_arrow
 
 ASSIGN_SCHEMA = "feature_id bigint, z int, x bigint, y bigint"
 CLIP_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, kind string, "
@@ -157,7 +161,7 @@ def assign_shapes(shapes: DataFrame, zooms: list[int]) -> DataFrame:
                     if kind == "polygon":
                         tiles = K.polygon_covering_tiles(ring, z, cap=gcap)
                     else:
-                        tiles = _line_covering_tiles(ring, z, cap=gcap)
+                        tiles = K.line_covering_tiles(ring, z, cap=gcap)
                     for xx, yy in tiles:
                         fid_o.append(fid)
                         z_o.append(z)
@@ -171,13 +175,6 @@ def assign_shapes(shapes: DataFrame, zooms: list[int]) -> DataFrame:
             })
 
     return shapes.select("feature_id", "kind", "coords").mapInPandas(fn, ASSIGN_SCHEMA)
-
-
-def _line_covering_tiles(ring: np.ndarray, z: int,
-                         cap: int | None = None) -> np.ndarray:
-    """Tiles whose bbox a polyline touches (kernels.line_covering_tiles:
-    dense grid under ``cap`` cells, O(covered) segment walk above)."""
-    return K.line_covering_tiles(ring, z, cap=cap)
 
 
 def assign_features(features: DataFrame, zooms: list[int]) -> DataFrame:
@@ -211,141 +208,6 @@ def clip_points_relational(points: DataFrame, zooms: list[int],
                        F.explode(F.array(*entries)).alias("t"))
             .select("t.z", "t.x", "t.y", "feature_id", "kind",
                     F.array(F.array("t.qx", "t.qy")).alias("geom"), "props"))
-
-
-def _fast_core(is_line: np.ndarray, fids: np.ndarray,
-               feat_ring_count: np.ndarray, ring_len: np.ndarray,
-               ring_start: np.ndarray, verts: np.ndarray,
-               unit_feat: np.ndarray, unit_z: np.ndarray, extent: int) -> list:
-    """Vectorized single-tile clip: every (feature, z) unit is guaranteed
-    (by the relational corner-tile split in clip_shapes_flat) to fit in ONE
-    tile at z, so the clip is the identity and the whole batch reduces to
-    quantize + dedupe + winding — computed with numpy over ONE flat vertex
-    array instead of per-row kernel calls (the r2 profile showed ~0.38
-    ms/row of per-call overhead; this path amortizes it to ~µs/row).
-
-    Flattened ring structures in, assemble_arrays part tuples out (the r4
-    FLAT transport: one concatenated int array + ring prefix offsets, no
-    kind/props — those rejoin post-agg). Semantics identical to the per-row
-    loop behind clip_shapes_reference (quantize_to_tile →
-    dedupe_consecutive → closing-vertex strip → degenerate-ring drop → MVT
-    winding), pinned by the fastpath parity pytest and the differential
-    test. Called by _fast_batch_arrow."""
-    from .clip_vec import assemble_arrays
-    n_unit = unit_feat.size
-    feat_first_ring = np.concatenate([[0], np.cumsum(feat_ring_count)])
-    inst_per_unit = feat_ring_count[unit_feat]
-    inst_unit = np.repeat(np.arange(n_unit), inst_per_unit)
-    tot_inst = inst_unit.size
-    ring_ord = np.arange(tot_inst) - np.repeat(
-        np.cumsum(inst_per_unit) - inst_per_unit, inst_per_unit)
-    inst_ring = feat_first_ring[unit_feat[inst_unit]] + ring_ord
-
-    # --- tile id per unit: vertex 0 of ring 0 (single-tile ⇒ any vertex) --
-    nz = np.power(2.0, unit_z.astype(np.float64))
-    v0 = ring_start[feat_first_ring[unit_feat]]
-    lon0 = verts[v0, 0]
-    lat0 = np.clip(verts[v0, 1], -K.MAX_LAT, K.MAX_LAT)
-    tx = np.clip(np.floor((lon0 + 180.0) / 360.0 * nz), 0, nz - 1).astype(np.int64)
-    l0r = np.radians(lat0)
-    ty = np.clip(np.floor(
-        (1.0 - np.log(np.tan(l0r) + 1.0 / np.cos(l0r)) / np.pi) / 2.0 * nz),
-        0, nz - 1).astype(np.int64)
-
-    # --- quantize every vertex of every instance (kernels.quantize_to_tile
-    # formula, elementwise z/x/y) -------------------------------------------
-    L = ring_len[inst_ring]
-    V = int(L.sum())
-    starts = ring_start[inst_ring]
-    off = np.arange(V) - np.repeat(np.cumsum(L) - L, L)
-    vidx = np.repeat(starts, L) + off
-    vlon = verts[vidx, 0]
-    vlat = np.clip(verts[vidx, 1], -K.MAX_LAT, K.MAX_LAT)
-    n_v = np.repeat(nz[inst_unit], L)
-    fx = (vlon + 180.0) / 360.0 * n_v - np.repeat(tx[inst_unit].astype(np.float64), L)
-    vlr = np.radians(vlat)
-    fy = ((1.0 - np.log(np.tan(vlr) + 1.0 / np.cos(vlr)) / np.pi) / 2.0 * n_v
-          - np.repeat(ty[inst_unit].astype(np.float64), L))
-    qx = np.clip(np.floor(fx * extent + 0.5).astype(np.int64), 0, extent)
-    qy = np.clip(np.floor(fy * extent + 0.5).astype(np.int64), 0, extent)
-
-    # --- dedupe consecutive (per instance) ---------------------------------
-    inst_vstart = np.cumsum(L) - L
-    v_inst = np.repeat(np.arange(tot_inst), L)
-    keep = np.zeros(V, dtype=bool)
-    keep[inst_vstart[L > 0]] = True
-    keep[1:] |= (qx[1:] != qx[:-1]) | (qy[1:] != qy[:-1])
-    qx2, qy2 = qx[keep], qy[keep]
-    # bincount (not reduceat): stays correct for zero-length instances
-    L2 = np.bincount(v_inst, weights=keep, minlength=tot_inst).astype(np.int64)
-    S2 = np.cumsum(L2) - L2
-
-    # --- closing-vertex strip (polygons only) ------------------------------
-    inst_is_poly = ~is_line[unit_feat[inst_unit]]
-    last2 = S2 + L2 - 1
-    if qx2.size:
-        hi = qx2.size - 1
-        sS, sE = np.minimum(S2, hi), np.clip(last2, 0, hi)
-        closed = (inst_is_poly & (L2 >= 2)
-                  & (qx2[sS] == qx2[sE]) & (qy2[sS] == qy2[sE]))
-    else:
-        closed = np.zeros(tot_inst, dtype=bool)
-    keep2 = np.ones(qx2.size, dtype=bool)
-    keep2[last2[closed]] = False
-    qx3, qy3 = qx2[keep2], qy2[keep2]
-    L3 = L2 - closed
-    S3 = np.cumsum(L3) - L3
-
-    # --- shoelace area per instance (exact in float64: |terms| < 2^26) -----
-    nxt = np.arange(qx3.size) + 1
-    last3 = S3 + L3 - 1
-    nz3 = L3 > 0
-    nxt[last3[nz3]] = S3[nz3]
-    x3f = qx3.astype(np.float64)
-    y3f = qy3.astype(np.float64)
-    cross = x3f * y3f[nxt] - x3f[nxt] * y3f
-    inst3 = np.repeat(np.arange(tot_inst), L3)
-    area2 = np.bincount(inst3, weights=cross, minlength=tot_inst)
-    area2[L3 < 3] = 0.0
-
-    # --- validity + winding (MVT 2.1 §4.3.3.3) ------------------------------
-    poly_ok = inst_is_poly & (L3 >= 3) & (area2 != 0.0)
-    line_ok = ~inst_is_poly & (L3 >= 2)
-    ext_dead = inst_is_poly & (ring_ord == 0) & ~poly_ok
-    unit_dead = np.zeros(n_unit, dtype=bool)
-    unit_dead[inst_unit[ext_dead]] = True
-    inst_keep = (poly_ok | line_ok) & ~unit_dead[inst_unit]
-    flip = poly_ok & ((area2 > 0.0) != (ring_ord == 0))
-
-    # --- assemble (flat geom + prefix offsets, off NULL when single-piece)
-    # — array buffers out
-    return [assemble_arrays(qx3, qy3, S3, L3, inst_keep, flip, inst_unit,
-                            unit_z, tx, ty, fids[unit_feat])]
-
-
-def _fast_batch_arrow(rb, extent: int):
-    """Arrow entry point of the single-tile clip (guide §4.2): one input
-    RecordBatch (feature_id, kind, coords, _zs = array<int> of the
-    feature's single-tile zooms) → list of CLIP_FLAT_SCHEMA RecordBatches.
-    Ring structures come straight from the ListArray buffers (no per-row
-    Python lists, no closing strip, lines keep all rings); output batches
-    are built from the assemble buffers."""
-    from .clip_vec import decode_clip_rings, parts_to_batches
-    if rb.num_rows == 0:
-        return []
-    import pyarrow.compute as pc
-    (is_line, ring_len, ring_start, verts, feat_ring_count, _ffr,
-     _raw) = decode_clip_rings(rb, strip=False)
-    fids = np.asarray(rb.column(rb.schema.names.index("feature_id"))).astype(np.int64)
-    zs_col = rb.column(rb.schema.names.index("_zs"))
-    m = np.asarray(pc.list_value_length(zs_col)).astype(np.int64)
-    unit_z = np.asarray(pc.list_flatten(zs_col)).astype(np.int64)
-    unit_feat = np.repeat(np.arange(rb.num_rows), m)
-    if unit_feat.size == 0:
-        return []
-    parts = _fast_core(is_line, fids, feat_ring_count, ring_len, ring_start,
-                       verts, unit_feat, unit_z, extent)
-    return parts_to_batches(parts)
 
 
 def _n_clip_parts(df: DataFrame) -> int:
@@ -400,7 +262,7 @@ def clip_reference_batch(b: pd.DataFrame, extent: int = K.MVT_EXTENT,
         if kind == "polygon":
             tiles = K.polygon_covering_tiles(ring, z, cap=gcap)
         else:
-            tiles = _line_covering_tiles(ring, z, cap=gcap)
+            tiles = K.line_covering_tiles(ring, z, cap=gcap)
         if tiles.shape[0] == 0:
             continue
         n_t = float(1 << z)
@@ -471,8 +333,8 @@ def clip_shapes_direct(shapes: DataFrame, zooms: list[int],
     Zoom split (r3): a relational corner-tile test (same G2 SQL text as the
     point path) partitions each feature's zooms into SINGLE-TILE zooms
     (bbox corners share a tile ⇒ the clip is the identity — the vectorized
-    _fast_batch_arrow handles thousands of rows per numpy call and ships
-    coords ONCE per feature instead of once per zoom) and MULTI-TILE zooms
+    clip_vec.fast_batch_arrow handles thousands of rows per numpy call and
+    ships coords ONCE per feature instead of once per zoom) and MULTI-TILE zooms
     (the batched covering+clip of clip_vec.slow_batch_arrow). Monotonicity
     makes the split exact: if the bbox fits one tile at z it fits at every
     z' < z. Output rows equal clip_shapes_reference's."""
@@ -571,10 +433,9 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
     # rebuilt as ListArray (values, offsets) pairs with zero per-row Python
     fast_out = fast.mapInArrow(
         lambda batches: (out for rb in batches
-                         for out in _fast_batch_arrow(rb, extent)),
+                         for out in fast_batch_arrow(rb, extent)),
         CLIP_FLAT_SCHEMA)
 
-    from .clip_vec import slow_batch_arrow
     # The (feature_id, _z) re-spread ships coords once per multi-tile zoom
     # (~3.4× the barrier's bytes — 143 vs 42 MB). An r7 ABBA A/B of dropping
     # it (inheriting the barrier's hash(feature_id) spread) measured −0.5 s

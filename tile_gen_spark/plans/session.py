@@ -2,7 +2,8 @@
 
 Settings chosen for the 100 TB design point, applied identically in local
 mode (``local[N]``, N = SPARK_GRAFT_CPUS, default the cores this process
-may run on): AQE on (skew-join splitting + partition coalescing,
+may run on; driver heap SPARK_DRIVER_MEM, default half the machine's RAM up
+to 16g): AQE on (skew-join splitting + partition coalescing,
 ``BASELINE.json:6,14``), Arrow enabled for every Python crossing
 (``BASELINE.json:15``), shuffle partitions sized to the parallelism.
 """
@@ -12,6 +13,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_mem() -> str:
+    """Half the machine's physical memory, capped at 16g. Local mode runs
+    every executor thread in the driver heap, and shuffle files share the
+    rest of RAM when they go to tmpfs."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return f"{min(half_mb, 16 << 10)}m"
 
 
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,
@@ -44,9 +53,11 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
                 os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
         .config("spark.sql.session.timeZone", "UTC")
         # single-JVM local mode puts ALL executor threads in the driver heap;
-        # 16g measured flat-stable across reps — 8g went GC-bound on heavy
-        # 32-thread stages, 48g spiked on heap expansion (4s → 50s outliers)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # 16g measured flat-stable across reps on a 32-core box — 8g went
+        # GC-bound on heavy 32-thread stages, 48g spiked on heap expansion
+        # (4s → 50s outliers). Smaller boxes get half their RAM.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem())
         # UI off for bench hygiene (per-stage metrics come from the event log)
         .config("spark.ui.enabled", "false")
     )
