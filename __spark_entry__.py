@@ -15,7 +15,6 @@ are exposed as rows-only queries (no oracle entry) per the driver contract.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -717,7 +716,7 @@ def _run_tile_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.lit("polygon").alias("kind"),
                      F.array("ring").alias("coords"),
                      F.create_map(F.lit("zone"), F.col("zone_id").cast("string")).alias("props")))
-    tiles = build_tile_features(feats, [4, 7], salt=2)
+    tiles = build_tile_features(feats, [4, 7])
     return tiles.select("z", "x", "y", "n_features")
 
 
@@ -860,11 +859,7 @@ def _run_near_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.table("embeddings")
     pairs = embedding_near_dup_pairs(emb, **_ENDUP)
     verts = emb.select(F.col("vec_id").alias("id"))
-    # ADVICE r5: surface the non-convergence knob — templated/drifting
-    # corpora can have deeper-than-default components
-    return near_dup_groups(
-        verts, pairs,
-        max_iter=int(os.environ.get("TILEGEN_CC_MAX_ITER", "25")))
+    return near_dup_groups(verts, pairs)
 
 
 def q_near_dup_groups_oracle(d: str) -> str:

@@ -118,7 +118,7 @@ def sec_tile_pipeline() -> dict:
     warm = spark.read.parquet(pages_path).limit(2000)
     build_tile_features(
         validity_filter(extract_and_parse(latest_per_url(warm))),
-        ZOOMS, salt=8).count()
+        ZOOMS).count()
 
     state: dict = {}
 
@@ -128,7 +128,7 @@ def sec_tile_pipeline() -> dict:
         # persist: the point and shape paths both branch from `feats`, and
         # union branches re-execute shared subtrees (no cross-branch CSE)
         feats = validity_filter(extract_and_parse(latest)).persist()
-        tiles = build_tile_features(feats, ZOOMS, salt=8)
+        tiles = build_tile_features(feats, ZOOMS)
         nt, nf = tiles.select(F.count("*"), F.sum("n_features")).first()
         feats.unpersist()
         state["n_tiles"], state["n_feat"] = int(nt), int(nf)

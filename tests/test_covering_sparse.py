@@ -3,7 +3,7 @@
 The covering kernels' dense candidate grid is O(bbox area): a
 continent-spanning diagonal linestring at z12 has a ~16.7M-cell bbox grid
 (six float64 arrays ≈ 800 MB) for O(10^3) actually-covered tiles — a
-worker-OOM at scale. Above TILEGEN_GRID_CAP cells the kernels now switch to
+worker-OOM at scale. Above K.GRID_CAP cells the kernels now switch to
 a per-segment column walk producing O(covered) candidates, re-apply the
 SAME exact covering tests, and (polygons) scanline-fill interior runs.
 
@@ -16,20 +16,12 @@ import tracemalloc
 
 import numpy as np
 import pyarrow as pa
-import pytest
 
 import tile_gen_spark.functions.kernels as K
 import tile_gen_spark.operators.clip_vec as CV
 
-DENSE = "100000000"   # cap high => always dense
-SPARSE = "1"          # cap low  => always sparse
-
-
-@pytest.fixture
-def grid_cap(monkeypatch):
-    def set_cap(v: str):
-        monkeypatch.setenv("TILEGEN_GRID_CAP", v)
-    return set_cap
+DENSE = 100_000_000   # cap high => always dense
+SPARSE = 1            # cap low  => always sparse
 
 
 def _sorted(t: np.ndarray) -> np.ndarray:
@@ -45,19 +37,17 @@ def _rand_ring(rng, scale):
     return np.column_stack([lon, lat])
 
 
-def test_sparse_equals_dense_fuzz(grid_cap):
+def test_sparse_equals_dense_fuzz():
     """Random polygons/lines, z3–z10: sparse output == dense output exactly
     (same tiles, same raster order)."""
     rng = np.random.default_rng(1234)
     for _ in range(40):
         ring = _rand_ring(rng, float(rng.uniform(0.1, 30.0)))
         z = int(rng.integers(3, 11))
-        grid_cap(DENSE)
-        dp = K.polygon_covering_tiles(ring, z)
-        dl = K.line_covering_tiles(ring, z)
-        grid_cap(SPARSE)
-        sp = K.polygon_covering_tiles(ring, z)
-        sl = K.line_covering_tiles(ring, z)
+        dp = K.polygon_covering_tiles(ring, z, cap=DENSE)
+        dl = K.line_covering_tiles(ring, z, cap=DENSE)
+        sp = K.polygon_covering_tiles(ring, z, cap=SPARSE)
+        sl = K.line_covering_tiles(ring, z, cap=SPARSE)
         assert np.array_equal(_sorted(dp), _sorted(sp))
         assert np.array_equal(_sorted(dl), _sorted(sl))
         # sparse emits the dense grid's raster order directly
@@ -65,28 +55,25 @@ def test_sparse_equals_dense_fuzz(grid_cap):
         assert np.array_equal(sl, _sorted(sl))
 
 
-def test_sparse_polygon_with_hole_and_concave(grid_cap):
+def test_sparse_polygon_with_hole_and_concave():
     """Concave ring (interior-run fill must flip in/out mid-row)."""
     # star polygon: alternating radii => many concave notches
     ang = np.linspace(0, 2 * np.pi, 20, endpoint=False)
     rad = np.where(np.arange(20) % 2 == 0, 25.0, 8.0)
     ring = np.column_stack([rad * np.cos(ang), rad * np.sin(ang) + 5])
     for z in (5, 6, 7, 8):
-        grid_cap(DENSE)
-        d = K.polygon_covering_tiles(ring, z)
-        grid_cap(SPARSE)
-        s = K.polygon_covering_tiles(ring, z)
+        d = K.polygon_covering_tiles(ring, z, cap=DENSE)
+        s = K.polygon_covering_tiles(ring, z, cap=SPARSE)
         assert np.array_equal(_sorted(d), _sorted(s))
 
 
-def test_antimeridian_diagonal_line_z12_bounded(grid_cap):
+def test_antimeridian_diagonal_line_z12_bounded():
     """The r4 VERDICT scale-killer: antimeridian-to-antimeridian diagonal at
     z12. Dense grid would be ~16.7M cells (~800 MB of float64 bounds);
     the sparse walk must stay under 32 MB peak and O(covered) output."""
     line = np.array([[-179.9, -80.0], [179.9, 80.0]])
-    grid_cap("65536")   # production default
     tracemalloc.start()
-    tiles = K.line_covering_tiles(line, 12)
+    tiles = K.line_covering_tiles(line, 12)   # production default cap
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     assert peak < 32 * 1024 * 1024
@@ -98,12 +85,11 @@ def test_antimeridian_diagonal_line_z12_bounded(grid_cap):
     assert (tx[0], ty[0]) in have and (tx[1], ty[1]) in have
 
 
-def test_continent_polygon_z12_bounded(grid_cap):
+def test_continent_polygon_z12_bounded():
     """Continent-sized ellipse at z12: covering is ~1M tiles (real output),
     peak allocation must be O(covered), not O(bbox grid)."""
     ang = np.linspace(0, 2 * np.pi, 200, endpoint=False)
     ring = np.column_stack([60 * np.cos(ang), 40 * np.sin(ang) + 10])
-    grid_cap("65536")
     tracemalloc.start()
     tiles = K.polygon_covering_tiles(ring, 12)
     _, peak = tracemalloc.get_traced_memory()
@@ -118,7 +104,7 @@ def test_continent_polygon_z12_bounded(grid_cap):
         bool(np.any((tiles[:, 0] == ctx[0]) & (tiles[:, 1] == cty[0])))
 
 
-def test_slow_batch_sparse_routing_matches_dense(grid_cap):
+def test_slow_batch_sparse_routing_matches_dense():
     """slow_batch_arrow routes oversized-grid rows to the sparse per-row
     core; output must be row-for-row identical to the dense core (including
     tile-chunked)."""
@@ -145,19 +131,16 @@ def test_slow_batch_sparse_routing_matches_dense(grid_cap):
              None if r["off"] is None else tuple(r["off"]))
             for b in batches for r in b.to_pylist())
 
-    grid_cap(DENSE)
-    dense = canon(CV.slow_batch_arrow(rb, 4096))
-    grid_cap("50")
-    sparse = canon(CV.slow_batch_arrow(rb, 4096))
-    chunked = canon(CV.slow_batch_arrow(rb, 4096, cap=2000))
+    dense = canon(CV.slow_batch_arrow(rb, 4096, gcap=DENSE))
+    sparse = canon(CV.slow_batch_arrow(rb, 4096, gcap=50))
+    chunked = canon(CV.slow_batch_arrow(rb, 4096, cap=2000, gcap=50))
     assert len(dense) > 0
     assert dense == sparse
     assert dense == chunked
 
 
-def test_grid_cap_default(monkeypatch):
-    monkeypatch.delenv("TILEGEN_GRID_CAP", raising=False)
-    assert K.grid_cap() == 65536
+def test_grid_cap_default():
+    assert K.GRID_CAP == 65536
 
 
 def test_covering_runs_vectorized_parity():

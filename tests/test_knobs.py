@@ -12,16 +12,9 @@ import re
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 KNOBS = {
-    "TILEGEN_AGG_OVERPART",
     "TILEGEN_BROADCAST_DIM",
-    "TILEGEN_CC_MAX_ITER",
-    "TILEGEN_CLIP_OVERPART",
-    "TILEGEN_DIM_TWOPHASE",
-    "TILEGEN_GRID_CAP",
-    "TILEGEN_KNN_QUERY_BLOCK",
     "TILEGEN_LATEST_MODE",
     "TILEGEN_REAL_DECODE",
-    "TILEGEN_SLOW_CAP",
     "TILEGEN_TABLE_FORMAT",
 }
 

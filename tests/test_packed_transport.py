@@ -25,18 +25,15 @@ def _canon_tiles(df):
 def test_packed_tile_key_equals_unpacked(spark, features):
     """r6 packed tile key: (z,x,y) ride the agg exchange as ONE bigint.
     Pure transport — tile_feature_lists_dim's output must be bit-identical
-    with pack_key=True and pack_key=False, salted and unsalted."""
+    with pack_key=True and pack_key=False."""
     zooms = [3, 6]
     flat = T.clip_points_flat(features.filter("kind='point'"), zooms).unionByName(
         T.clip_shapes_flat(features.filter("kind!='point'"), zooms))
     dim = features.select("feature_id", "kind", "props")
-    for salt in (0, 2):
-        a = _canon_tiles(T.tile_feature_lists_dim(flat, dim, salt=salt,
-                                                  pack_key=False))
-        b = _canon_tiles(T.tile_feature_lists_dim(flat, dim, salt=salt,
-                                                  pack_key=True))
-        assert len(a) > 20
-        assert a == b, f"packed tile key diverged at salt={salt}"
+    a = _canon_tiles(T.tile_feature_lists_dim(flat, dim, pack_key=False))
+    b = _canon_tiles(T.tile_feature_lists_dim(flat, dim, pack_key=True))
+    assert len(a) > 20
+    assert a == b
 
 
 def test_packed_tile_key_guard_z30(spark, features):

@@ -147,7 +147,7 @@ def test_dim_agg_props_skip_all_exchanges(spark):
     dim = spark.range(200).select(
         F.col("id").alias("feature_id"), F.lit("point").alias("kind"),
         F.create_map(F.lit("k"), F.lit("v")).alias("props"))
-    out = tile_feature_lists_dim(clipped, dim, salt=4)
+    out = tile_feature_lists_dim(clipped, dim)
     plan = _plan(out)
     n_shuffle = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_shuffle == 1, plan
@@ -162,14 +162,5 @@ def test_dim_agg_props_skip_all_exchanges(spark):
     assert "EvalPython" not in plan and "MapInPandas" not in plan
 
     # unpacked-key escape hatch keeps the identical exchange count
-    plan0 = _plan(tile_feature_lists_dim(clipped, dim, salt=4, pack_key=False))
+    plan0 = _plan(tile_feature_lists_dim(clipped, dim, pack_key=False))
     assert len(re.findall(r"\(\d+\) Exchange\b", plan0)) == 1, plan0
-
-    # the pre-r7 two-phase reference shape stays selectable for A/B
-    import os
-    os.environ["TILEGEN_DIM_TWOPHASE"] = "1"
-    try:
-        plan2 = _plan(tile_feature_lists_dim(clipped, dim, salt=4))
-        assert len(re.findall(r"\(\d+\) Exchange\b", plan2)) == 2, plan2
-    finally:
-        del os.environ["TILEGEN_DIM_TWOPHASE"]

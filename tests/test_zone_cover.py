@@ -105,7 +105,7 @@ def test_zone_over_grid_cap_takes_sparse_route():
 
 
 def test_zone_over_work_budget_takes_kernel_route(monkeypatch):
-    # a 2,000-vertex zone with a 4,554-cell z12 grid: under grid_cap, but its
+    # a 2,000-vertex zone with a 4,554-cell z12 grid: under GRID_CAP, but its
     # grid x vertex weight (9.1M) is over the 8M budget, so the dense pass
     # (O(cells x vertices) work arrays) must not see it
     t = np.linspace(0.0, 2.0 * np.pi, 2000, endpoint=False)

@@ -105,6 +105,10 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
     ``mvt=True`` additionally encodes each tile's feature list to MVT 2.1
     wire bytes (S7) in the same pass — the sink rows carry an ``mvt`` binary
     column IN PLACE of ``features``; ``split_layers`` emits one MVT layer per geometry kind.
+    ``salt`` is accepted and unused: the production agg
+    (tiles.tile_feature_lists_dim) is unsalted. It stays for callers that
+    pass skew.suggest_salt's factor until that pre-pass either drives a skew
+    path or is removed.
     Returns {"zooms_run": n, "zooms_skipped": m, "tiles": total}.
     """
     from .tiles import build_tile_features
@@ -131,7 +135,7 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
     for z in todo:
         started = time.time()
         obs = Observation(f"tiles-z{z}-{run_id}")
-        tiles = build_tile_features(features, [z], salt=salt)
+        tiles = build_tile_features(features, [z])
         if mvt:
             tiles = encode_tiles(tiles, split_layers=split_layers)
         tiles = tiles.observe(

@@ -407,7 +407,7 @@ def _row_weights_arrays(zs: np.ndarray, nv: np.ndarray, r0_start: np.ndarray,
     not the exact covering. Inputs are ring-0 slices (vertex start + length
     into the global ``verts``) and per-row total vertex counts; returns
     (weight, grid_cells) so slow_batch_arrow can route bbox-sparse rows
-    (grid over TILEGEN_GRID_CAP) to _sparse_one_row_parts."""
+    (grid over K.GRID_CAP) to _sparse_one_row_parts."""
     _, _, x0, x1, y0, y1 = _vertex_tile_bbox(zs, verts, r0_start, r0_len)
     grid = (x1 - x0 + 1) * (y1 - y0 + 1)
     return np.maximum(grid * nv, 1), grid
@@ -423,12 +423,9 @@ def _vertex_tile_bbox(zs, verts, S0, L0):
             np.minimum.reduceat(yt, vS), np.maximum.reduceat(yt, vS))
 
 
-def slow_cap() -> int:
-    """Work budget in grid-cell x vertex units (TILEGEN_SLOW_CAP, default
-    8M ~ 64 MB per float64 work array) that the batched clip and the PIP
-    zone covering split their rows by."""
-    import os
-    return int(os.environ.get("TILEGEN_SLOW_CAP", "8000000"))
+#: Work budget in grid-cell x vertex units (8M ~ 64 MB per float64 work
+#: array) that the batched clip and the PIP zone covering split their rows by.
+SLOW_CAP = 8_000_000
 
 
 def chunk_plan(w: np.ndarray, alone: np.ndarray,
@@ -463,7 +460,7 @@ def chunk_plan(w: np.ndarray, alone: np.ndarray,
 def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
                           ring_len: np.ndarray, ring_start: np.ndarray,
                           verts: np.ndarray, extent: int, cap: int,
-                          gcap: int | None) -> list[tuple]:
+                          gcap: int) -> list[tuple]:
     """One bbox-sparse row (KEPT/stripped ring slices into the global
     ``verts``): exact covering via the O(covered) scalar kernels, then the
     same batched clip over exactly those (tile, row) units — per-row work
@@ -702,33 +699,26 @@ def decode_clip_rings(rb, strip: bool = True):
             (np.maximum(nv_raw, 0), r0_start, np.maximum(r0_len, 0)))
 
 
-def slow_batch_arrow(rb, extent: int, cap: int | None = None,
-                     gcap: int | None = None):
+def slow_batch_arrow(rb, extent: int, cap: int = SLOW_CAP,
+                     gcap: int = K.GRID_CAP):
     """One input RecordBatch of multi-tile (feature, _z) rows → list of
     output RecordBatches (CLIP_FLAT_SCHEMA), zero per-row Python end to end.
 
     Memory-bounded two ways:
      - a skewed batch of large low-zoom polygons (~10^3 covering tiles) is
        split into sub-batches whose estimated instance-vertex total stays
-       under ``cap`` (slow_cap()), since the core materializes per-(tile,
-       ring) instance arrays for the whole batch at once;
-     - a bbox-sparse row (candidate grid over ``gcap`` = TILEGEN_GRID_CAP
-       cells — e.g. a continent-spanning diagonal line at z12, whose full
-       bbox grid would be ~16.7M cells for O(10^3) actually-covered tiles)
+       under ``cap``, since the core materializes per-(tile, ring) instance
+       arrays for the whole batch at once;
+     - a bbox-sparse row (candidate grid over ``gcap`` cells — e.g. a
+       continent-spanning diagonal line at z12, whose full bbox grid would
+       be ~16.7M cells for O(10^3) actually-covered tiles)
        routes to _sparse_one_row_parts, which enumerates the EXACT covering
        via the O(covered) kernels and clips only those units, in tile
        chunks sized to ``cap``.
     Contiguous splits (chunk_plan) preserve row order => output order.
-    ``gcap`` None reads K.grid_cap() here (standalone/test use only —
-    plan-builders pass the driver-resolved value, since executor env can
-    differ from driver env on a real cluster).
     """
     if rb.num_rows == 0:
         return []
-    if cap is None:
-        cap = slow_cap()
-    if gcap is None:
-        gcap = K.grid_cap()
     (is_line, ring_len, ring_start, verts, row_ring_count, row_first_ring,
      (nv_raw, r0_start, r0_len)) = decode_clip_rings(rb)
     zs = np.asarray(rb.column(rb.schema.names.index("_z"))).astype(np.int64)

@@ -33,8 +33,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     `diameter` rounds; raises if max_iter rounds don't converge — a signal
     the input is not the shallow near-dup regime this is tuned for.
     Recovery path: raise ``max_iter`` (rounds are cheap and the loop exits
-    the round the fixpoint lands; TILEGEN_CC_MAX_ITER at the driver
-    entries), or pre-contract trivial chains before calling.
+    the round the fixpoint lands), or pre-contract trivial chains before
+    calling.
 
     Fault tolerance (VERDICT r5 #4): by default each round cuts lineage
     with ``localCheckpoint`` — blocks live on executors, so on a real
@@ -116,8 +116,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
         "component diameter exceeds the near-dup regime this loop targets; "
-        "raise max_iter (TILEGEN_CC_MAX_ITER at the driver entries) or "
-        "pre-contract chains")
+        "raise max_iter or pre-contract chains")
 
 
 def near_dup_groups(vertices: DataFrame, pairs: DataFrame,

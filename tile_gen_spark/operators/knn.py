@@ -206,7 +206,7 @@ def _emb_partial_topk(q_pd: pd.DataFrame, corpus: DataFrame, k: int) -> DataFram
 
 
 def knn_embeddings(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                   query_block: int | None = None) -> DataFrame:
+                   query_block: int = 65536) -> DataFrame:
     """Exact cosine top-k: queries(vec_id, embedding) × corpus(vec_id, embedding).
 
     Block nested loop, BLAS-vectorized: a query block is collected and
@@ -216,9 +216,9 @@ def knn_embeddings(queries: DataFrame, corpus: DataFrame, k: int = 5,
     into the global top-k window carries ≤ k·n_batches rows per query
     instead of the full cross product.
 
-    Driver memory is bounded by ``query_block`` (TILEGEN_KNN_QUERY_BLOCK,
-    default 65536 rows ≈ 64 MB at D=128 float64): a bigger query set is
-    split into EXACT row_number-derived blocks over a persisted snapshot
+    Driver memory is bounded by ``query_block`` (default 65536 rows ≈ 64 MB
+    at D=128 float64): a bigger query set is split into EXACT
+    row_number-derived blocks over a persisted snapshot
     (ADVICE r5: hash blocks only bound size in expectation, and re-running
     the query lineage per block scanned it n_blocks times) — each block
     streams the corpus once, so this path suits queries ≪ corpus; for
@@ -228,9 +228,6 @@ def knn_embeddings(queries: DataFrame, corpus: DataFrame, k: int = 5,
     partition the query set, and each query's global top-k is computed
     within its block.
     """
-    import os
-    if query_block is None:
-        query_block = int(os.environ.get("TILEGEN_KNN_QUERY_BLOCK", "65536"))
     q_sel = queries.select(F.col("vec_id").alias("query_id"),
                            F.col("embedding").cast("array<double>").alias("e"))
     # r7: probe with limit(query_block + 1).toPandas() instead of a separate

@@ -33,8 +33,9 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
-from .clip_vec import (_row_weights_arrays, chunk_plan, covering_units,
-                       slow_cap)
+from ..plans.session import shuffle_parts
+from .clip_vec import (SLOW_CAP, _row_weights_arrays, chunk_plan,
+                       covering_units)
 
 ZONE_QK_SCHEMA = ("zone_id bigint, qb bigint, bminx double, bmaxx double, "
                   "bminy double, bmaxy double")
@@ -96,7 +97,8 @@ def points_with_bucket(points: DataFrame, res: int,
         "qb", F.expr(f"coalesce(({x}) * {1 << res} + ({y}), -1)"))
 
 
-def zone_cover_batch(rb, res: int, gcap: int, cap: int):
+def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
+                     cap: int = SLOW_CAP):
     """One Arrow batch of zones (zone_id, ring) → covering rows
     (ZONE_QK_SCHEMA) in zone order, each zone's tiles in kernel order.
 
@@ -153,12 +155,8 @@ def zones_covering_quadkeys(zones: DataFrame, res: int) -> DataFrame:
     ±_BBOX_EPS bbox: one batched covering per Arrow batch
     (zone_cover_batch, sharing clip_vec.covering_units with the tile clip),
     sparse-grid and over-budget zones covered per zone by the kernel."""
-    # driver-resolved, shipped in the task closure: the sparse-routing grid
-    # cap and the work budget the multi-tile clip chunks by
-    gcap = K.grid_cap()
-    cap = slow_cap()
     return zones.select("zone_id", "ring").mapInArrow(
-        lambda batches: (zone_cover_batch(rb, res, gcap, cap) for rb in batches),
+        lambda batches: (zone_cover_batch(rb, res) for rb in batches),
         ZONE_QK_SCHEMA)
 
 
@@ -344,10 +342,6 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
     # objects/candidate·edge and went GC-bound at 32 threads.)
     bbox = ((F.col("lon") >= F.col("bminx")) & (F.col("lon") <= F.col("bmaxx"))
             & (F.col("lat") >= F.col("bminy")) & (F.col("lat") <= F.col("bmaxy")))
-    try:
-        n_parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_parts = points.sparkSession.sparkContext.defaultParallelism
     if broadcast_zones:
         cand = (pts.join(F.broadcast(zqk), "qb", "inner").filter(bbox)
                 .select("point_id", "zone_id", "lon", "lat"))
@@ -366,5 +360,6 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
         # explosion is worse than the Arrow crossing
         cand = (cand.join(zones.select("zone_id", "ring"), "zone_id")
                 .select("point_id", "zone_id", "lon", "lat", "ring"))
-        return pip_refine(cand.repartition(n_parts, "point_id"))
+        return pip_refine(cand.repartition(shuffle_parts(points.sparkSession),
+                                           "point_id"))
     return pip_refine_relational(cand, zones, broadcast=False)

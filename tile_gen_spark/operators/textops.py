@@ -365,9 +365,3 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 4) -> 
     sql = q_minhash_pairs(S.SPARK, num_hashes, bands).replace(
         "FROM documents", "FROM _mh_docs")
     return spark.sql(sql)
-
-
-def simhash_fingerprints(docs: DataFrame, bits: int = 16) -> DataFrame:
-    spark = docs.sparkSession
-    docs.createOrReplaceTempView("_sh_docs")
-    return spark.sql(q_simhash(S.SPARK, bits).replace("FROM documents", "FROM _sh_docs"))

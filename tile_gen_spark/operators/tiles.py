@@ -18,9 +18,9 @@ Scale design:
    Spark plan around them and the per-row reference clip
    (clip_reference_batch), which shares none of their batched code.
  - The per-tile ``collect_list`` agg (tile_feature_lists_dim) runs on ONE
-   over-partitioned hash(tile key) exchange and ignores ``salt``; the salted
-   two-phase shape (agg by (z,x,y,salt) then flatten, A2/J9) remains in the
-   nested reference tile_feature_lists and behind TILEGEN_DIM_TWOPHASE.
+   hash(tile key) exchange over-partitioned ×OVERPART, unsalted; the salted
+   two-phase shape (agg by (z,x,y,salt) then flatten, A2/J9) remains only in
+   the nested reference tile_feature_lists.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
+from ..plans.session import shuffle_parts
 from .clip_vec import fast_batch_arrow, slow_batch_arrow
 
 ASSIGN_SCHEMA = "feature_id bigint, z int, x bigint, y bigint"
@@ -48,6 +49,13 @@ CLIP_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, kind string, "
 # array<array<int>> public view is rebuilt relationally (nest_geom).
 CLIP_FLAT_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, "
                     "geom array<int>, off array<int>")
+
+#: Over-partitioning of the clip and agg exchanges relative to
+#: shuffle_parts: smaller tasks pack the waves evenly around the hot low-z
+#: tiles and cut per-task collect state. r7 A/B of the agg phase at the bench
+#: shape: ×1 = 8.7 s, ×4 = 6.5 s, ×8 = 6.5 s (×2 = 11.7 s — a reproducible
+#: hash-collision pathology at 128 partitions, avoided).
+OVERPART = 4
 
 #: flat (geom, off) → the public nested array<array<int>> ring list —
 #: pure Catalyst expression, no Python. geom is interleaved [qx, qy, …]; off
@@ -150,7 +158,6 @@ def assign_points(points: DataFrame, zooms: list[int]) -> DataFrame:
 
 def assign_shapes(shapes: DataFrame, zooms: list[int]) -> DataFrame:
     """G8: polygons/lines → covering tiles per zoom (Arrow-batched numpy)."""
-    gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -159,9 +166,9 @@ def assign_shapes(shapes: DataFrame, zooms: list[int]) -> DataFrame:
                 ring = np.asarray(coords[0], dtype=np.float64)
                 for z in zooms:
                     if kind == "polygon":
-                        tiles = K.polygon_covering_tiles(ring, z, cap=gcap)
+                        tiles = K.polygon_covering_tiles(ring, z)
                     else:
-                        tiles = K.line_covering_tiles(ring, z, cap=gcap)
+                        tiles = K.line_covering_tiles(ring, z)
                     for xx, yy in tiles:
                         fid_o.append(fid)
                         z_o.append(z)
@@ -211,23 +218,17 @@ def clip_points_relational(points: DataFrame, zooms: list[int],
 
 
 def _n_clip_parts(df: DataFrame) -> int:
-    try:
-        base = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # "auto" on AQE-managed clusters
-        base = df.sparkSession.sparkContext.defaultParallelism
-    return base * int(os.environ.get("TILEGEN_CLIP_OVERPART", "4"))
+    return shuffle_parts(df.sparkSession) * OVERPART
 
 
-def clip_reference_batch(b: pd.DataFrame, extent: int = K.MVT_EXTENT,
-                         gcap: int | None = None) -> pd.DataFrame:
+def clip_reference_batch(b: pd.DataFrame,
+                         extent: int = K.MVT_EXTENT) -> pd.DataFrame:
     """The per-row reference clip (the pre-r3 single path) over one pandas
     batch of (feature_id, kind, coords, props, _z) rows → CLIP_SCHEMA rows,
     nested geom built directly in Python: one covering-kernel call and one
     scalar clip per (feature, zoom, tile). Production never runs it; it is
     what the parity and differential tests compare the batched clip
-    against. ``gcap`` None reads K.grid_cap()."""
-    if gcap is None:
-        gcap = K.grid_cap()
+    against."""
     rows: dict[str, list] = {k: [] for k in ("z", "x", "y", "feature_id", "kind", "geom", "props")}
     for fid, kind, coords, props, z in zip(
             b["feature_id"], b["kind"], b["coords"], b["props"], b["_z"]):
@@ -260,9 +261,9 @@ def clip_reference_batch(b: pd.DataFrame, extent: int = K.MVT_EXTENT,
             rows["props"].append(props)
             continue
         if kind == "polygon":
-            tiles = K.polygon_covering_tiles(ring, z, cap=gcap)
+            tiles = K.polygon_covering_tiles(ring, z)
         else:
-            tiles = K.line_covering_tiles(ring, z, cap=gcap)
+            tiles = K.line_covering_tiles(ring, z)
         if tiles.shape[0] == 0:
             continue
         n_t = float(1 << z)
@@ -313,13 +314,11 @@ def clip_shapes_reference(shapes: DataFrame, zooms: list[int],
     """Nested per-row reference for clip_shapes_direct: every (feature,
     zoom) row through clip_reference_batch in a ``mapInPandas`` (CLIP_SCHEMA
     out), spread on (feature_id, _z) like the production multi-tile clip."""
-    gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
     sel = (shapes.select("feature_id", "kind", "coords", "props")
            .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
            .repartition(_n_clip_parts(shapes), "feature_id", "_z"))
     return sel.mapInPandas(
-        lambda batches: (clip_reference_batch(b, extent, gcap)
-                         for b in batches),
+        lambda batches: (clip_reference_batch(b, extent) for b in batches),
         CLIP_SCHEMA)
 
 
@@ -360,7 +359,8 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
     # (feature_id, z): clip CPU varies ~1000× per feature and grows with z, so
     # fine-grained rows pack the task waves evenly (the 64-partition version
     # ran local[32] in 2 straggler-dominated waves — measured 0.5 efficiency);
-    # 8× overpartitioning keeps the max wave skew ~1/8 of a wave.
+    # OVERPART× over-partitioning bounds the max wave skew to ~1/OVERPART of
+    # a wave.
     n_parts = _n_clip_parts(shapes)
 
     # relational zoom split: bbox corner tiles (same G2 SQL text as the point
@@ -449,11 +449,9 @@ def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
                         "filter(zip_with(_zarr, _st, (z, s) -> if(s, -1, z)), "
                         "v -> v >= 0)")).alias("_z"))
             .repartition(n_parts, "feature_id", "_z"))
-    gcap = K.grid_cap()   # driver-resolved, shipped in the task closure
     slow_out = slow.mapInArrow(
         lambda batches: (out for rb in batches
-                         for out in slow_batch_arrow(
-                             rb, extent, gcap=gcap)),
+                         for out in slow_batch_arrow(rb, extent)),
         CLIP_FLAT_SCHEMA)
     return fast_out.unionByName(slow_out)
 
@@ -524,7 +522,7 @@ def _dim_join_side(dim: DataFrame, broadcast_dim: bool | None) -> DataFrame:
 
 
 def build_tile_features(features: DataFrame, zooms: list[int],
-                        salt: int = 0, extent: int = K.MVT_EXTENT,
+                        extent: int = K.MVT_EXTENT,
                         broadcast_dim: bool | None = None) -> DataFrame:
     """EP2 pipeline: features → clipped per-tile rows → MVT-equivalent lists.
 
@@ -546,7 +544,7 @@ def build_tile_features(features: DataFrame, zooms: list[int],
     shp = clip_shapes_flat(features.filter(F.col("kind") != "point"), zooms,
                            extent)
     dim = features.select("feature_id", "kind", "props")
-    return tile_feature_lists_dim(pts.unionByName(shp), dim, salt=salt,
+    return tile_feature_lists_dim(pts.unionByName(shp), dim,
                                   broadcast_dim=broadcast_dim,
                                   pack_key=max(zooms) <= 29)
 
@@ -561,7 +559,7 @@ _TXY_PACK = "(CAST(z AS BIGINT) << 58) | (x << 29) | y"
 _TXY_MASK = (1 << 29) - 1
 
 
-def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
+def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
                            broadcast_dim: bool | None = None,
                            pack_key: bool | None = None) -> DataFrame:
     """A1/A2 with the props dim joined AFTER the last exchange: kind/props
@@ -570,21 +568,11 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
     Shape (r7): ONE exchange — repartition(n, key) → broadcast kind/props
     join + relational geom re-nesting (both preserve the hash(key)
     partitioning, so the final groupBy adds NO exchange) → single sorted
-    full collect.
-
-    r7 (guide §2.4 "remove shuffles outright"): the previous salted
-    two-phase shape [partial collect per (key,salt) → second exchange →
-    EXPLODE partials back to rows] was measured pure overhead in THIS
-    variant: because the nest/join/sort must run per ROW, phase 2 exploded
-    the partials right back, so every stage downstream of the second
-    exchange — including all of a hot tile's per-row work — ran in one
-    task EXACTLY as it does with a single hash(key) exchange. The salt
-    spread nothing that stayed spread; it only bought a second full-geometry
-    shuffle (+ phase-1 list building). Measured: 15.2 → 10.0 s for the agg
-    phase at the bench shape, identical rows (the salted-vs-unsalted parity
-    pytest covers this by construction). ``salt`` is kept in the signature
-    and ignored here; TILEGEN_DIM_TWOPHASE=1 restores the pre-r7 shape for
-    A/B.
+    full collect. No salt: a salted two-phase shape [partial collect per
+    (key,salt) → second exchange → EXPLODE partials back to rows] spreads
+    nothing that stays spread here, because the nest/join/sort run per ROW
+    after the second exchange, in one task per hot tile either way (r7, agg
+    phase at the bench shape: 15.2 s salted against 10.0 s for this shape).
 
     ``pack_key`` (requires z ≤ 29; None packs too, behind an in-plan z
     guard): the tile key through the exchange is ONE packed bigint instead of
@@ -605,18 +593,8 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
     if pack_key is None:
         pack_key = True
     d = _dim_join_side(dim.select("feature_id", "kind", "props"), broadcast_dim)
-    spark = clipped.sparkSession
-    try:
-        n_agg = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_agg = spark.sparkContext.defaultParallelism
-    # r7: overpartition the agg exchange like the clip (TILEGEN_AGG_OVERPART,
-    # default 4× shuffle.partitions — scale-proportional, AQE-exempt):
-    # smaller per-task collect state packs the waves evenly around the hot
-    # low-z mega-tiles and cuts GC pressure. In-session A/B at the bench
-    # shape: ×1 = 8.7 s, ×4 = 6.5 s, ×8 = 6.5 s for the agg phase (×2 = 11.7
-    # — a reproducible hash-collision pathology at 128, avoided).
-    n_agg *= int(os.environ.get("TILEGEN_AGG_OVERPART", "4"))
+    # scale-proportional and AQE-exempt, over-partitioned like the clip
+    n_agg = shuffle_parts(clipped.sparkSession) * OVERPART
 
     keys = ["_txy"] if pack_key else ["z", "x", "y"]
     pack_expr = (_TXY_PACK if not guarded else
@@ -628,37 +606,21 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame, salt: int = 0,
                           "feature_id", "geom", "off")
            if pack_key else clipped)
 
-    def finish(rows: DataFrame) -> DataFrame:
-        full = (nest_geom(rows).join(d, "feature_id", "left")
-                .select(*keys,
-                        F.struct("feature_id", "kind", "geom", "props").alias("f")))
-        agged = (full.groupBy(*keys)
-                 .agg(_by_fid(F.collect_list("f")).alias("features"))
-                 .withColumn("n_features", F.size("features")))
-        if not pack_key:
-            return agged
-        # unpack on one row per TILE, after the last exchange and agg
-        return agged.select(
-            F.expr("CAST(shiftright(_txy, 58) AS INT)").alias("z"),
-            F.expr(f"shiftright(_txy, 29) & {_TXY_MASK}").alias("x"),
-            F.expr(f"_txy & {_TXY_MASK}").alias("y"),
-            "features", "n_features")
-
-    if salt <= 1 or os.environ.get("TILEGEN_DIM_TWOPHASE", "0") != "1":
-        return finish(src.repartition(n_agg, *keys))
-    # pre-r7 reference shape (A/B escape hatch): salted two-phase partial
-    # collect + second exchange + explode — measured strictly slower here
-    lean = F.struct(F.col("feature_id"), F.col("geom"), F.col("off"))
-    two = (src
-           .withColumn("_salt", F.pmod(F.hash("feature_id"), F.lit(salt)))
-           .repartition(n_agg * 2, *keys, "_salt")
-           .groupBy(*keys, "_salt")
-           .agg(F.collect_list(lean).alias("_part")))
-    rows = (two.repartition(n_agg, *keys)
-            .select(*keys, F.explode("_part").alias("f"))
-            .select(*keys, F.col("f.feature_id").alias("feature_id"),
-                    F.col("f.geom").alias("geom"), F.col("f.off").alias("off")))
-    return finish(rows)
+    full = (nest_geom(src.repartition(n_agg, *keys))
+            .join(d, "feature_id", "left")
+            .select(*keys,
+                    F.struct("feature_id", "kind", "geom", "props").alias("f")))
+    agged = (full.groupBy(*keys)
+             .agg(_by_fid(F.collect_list("f")).alias("features"))
+             .withColumn("n_features", F.size("features")))
+    if not pack_key:
+        return agged
+    # unpack on one row per TILE, after the last exchange and agg
+    return agged.select(
+        F.expr("CAST(shiftright(_txy, 58) AS INT)").alias("z"),
+        F.expr(f"shiftright(_txy, 29) & {_TXY_MASK}").alias("x"),
+        F.expr(f"_txy & {_TXY_MASK}").alias("y"),
+        "features", "n_features")
 
 
 def tile_feature_lists(clipped: DataFrame, salt: int = 0) -> DataFrame:
@@ -693,11 +655,7 @@ def tile_feature_lists(clipped: DataFrame, salt: int = 0) -> DataFrame:
     # entirely (r3 phase profile: 45.5 s @ local[8] vs 48.3 s @ local[32]).
     # A user-specified numPartitions is exempt from AQE coalescing; deriving
     # it from shuffle_partitions keeps parallelism ∝ cores.
-    spark = clipped.sparkSession
-    try:
-        n_agg = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_agg = spark.sparkContext.defaultParallelism
+    n_agg = shuffle_parts(clipped.sparkSession)
     two = (clipped
            .withColumn("_salt", F.pmod(F.hash("feature_id"), F.lit(salt)))
            .repartition(n_agg * 2, "z", "x", "y", "_salt")

@@ -23,6 +23,16 @@ def default_driver_mem() -> str:
     return f"{min(half_mb, 16 << 10)}m"
 
 
+def shuffle_parts(spark: SparkSession) -> int:
+    """Base partition count for the engine's explicit (AQE-exempt)
+    exchanges: ``spark.sql.shuffle.partitions``, or the default parallelism
+    where that setting is not a number ("auto" on AQE-managed clusters)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))

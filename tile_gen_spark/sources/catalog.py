@@ -51,13 +51,6 @@ def cluster_tiles(tiles: DataFrame) -> DataFrame:
     return tiles.repartition("z", "x").sortWithinPartitions("z", "x", "y")
 
 
-def write_tiles(tiles: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S4: zoom-partitioned tile sink, clustered within partitions (O2)."""
-    w = cluster_tiles(tiles).write.mode(mode).partitionBy("z")
-    (w.format("iceberg").saveAsTable(path) if _format() == "iceberg"
-     else w.parquet(path))
-
-
 def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     if _format() == "iceberg":
         return spark.read.format("iceberg").load(path)

@@ -4,11 +4,16 @@ Usage: python tools/dump_plans.py <out_dir> [repo_root]
 Driver-side only (plans are built, never executed) — safe to run anywhere.
 The optional repo_root lets the same script print BEFORE plans from a
 pristine checkout (PYTHONPATH-style import redirection).
+
+Expression ids (``feature_id#123L``) are written as ``#N``: they count up
+per session, so two builds of the same plan differ only there. With them
+normalised, "plans unchanged" is ``diff -r <before_dir> <after_dir>``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 out_dir = sys.argv[1]
@@ -22,7 +27,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def plan_of(df) -> str:
     jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return re.sub(r"#\d+", "#N", plan)
 
 
 def main() -> None:
@@ -49,8 +55,7 @@ def main() -> None:
     plans = {}
     plans["latest_per_url"] = latest_per_url(pages)
     feats = validity_filter(extract_and_parse(latest_per_url(pages)))
-    plans["tile_pipeline"] = build_tile_features(feats, list(range(0, 13)),
-                                                 salt=8)
+    plans["tile_pipeline"] = build_tile_features(feats, list(range(0, 13)))
     pts = spark.range(100000).select(
         F.col("id").alias("point_id"),
         F.expr(S.pt_lon("id")).alias("lon"),
