@@ -1,9 +1,11 @@
-"""Inventory of the engine's TILEGEN_* environment knobs.
+"""Inventory of the engine's environment knobs.
 
 Every knob is a second code path or a setting someone has to know about, so
-the set is pinned here: adding or removing a knob must edit KNOBS. The scan
-covers the engine package and the driver entry module, and matches both
-``environ.get("TILEGEN_…`` and ``environ["TILEGEN_…`` reads.
+the set is pinned here: adding or removing a knob must edit KNOBS (the
+TILEGEN_* knobs, scanned in the engine package and the driver entry module)
+or SESSION_ENV (the SPARK_* reads of the session factory, scanned in the
+engine package). The scan matches ``environ.get("…``, ``environ["…`` and
+``"…" in os.environ`` reads.
 """
 
 import pathlib
@@ -18,7 +20,26 @@ KNOBS = {
     "TILEGEN_TABLE_FORMAT",
 }
 
-_READ = re.compile(r"""environ(?:\.get\(|\[)\s*["'](TILEGEN_[A-Z0-9_]+)""")
+#: SPARK_* variables the session factory (plans/session.py) reads
+SESSION_ENV = {
+    "SPARK_DRIVER_MEM",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_EXTRA_CONF",
+    "SPARK_GRAFT_LOCAL_DIR",
+    "SPARK_LOCAL_DIRS",
+}
+
+
+def _reads(prefix: str) -> re.Pattern:
+    name = f"({prefix}_[A-Z0-9_]+)"
+    return re.compile(rf"""environ(?:\.get\(|\[)\s*["']{name}"""
+                      rf"""|["']{name}["']\s+(?:not\s+)?in\s+(?:os\.)?environ""")
+
+
+def _found(prefix: str, paths) -> set[str]:
+    return {name for path in paths
+            for match in _reads(prefix).findall(path.read_text())
+            for name in match if name}
 
 
 def _sources():
@@ -27,7 +48,12 @@ def _sources():
 
 
 def test_knob_inventory():
-    found = {name for path in _sources()
-             for name in _READ.findall(path.read_text())}
+    found = _found("TILEGEN", _sources())
     assert found == KNOBS, (
         f"new: {sorted(found - KNOBS)}, gone: {sorted(KNOBS - found)}")
+
+
+def test_session_env_inventory():
+    found = _found("SPARK", sorted((ROOT / "tile_gen_spark").rglob("*.py")))
+    assert found == SESSION_ENV, (
+        f"new: {sorted(found - SESSION_ENV)}, gone: {sorted(SESSION_ENV - found)}")

@@ -1,8 +1,8 @@
 """PIP zone covering (spatial_join.zone_cover_batch), without Spark.
 
-Each Arrow batch of zones is covered in one vectorized pass
-(clip_vec.covering_units); bbox-sparse zones and zones over the work budget
-go one at a time through the kernel. The rows must equal the per-zone reference —
+Each Arrow batch of zones is covered by clip_vec.cover_rows: runs of zones
+in one vectorized dense pass (clip_vec._dense_cover); bbox-sparse zones and
+zones over the work budget one at a time through the kernel. The rows must equal the per-zone reference —
 K.polygon_covering_tiles plus the zone's ±_BBOX_EPS bbox — bit for bit and
 in the same order.
 """
@@ -13,7 +13,7 @@ import pytest
 
 import tile_gen_spark.functions.kernels as K
 from tile_gen_spark.operators import spatial_join as SJ
-from tile_gen_spark.operators.clip_vec import covering_units
+from tile_gen_spark.operators import clip_vec as CV
 from tile_gen_spark.sources.synth import _zone_batch
 
 COLS = ("zone_id", "qb", "bminx", "bmaxx", "bminy", "bmaxy")
@@ -114,11 +114,13 @@ def test_zone_over_work_budget_takes_kernel_route(monkeypatch):
     assert _grid_cells(big, 12) < GCAP
     dense_zones = []
 
+    dense = CV._dense_cover
+
     def spy(zs, *args):
         dense_zones.append(zs.size)
-        return covering_units(zs, *args)
+        return dense(zs, *args)
 
-    monkeypatch.setattr(SJ, "covering_units", spy)
+    monkeypatch.setattr(CV, "_dense_cover", spy)
     ids, rings = [1, 2, 3], [_OPEN, big, _OPEN]
     assert _assert_bit_identical(ids, rings, 12) > 0
     assert dense_zones == [1, 1]

@@ -2,7 +2,7 @@
 
     spark-submit --py-files tilegen.zip -m tile_gen_spark.jobs.generate_tiles \
         --input <pages parquet/iceberg> --out <dir> --zooms 0-12 \
-        --manifest <dir> [--salt auto|N] [--synthetic N]
+        --manifest <dir> [--synthetic N]
 
 Ships via ``--py-files`` per ``BASELINE.json:6``; build the zip with
 ``python -m tile_gen_spark.jobs.package``. Resumes from the manifest
@@ -32,7 +32,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--manifest", required=True)
     ap.add_argument("--zooms", default="0-12")
-    ap.add_argument("--salt", default="auto")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--master", default=None)
     ap.add_argument("--mvt", action="store_true",
@@ -54,8 +53,6 @@ def main(argv: list[str] | None = None) -> None:
     from ..operators.extract import (extract_and_parse, latest_per_url,
                                      validity_filter)
     from ..operators.checkpoint import run_tile_job
-    from ..operators.skew import suggest_salt
-    from ..operators.tiles import assign_features
 
     spark = get_spark("generate-tiles", master=args.master)
     t0 = time.time()
@@ -69,21 +66,15 @@ def main(argv: list[str] | None = None) -> None:
     latest = latest_per_url(pages)
     feats = validity_filter(extract_and_parse(latest)).cache()
 
-    zooms = parse_zooms(args.zooms)
-    if args.salt == "auto":
-        # stats pre-pass on the deepest zoom (densest tiles)
-        salt = suggest_salt(assign_features(feats, [max(zooms)]))
-    else:
-        salt = int(args.salt)
-
-    stats = run_tile_job(spark, feats, args.out, args.manifest, zooms,
-                         salt=salt, mvt=args.mvt, split_layers=args.split_layers)
+    stats = run_tile_job(spark, feats, args.out, args.manifest,
+                         parse_zooms(args.zooms), mvt=args.mvt,
+                         split_layers=args.split_layers)
     if args.mvt_tree:
         from ..operators.mvt import write_mvt_tree
         tree = write_mvt_tree(spark.read.parquet(args.out), args.mvt_tree)
         stats.update({"mvt_tree_tiles": tree["n_tiles"],
                       "mvt_tree_bytes": tree["n_bytes"]})
-    stats.update({"salt": salt, "wall_sec": round(time.time() - t0, 1),
+    stats.update({"wall_sec": round(time.time() - t0, 1),
                   "n_features": feats.count()})
     print(json.dumps(stats))
     spark.stop()

@@ -83,14 +83,9 @@ class TileCheckpoint:
         return {r["z"] for r in rows}
 
     def pending(self, zooms: list[int], stage: str = "tiles") -> list[int]:
-        """J6 resume diff (driver-side for the tiny zoom list; the same
-        anti-join runs distributed for per-tile grain, see pending_tiles)."""
+        """J6 resume diff, driver-side for the tiny zoom list."""
         done = self.completed_zooms(stage)
         return [z for z in zooms if z not in done]
-
-    def pending_tiles(self, work: DataFrame, done_tiles: DataFrame) -> DataFrame:
-        """Distributed J6: tiles not yet committed (left-anti on z,x,y)."""
-        return work.join(done_tiles, ["z", "x", "y"], "left_anti")
 
     def commit(self, metrics: DataFrame) -> None:
         metrics.write.mode("append").parquet(self.path)
@@ -106,9 +101,9 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
     wire bytes (S7) in the same pass — the sink rows carry an ``mvt`` binary
     column IN PLACE of ``features``; ``split_layers`` emits one MVT layer per geometry kind.
     ``salt`` is accepted and unused: the production agg
-    (tiles.tile_feature_lists_dim) is unsalted. It stays for callers that
-    pass skew.suggest_salt's factor until that pre-pass either drives a skew
-    path or is removed.
+    (tiles.tile_feature_lists_dim) is unsalted, and the CLI no longer runs
+    the skew.suggest_salt pre-pass. It stays for the benchmark's tile
+    workload, which still passes that factor.
     Returns {"zooms_run": n, "zooms_skipped": m, "tiles": total}.
     """
     from .tiles import build_tile_features

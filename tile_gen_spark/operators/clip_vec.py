@@ -1,5 +1,6 @@
-"""The batched shape clip: both mapInArrow entry points of
-tiles.clip_shapes_flat and the ragged-array numpy they share.
+"""The batched covering and shape clip: cover_rows (the engine's one
+covering front-end), both mapInArrow entry points of tiles.clip_shapes_flat
+and the ragged-array numpy they share.
 
 The r2 pipeline spent 74% of its local[32] wall time in per-(feature, zoom)
 Python: a covering-tiles kernel call per row plus a pure-Python
@@ -7,26 +8,30 @@ Sutherland–Hodgman / Liang–Barsky clip per covering tile (~0.38 ms/row of
 call overhead at 13.9M output rows). This module replaces that loop with
 ragged-array numpy over the WHOLE Arrow batch:
 
- - multi-tile rows (slow_batch_arrow): candidate tiles = the feature's
-   vertex-tile bbox grid (exactly the grid the covering kernel enumerated);
-   every (tile, ring) instance is clipped by FOUR vectorized half-plane
-   passes (Sutherland–Hodgman, same interpolation expression as
-   kernels.clip_ring_bbox_fast, so outputs are bit-identical); lines run a
-   vectorized Liang–Barsky (_liang_barsky, the one copy of the parameter
-   loop, also the covering's edge test) over (tile, segment) instances with
-   the same piece-joining rule as kernels.clip_segments_bbox;
+ - covering (cover_rows, also behind tiles.assign_batch and
+   spatial_join.zone_cover_batch): every row's vertex tiles once per batch;
+   runs of rows are covered in one _dense_cover pass over their vertex-tile
+   bbox grids (exactly the grid the covering kernels enumerate, with the
+   kernels' three tests); a bbox-sparse or over-budget row goes alone
+   through the O(covered) kernels;
+ - multi-tile rows (slow_batch_arrow): every covered (tile, ring) instance
+   is clipped by FOUR vectorized half-plane passes (Sutherland–Hodgman,
+   same interpolation expression as kernels.clip_ring_bbox_fast, so outputs
+   are bit-identical); lines run a vectorized Liang–Barsky (_liang_barsky,
+   the one copy of the parameter loop, also the covering's edge test) over
+   (tile, segment) instances with the same piece-joining rule as
+   kernels.clip_segments_bbox;
  - single-tile rows (fast_batch_arrow): the clip is the identity, so each
    (feature, zoom) unit is one instance per ring in its one tile;
- - both then run the same quantize_instances → finalize_instances (dedupe
-   → closing-strip → degenerate-drop → MVT winding) → assemble_arrays over
-   the flat instance arrays. Tile ids and tile bounds come from
-   kernels.point_to_tile and kernels.tile_bounds.
+ - both clips then run the same quantize_instances → finalize_instances
+   (dedupe → closing-strip → degenerate-drop → MVT winding) →
+   assemble_arrays over the flat instance arrays. Tile ids and tile bounds
+   come from kernels.point_to_tile and kernels.tile_bounds.
 
-Dropping the explicit covering test is sound: a candidate tile disjoint
-from the geometry clips to a zero-area boundary chain (Sutherland–Hodgman
-output ⊆ tile ∩ polygon = ∅ up to boundary slivers) or to no line pieces,
-which the degenerate-drop removes — so emitted rows equal the covering
-loop's rows exactly (pinned by the fastpath parity pytest).
+Clipping only covered tiles matters: a candidate tile outside the geometry
+could leak a rare quantization sliver past the degenerate-drop, so emitted
+rows equal the per-row reference loop's rows exactly (pinned by the fastpath
+parity pytest and the differential tests).
 """
 
 from __future__ import annotations
@@ -306,17 +311,38 @@ def clip_lines_batched(x1, y1, x2, y2, seg_unit, seg_first, west, south,
     return pvx, pvy, pieceL, piece_unit
 
 
-def _covering_mask(n_rows, n_unit, unit_row, unit_base, west, south, east,
-                   north, verts, S0, L0, xt, yt, x0, y0, gx,
-                   is_line_row) -> np.ndarray:
+def _vertex_tile_bbox(zs, verts, S0, L0):
+    """Per-vertex tiles (xt, yt) of each row's ring ``verts[S0:S0+L0]`` at
+    the row's zoom, and each row's tile bbox (x0, x1, y0, y1)."""
+    v = _gather(S0, L0)
+    xt, yt = K.point_to_tile(verts[v, 0], verts[v, 1], np.repeat(zs, L0))
+    vS = np.cumsum(L0) - L0
+    return (xt, yt, np.minimum.reduceat(xt, vS), np.maximum.reduceat(xt, vS),
+            np.minimum.reduceat(yt, vS), np.maximum.reduceat(yt, vS))
+
+
+def _dense_cover(zs, verts, S0, L0, is_line, xt, yt, x0, x1g, y0, y1g):
     """Batched replication of kernels.polygon_covering_tiles /
-    kernels.line_covering_tiles over every candidate unit: (a) vertex-tile
-    marking, (b) tile-corner-in-ring (polygons; even-odd + the kernel's
-    exact on-edge rule, wraparound edges of the allclose-stripped ring),
-    (c) any-edge Liang–Barsky accept (closed ring for polygons, raw
-    polyline for lines; kernels._edges_cross_bboxes batched over (unit,
-    edge) instances). Same tests, same tolerances, same floats — so the
-    kept tile set equals the reference covering exactly."""
+    kernels.line_covering_tiles on their dense grid, over a run of rows
+    (ring ``verts[S0:S0+L0]``, vertex tiles ``xt, yt``, tile bbox
+    ``x0..x1g x y0..y1g``). One unit = one (row, grid tile); a unit is kept
+    by (a) vertex-tile marking, (b) tile-corner-in-ring (polygons; even-odd
+    + the kernel's exact on-edge rule, wraparound edges of the
+    allclose-stripped ring), (c) any-edge Liang–Barsky accept (closed ring
+    for polygons, raw polyline for lines; kernels._edges_cross_bboxes
+    batched over (unit, edge) instances). Same tests, same tolerances, same
+    floats, so the kept tiles equal the kernel's exactly. Returns the
+    covered (row, x, y), rows in order, raster (y, x) order within a row."""
+    n_rows = zs.size
+    gx = x1g - x0 + 1
+    Ku = gx * (y1g - y0 + 1)
+    unit_base = np.cumsum(Ku) - Ku
+    unit_row = np.repeat(np.arange(n_rows), Ku)
+    u_off = _ragged_arange(Ku)
+    ux = x0[unit_row] + u_off % gx[unit_row]
+    uy = y0[unit_row] + u_off // gx[unit_row]
+    n_unit = unit_row.size
+    west, south, east, north = K.tile_bounds(zs[unit_row], ux, uy)
     covered = np.zeros(n_unit, dtype=bool)
 
     # (a) vertex tiles
@@ -339,7 +365,7 @@ def _covering_mask(n_rows, n_unit, unit_row, unit_base, west, south, east,
     cry = verts[gidx, 1]
     srL = crL - 1      # allclose-stripped ring (cr is closed by construction)
 
-    poly_u = ~is_line_row[unit_row]
+    poly_u = ~is_line[unit_row]
 
     # (b) tile corner inside ring — remaining polygon units only
     rem = np.nonzero(poly_u & ~covered)[0]
@@ -395,36 +421,12 @@ def _covering_mask(n_rows, n_unit, unit_row, unit_base, west, south, east,
                             verts[i1 + 1, 1], west[iu], south[iu], east[iu],
                             north[iu])[0]
         covered |= np.bincount(iu[hit], minlength=n_unit) > 0
-    return covered
-
-
-def _row_weights_arrays(zs: np.ndarray, nv: np.ndarray, r0_start: np.ndarray,
-                        r0_len: np.ndarray,
-                        verts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Cheap per-row cost estimate for chunking: candidate-grid tile count x
-    total ring vertices (the instance-array footprint the clip passes
-    allocate). Uses ring-0's vertex-tile bbox only — an upper-bound proxy,
-    not the exact covering. Inputs are ring-0 slices (vertex start + length
-    into the global ``verts``) and per-row total vertex counts; returns
-    (weight, grid_cells) so slow_batch_arrow can route bbox-sparse rows
-    (grid over K.GRID_CAP) to _sparse_one_row_parts."""
-    _, _, x0, x1, y0, y1 = _vertex_tile_bbox(zs, verts, r0_start, r0_len)
-    grid = (x1 - x0 + 1) * (y1 - y0 + 1)
-    return np.maximum(grid * nv, 1), grid
-
-
-def _vertex_tile_bbox(zs, verts, S0, L0):
-    """Per-vertex tiles (xt, yt) of each row's ring ``verts[S0:S0+L0]`` at
-    the row's zoom, and each row's tile bbox (x0, x1, y0, y1)."""
-    v = _gather(S0, L0)
-    xt, yt = K.point_to_tile(verts[v, 0], verts[v, 1], np.repeat(zs, L0))
-    vS = np.cumsum(L0) - L0
-    return (xt, yt, np.minimum.reduceat(xt, vS), np.maximum.reduceat(xt, vS),
-            np.minimum.reduceat(yt, vS), np.maximum.reduceat(yt, vS))
+    return unit_row[covered], ux[covered], uy[covered]
 
 
 #: Work budget in grid-cell x vertex units (8M ~ 64 MB per float64 work
-#: array) that the batched clip and the PIP zone covering split their rows by.
+#: array) that the covering splits its rows by and the batched clip its
+#: (tile, row) units.
 SLOW_CAP = 8_000_000
 
 
@@ -457,108 +459,55 @@ def chunk_plan(w: np.ndarray, alone: np.ndarray,
     return plan
 
 
-def _sparse_one_row_parts(is_line1: np.ndarray, z: int, fid: int,
-                          ring_len: np.ndarray, ring_start: np.ndarray,
-                          verts: np.ndarray, extent: int, cap: int,
-                          gcap: int) -> list[tuple]:
-    """One bbox-sparse row (KEPT/stripped ring slices into the global
-    ``verts``): exact covering via the O(covered) scalar kernels, then the
-    same batched clip over exactly those (tile, row) units — per-row work
-    and memory are O(covered x vertices), never O(bbox area). Covering is
-    precomputed, so the unit mask is all-true; tile chunks are sized so
-    chunk_tiles x ring_vertices stays under ``cap``."""
-    parts: list[tuple] = []
-    r0 = ring_start[0]
-    ring0 = verts[r0:r0 + ring_len[0]].ravel()
-    if is_line1[0]:
-        tiles = K.line_covering_tiles(ring0, z, cap=gcap)
-    else:
-        tiles = K.polygon_covering_tiles(ring0, z, cap=gcap)
-    if tiles.shape[0] == 0:
-        return parts
-    nv = max(int(ring_len.sum()), 1)
-    step = max(int(cap // nv), 1)
-    rrc = np.array([ring_len.size], np.int64)
-    rfr = np.array([0, ring_len.size], np.int64)
-    for s in range(0, tiles.shape[0], step):
-        t = tiles[s:s + step]
-        ku = t.shape[0]
-        ux = t[:, 0].astype(np.int64)
-        uy = t[:, 1].astype(np.int64)
-        west, south, east, north = K.tile_bounds(z, ux, uy)
-        parts.extend(_clip_units_parts(
-            is_line1, rrc, rfr, ring_len, ring_start, verts,
-            np.zeros(ku, np.int64), np.full(ku, z, np.int64), ux, uy,
-            np.full(ku, fid, np.int64), west, south, east, north,
-            np.ones(ku, bool), extent))
-    return parts
+def cover_rows(zs, verts, S0, L0, is_line, cap: int = SLOW_CAP,
+               gcap: int = K.GRID_CAP):
+    """Exact covering tiles of every row of a batch — the engine's one
+    covering front-end (tile assignment, the multi-tile clip and the PIP
+    zone covering all call it).
+
+    Row i is the ring ``verts[S0[i]:S0[i]+L0[i]]`` (L0 >= 1) at zoom
+    ``zs[i]``: a polyline where ``is_line[i]``, else a polygon ring. Every
+    row's vertex tiles are computed once; chunk_plan packs the rows into
+    contiguous runs of at most ``cap`` grid-cell x vertex units (the size
+    of the work arrays _dense_cover allocates), each covered in one
+    _dense_cover pass. A row whose grid is over ``gcap`` cells, or whose
+    own weight is over ``cap``, goes alone through
+    K.polygon_covering_tiles / K.line_covering_tiles, whose memory stays
+    O(covered + vertices) above ``gcap``. Returns int64 arrays (row, x, y):
+    rows in order, each row's tiles exactly the kernel's, in its order."""
+    xt, yt, x0, x1, y0, y1 = _vertex_tile_bbox(zs, verts, S0, L0)
+    grid = (x1 - x0 + 1) * (y1 - y0 + 1)
+    w = grid * L0
+    vS = np.concatenate([[0], np.cumsum(L0)])
+    out = [(np.zeros(0, np.int64),) * 3]
+    for a, e, alone in chunk_plan(w, (grid > gcap) | (w > cap), cap):
+        if alone:
+            cover = (K.line_covering_tiles if is_line[a]
+                     else K.polygon_covering_tiles)
+            t = cover(verts[S0[a]:S0[a] + L0[a]].ravel(), int(zs[a]), cap=gcap)
+            out.append((np.full(t.shape[0], a, np.int64), t[:, 0], t[:, 1]))
+            continue
+        r, v = slice(a, e), slice(vS[a], vS[e])
+        row, x, y = _dense_cover(zs[r], verts, S0[r], L0[r], is_line[r],
+                                 xt[v], yt[v], x0[r], x1[r], y0[r], y1[r])
+        out.append((a + row, x, y))
+    return tuple(np.concatenate(c) for c in zip(*out))
 
 
-def _slow_core_parts(is_line_row, zs, fids, ring_len, verts, ring_start,
-                     row_ring_count, row_first_ring, extent: int) -> list[tuple]:
-    """Mirrors the reference per-row loop (tiles.clip_shapes_reference)
-    output-for-output (modulo the r4 flat geom/off transport) over
-    pre-flattened ring structures; see module docstring. Called by
-    slow_batch_arrow for each dense run of rows.
-    """
-    if is_line_row.size == 0:
-        return []
-    r0 = row_first_ring[:-1]
-    unit_row, unit_z, ux, uy, west, south, east, north, cov = covering_units(
-        zs, verts, ring_start[r0], ring_len[r0], is_line_row)
-    return _clip_units_parts(
-        is_line_row, row_ring_count, row_first_ring, ring_len, ring_start,
-        verts, unit_row, unit_z, ux, uy, fids[unit_row], west, south, east,
-        north, cov, extent)
-
-
-def covering_units(zs, verts, S0, L0, is_line_row):
-    """Dense covering of every row of a batch in one vectorized pass.
-
-    Row i's ring 0 is ``verts[S0[i]:S0[i]+L0[i]]`` (L0 >= 1) at zoom
-    ``zs[i]``. Its candidates are the vertex-tile bbox grid (the covering
-    kernels' dense grid); one unit = one (row, candidate tile), rows in
-    order, tiles in raster (y, x) order within a row. ``cov`` marks the
-    units the reference kernels would emit. Shared by the multi-tile clip
-    and the PIP zone covering (spatial_join). Returns (unit_row, unit_z, ux,
-    uy, west, south, east, north, cov)."""
-    n_rows = zs.size
-    xt, yt, x0, x1g, y0, y1g = _vertex_tile_bbox(zs, verts, S0, L0)
-    gx = x1g - x0 + 1
-    Ku = gx * (y1g - y0 + 1)
-    unit_base = np.cumsum(Ku) - Ku
-    unit_row = np.repeat(np.arange(n_rows), Ku)
-    u_off = _ragged_arange(Ku)
-    ux = x0[unit_row] + u_off % gx[unit_row]
-    uy = y0[unit_row] + u_off // gx[unit_row]
-    n_unit = unit_row.size
-    unit_z = zs[unit_row]
-
-    west, south, east, north = K.tile_bounds(unit_z, ux, uy)
-
-    # --- covering filter: keep only tiles the reference covering kernels
-    # would emit (grid candidates outside the geometry would otherwise leak
-    # rare quantization slivers past the degenerate-drop) -------------------
-    cov = _covering_mask(n_rows, n_unit, unit_row, unit_base, west, south,
-                         east, north, verts, S0, L0, xt, yt, x0, y0, gx,
-                         is_line_row)
-    return unit_row, unit_z, ux, uy, west, south, east, north, cov
-
-
-def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
+def _clip_units_parts(is_line, row_ring_count, row_first_ring, ring_len,
                       ring_start, verts, unit_row, unit_z, ux, uy, unit_fid,
-                      west, south, east, north, cov, extent) -> list[tuple]:
-    """Clip + quantize + finalize + assemble over an explicit unit set (one
-    unit = one (tile, row) pair), returning assemble_arrays part tuples
-    (polygons part, then lines part). Shared by _slow_core_parts (dense
-    grid units, covering-masked) and _sparse_one_row_parts (exact covering
-    units, cov all-true)."""
+                      extent) -> list[tuple]:
+    """Clip + quantize + finalize + assemble over covered units (one unit =
+    one (tile, row) pair, the rows' KEPT/stripped ring slices into the
+    global ``verts``), returning assemble_arrays part tuples (polygons part,
+    then lines part)."""
     n_unit = unit_row.size
     r0 = row_first_ring[:-1]
+    west, south, east, north = K.tile_bounds(unit_z, ux, uy)
     parts: list[tuple] = []
 
     # --- polygons -----------------------------------------------------------
-    pu = np.nonzero(~is_line_row[unit_row] & cov)[0]
+    pu = np.nonzero(~is_line[unit_row])[0]
     if pu.size:
         cnt = row_ring_count[unit_row[pu]]
         p_inst_unit = np.repeat(pu, cnt)
@@ -579,7 +528,7 @@ def _clip_units_parts(is_line_row, row_ring_count, row_first_ring, ring_len,
                                      unit_fid))
 
     # --- lines --------------------------------------------------------------
-    lu = np.nonzero(is_line_row[unit_row] & cov)[0]
+    lu = np.nonzero(is_line[unit_row])[0]
     if lu.size:
         lrow = unit_row[lu]
         rl = r0[lrow]
@@ -648,10 +597,9 @@ def decode_clip_rings(rb, strip: bool = True):
     clip's view (lines: ring 0 only; polys: strip the exact closing vertex,
     as kernels.clip_ring_bbox_fast does — representable as ring_len−1 with
     the same start, so no bytes are copied); ``strip=False`` is the
-    single-tile clip's view (all rings, untouched). Returns (is_line,
-    ring_len, ring_start, verts, row_ring_count, row_first_ring, raw) where
-    ``raw`` = (nv_raw, r0_start, r0_len) feeds _row_weights_arrays (which
-    uses the UNSTRIPPED ring 0 and all-raw-ring vertex counts)."""
+    single-tile clip's and the tile assignment's view (all rings,
+    untouched). Returns (is_line, ring_len, ring_start, verts,
+    row_ring_count, row_first_ring)."""
     import pyarrow.compute as pc
     cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
     is_line = np.asarray(pc.equal(cols["kind"], "line"))
@@ -664,23 +612,13 @@ def decode_clip_rings(rb, strip: bool = True):
     cum_d = np.concatenate([[0], np.cumsum(rl_d)])
     ring_start_all = (cum_d[:-1] // 2).astype(np.int64)
     V_all = rl_d // 2
-    raw_first = np.concatenate([[0], np.cumsum(rc_raw)])[:-1].astype(np.int64)
-
-    # raw per-row stats for the chunking estimator
-    nv_raw = (cum_d[raw_first + rc_raw] - cum_d[raw_first]) // 2
-    r0_start = ring_start_all[raw_first]
-    r0_len = V_all[raw_first]
-
+    raw_first = np.concatenate([[0], np.cumsum(rc_raw)]).astype(np.int64)
     if not strip:
-        row_first_ring = np.concatenate(
-            [[0], np.cumsum(rc_raw)]).astype(np.int64)
-        return (is_line, V_all, ring_start_all, verts, rc_raw,
-                row_first_ring,
-                (np.maximum(nv_raw, 0), r0_start, np.maximum(r0_len, 0)))
+        return is_line, V_all, ring_start_all, verts, rc_raw, raw_first
 
     # kept rings: lines keep ring 0 only, polys keep all
     row_ring_count = np.where(is_line, np.minimum(rc_raw, 1), rc_raw)
-    kept = _gather(raw_first, row_ring_count)
+    kept = _gather(raw_first[:-1], row_ring_count)
     s = ring_start_all[kept]
     V = V_all[kept]
     ring_is_poly = np.repeat(~is_line, row_ring_count)
@@ -695,48 +633,40 @@ def decode_clip_rings(rb, strip: bool = True):
     ring_len = V - strip
     row_first_ring = np.concatenate([[0], np.cumsum(row_ring_count)]).astype(np.int64)
     return (is_line, ring_len, s.astype(np.int64), verts,
-            row_ring_count.astype(np.int64), row_first_ring,
-            (np.maximum(nv_raw, 0), r0_start, np.maximum(r0_len, 0)))
+            row_ring_count.astype(np.int64), row_first_ring)
 
 
 def slow_batch_arrow(rb, extent: int, cap: int = SLOW_CAP,
                      gcap: int = K.GRID_CAP):
     """One input RecordBatch of multi-tile (feature, _z) rows → list of
-    output RecordBatches (CLIP_FLAT_SCHEMA), zero per-row Python end to end.
-
-    Memory-bounded two ways:
-     - a skewed batch of large low-zoom polygons (~10^3 covering tiles) is
-       split into sub-batches whose estimated instance-vertex total stays
-       under ``cap``, since the core materializes per-(tile, ring) instance
-       arrays for the whole batch at once;
-     - a bbox-sparse row (candidate grid over ``gcap`` cells — e.g. a
-       continent-spanning diagonal line at z12, whose full bbox grid would
-       be ~16.7M cells for O(10^3) actually-covered tiles)
-       routes to _sparse_one_row_parts, which enumerates the EXACT covering
-       via the O(covered) kernels and clips only those units, in tile
-       chunks sized to ``cap``.
-    Contiguous splits (chunk_plan) preserve row order => output order.
+    output RecordBatches (CLIP_FLAT_SCHEMA), zero per-row Python end to end:
+    cover_rows over every row's (stripped) ring 0, then _clip_units_parts
+    over the covered (tile, row) units in contiguous runs of at most ``cap``
+    summed ring vertices, since the clip materializes per-(tile, ring)
+    instance arrays for a whole run at once. ``gcap`` and ``cap`` also
+    bound the covering (see cover_rows): a bbox-sparse row — e.g. a
+    continent-spanning diagonal line at z12, whose full bbox grid would be
+    ~16.7M cells for O(10^3) covered tiles — or a row over the work budget
+    is covered alone by the O(covered) kernels, so only covered tiles are
+    ever clipped. Units come in row order, so output follows row order.
     """
     if rb.num_rows == 0:
         return []
-    (is_line, ring_len, ring_start, verts, row_ring_count, row_first_ring,
-     (nv_raw, r0_start, r0_len)) = decode_clip_rings(rb)
+    (is_line, ring_len, ring_start, verts, row_ring_count,
+     row_first_ring) = decode_clip_rings(rb)
     zs = np.asarray(rb.column(rb.schema.names.index("_z"))).astype(np.int64)
     fids = np.asarray(rb.column(rb.schema.names.index("feature_id"))).astype(np.int64)
-    w, g = _row_weights_arrays(zs, nv_raw, r0_start, r0_len, verts)
-
+    r0 = row_first_ring[:-1]
+    row, ux, uy = cover_rows(zs, verts, ring_start[r0], ring_len[r0], is_line,
+                             cap, gcap)
+    cum = np.concatenate([[0], np.cumsum(ring_len)])
+    nv = np.maximum(cum[row_first_ring[1:]] - cum[r0], 1)
     parts: list[tuple] = []
-    for a, b_, alone in chunk_plan(w, g > gcap, cap):
-        rs, re = int(row_first_ring[a]), int(row_first_ring[b_])
-        if alone:
-            parts.extend(_sparse_one_row_parts(
-                is_line[a:b_], int(zs[a]), int(fids[a]), ring_len[rs:re],
-                ring_start[rs:re], verts, extent, cap, gcap))
-        else:
-            parts.extend(_slow_core_parts(
-                is_line[a:b_], zs[a:b_], fids[a:b_], ring_len[rs:re], verts,
-                ring_start[rs:re], row_ring_count[a:b_],
-                row_first_ring[a:b_ + 1] - rs, extent))
+    for a, e, _ in chunk_plan(nv[row], np.zeros(row.size, bool), cap):
+        u = row[a:e]
+        parts.extend(_clip_units_parts(
+            is_line, row_ring_count, row_first_ring, ring_len, ring_start,
+            verts, u, zs[u], ux[a:e], uy[a:e], fids[u], extent))
     return parts_to_batches(parts)
 
 
@@ -775,8 +705,8 @@ def fast_batch_arrow(rb, extent: int):
     if rb.num_rows == 0:
         return []
     import pyarrow.compute as pc
-    (is_line, ring_len, ring_start, verts, feat_ring_count, feat_first_ring,
-     _raw) = decode_clip_rings(rb, strip=False)
+    (is_line, ring_len, ring_start, verts, feat_ring_count,
+     feat_first_ring) = decode_clip_rings(rb, strip=False)
     fids = np.asarray(rb.column(rb.schema.names.index("feature_id"))).astype(np.int64)
     zs_col = rb.column(rb.schema.names.index("_zs"))
     m = np.asarray(pc.list_value_length(zs_col)).astype(np.int64)

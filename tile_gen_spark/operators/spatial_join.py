@@ -4,22 +4,26 @@
 join". Shape:
 
  1. **Bucket** both sides at a quadkey resolution ``res``:
-    - points relationally (G2 tile math as Spark SQL expressions + G4 quadkey
-      digits — zero Python, whole-stage-codegen'd);
-    - polygons via G8 covering tiles: one batched covering per Arrow batch
-      of zones (clip_vec.covering_units, the same pass the tile clip uses),
-      bbox-sparse or over-budget zones per zone through the kernel; one row
-      per covering quadkey.
- 2. **Equi-join** the buckets. A point lives in exactly ONE bucket, so the
-    join emits each candidate (point, zone) pair at most once — no
-    dropDuplicates shuffle needed (cheaper than generic bucket joins that
-    duplicate both sides). The zone side is typically the small dim →
-    broadcast when under the threshold; AQE skew-split handles hot city
-    buckets on the shuffle path.
- 3. **Refine** with the exact even-odd PIP kernel (G7), Arrow-batched.
+    - points relationally (G2 tile math as Spark SQL expressions, packed
+      into one integer bucket — zero Python, whole-stage-codegen'd);
+    - polygons via G8 covering tiles: one clip_vec.cover_rows call per
+      Arrow batch of zones (the covering the tile assignment and clip use
+      too); one row per covering bucket, with the zone's bbox.
+ 2. **Equi-join** the buckets and keep candidates inside the zone bbox. A
+    point lives in exactly ONE bucket, so the join emits each candidate
+    (point, zone) pair at most once — no dropDuplicates shuffle needed
+    (cheaper than generic bucket joins that duplicate both sides). The zone
+    side is typically the small dim → broadcast when under the threshold;
+    AQE skew-split handles hot city buckets on the shuffle path.
+ 3. **Refine** with the exact even-odd PIP test (G7), relationally
+    (pip_refine_relational): candidates join a per-edge table of the zones
+    (broadcast, or a shuffle join on zone_id when the zones are too big),
+    per-edge crossing and on-edge flags are codegen'd column arithmetic,
+    and a hash aggregate per (point, zone) takes the crossing parity.
 
-At 100 TB the only shuffle is the bucket equi-join (or none if the zone side
-broadcasts); the refine is a narrow map.
+At 100 TB the shuffles are the bucket equi-join and, without a broadcast,
+the per-edge join (or none if the zone side broadcasts); the parity
+aggregate adds no exchange either way.
 """
 
 from __future__ import annotations
@@ -34,8 +38,7 @@ from pyspark.sql import functions as F
 from ..functions import kernels as K
 from ..plans import sqlgen as S
 from ..plans.session import shuffle_parts
-from .clip_vec import (SLOW_CAP, _row_weights_arrays, chunk_plan,
-                       covering_units)
+from .clip_vec import SLOW_CAP, cover_rows
 
 ZONE_QK_SCHEMA = ("zone_id bigint, qb bigint, bminx double, bmaxx double, "
                   "bminy double, bmaxy double")
@@ -69,21 +72,12 @@ def zoom_filter(df: DataFrame, min_z: int, max_z: int,
     return df.filter((F.col(z_col) >= int(min_z)) & (F.col(z_col) <= int(max_z)))
 
 
-def points_with_quadkey(points: DataFrame, res: int,
-                        lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """Relational quadkey at resolution ``res`` (G2 + G4, pure Spark SQL)."""
-    x = S.tile_x(lon_col, res, S.SPARK)
-    y = S.tile_y(lat_col, res, S.SPARK)
-    return points.withColumn("qk", F.expr(S.quadkey(x, y, res, S.SPARK)))
-
-
 def points_with_bucket(points: DataFrame, res: int,
                        lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Integer quadkey bucket x·2^res + y (bijective with the G4 string at
     fixed res): two floor expressions instead of ``res`` string casts +
     concat — the round-1 string build was a measured fixed cost on the point
-    side (VERDICT r1 perf note). String quadkeys (points_with_quadkey) remain
-    for the prefix-rollup queries where the prefix property matters."""
+    side (VERDICT r1 perf note)."""
     x = S.tile_x(lon_col, res, S.SPARK)
     y = S.tile_y(lat_col, res, S.SPARK)
     # r7b: coalesce makes qb provably non-nullable, so the IsNotNull(qb)
@@ -102,15 +96,11 @@ def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
     """One Arrow batch of zones (zone_id, ring) → covering rows
     (ZONE_QK_SCHEMA) in zone order, each zone's tiles in kernel order.
 
-    Rings are read as Arrow offsets plus flat values. clip_vec.chunk_plan
-    packs the zones into contiguous runs of at most ``cap`` grid-cell x
-    vertex units (the size of the work arrays covering_units allocates),
-    and each run is covered in one clip_vec.covering_units pass. A zone
-    whose candidate grid is over ``gcap`` cells, or whose own weight is
-    over ``cap`` (a large, high-vertex zone), goes alone through
-    K.polygon_covering_tiles, whose memory stays O(cells + vertices).
-    Either way the rows equal K.polygon_covering_tiles per zone (tests pin
-    it bit for bit).
+    Rings are read as Arrow offsets plus flat values and covered in one
+    clip_vec.cover_rows call (``gcap`` and ``cap`` route a bbox-sparse or
+    over-budget zone alone through K.polygon_covering_tiles); the bbox
+    columns come from ``reduceat``. The rows equal K.polygon_covering_tiles
+    per zone (tests pin it bit for bit).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -125,22 +115,9 @@ def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
     verts = np.asarray(pc.list_flatten(ring)).astype(np.float64).reshape(-1, 2)
     keep = L > 0                      # a zone without vertices covers nothing
     ids, S, L = ids[keep], S[keep], L[keep]
-    zs = np.full(ids.size, res, np.int64)
-    w, g = _row_weights_arrays(zs, L, S, L, verts)
-    out_zone, out_qb = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
-    for a, e, alone in chunk_plan(w, (g > gcap) | (w > cap), cap):
-        if alone:
-            tiles = K.polygon_covering_tiles(verts[S[a]:S[a] + L[a]].ravel(),
-                                             res, cap=gcap)
-            out_zone.append(np.full(tiles.shape[0], a, np.int64))
-            out_qb.append(tiles[:, 0] * (1 << res) + tiles[:, 1])
-            continue
-        unit_row, _, ux, uy, *_, cov = covering_units(
-            zs[a:e], verts, S[a:e], L[a:e], np.zeros(e - a, bool))
-        out_zone.append(a + unit_row[cov])
-        out_qb.append(ux[cov] * (1 << res) + uy[cov])
-    zi = np.concatenate(out_zone)
-    cols = [ids[zi], np.concatenate(out_qb)]
+    zi, x, y = cover_rows(np.full(ids.size, res, np.int64), verts, S, L,
+                          np.zeros(ids.size, bool), cap, gcap)
+    cols = [ids[zi], x * (1 << res) + y]
     for red, k, eps in ((np.minimum, 0, -_BBOX_EPS), (np.maximum, 0, _BBOX_EPS),
                         (np.minimum, 1, -_BBOX_EPS), (np.maximum, 1, _BBOX_EPS)):
         bb = red.reduceat(verts[:, k], S) if S.size else np.zeros(0)
@@ -152,9 +129,8 @@ def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
 
 def zones_covering_quadkeys(zones: DataFrame, res: int) -> DataFrame:
     """G8 per zone → exploded (zone_id, qb) covering rows plus the zone's
-    ±_BBOX_EPS bbox: one batched covering per Arrow batch
-    (zone_cover_batch, sharing clip_vec.covering_units with the tile clip),
-    sparse-grid and over-budget zones covered per zone by the kernel."""
+    ±_BBOX_EPS bbox: one zone_cover_batch (clip_vec.cover_rows, the
+    covering the tile assignment and clip use too) per Arrow batch."""
     return zones.select("zone_id", "ring").mapInArrow(
         lambda batches: (zone_cover_batch(rb, res) for rb in batches),
         ZONE_QK_SCHEMA)

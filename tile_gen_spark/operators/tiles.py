@@ -10,13 +10,14 @@ Scale design:
  - POINT assignment is pure relational Spark SQL (floor/trig from
    plans/sqlgen.py — no Python crossing at all), so Catalyst pushes filters
    and prunes columns around it, and it whole-stage-codegens.
- - Polygon/line covering + clipping are Arrow-native ``mapInArrow`` passes
-   over ragged numpy, both in clip_vec (single-tile zooms:
-   fast_batch_arrow; multi-tile zooms: slow_batch_arrow; one shared
-   quantize/finalize) — the only Python crossings, placed AFTER relational
-   filters (UDF-barrier management, SURVEY.md §4.2). This module keeps the
-   Spark plan around them and the per-row reference clip
-   (clip_reference_batch), which shares none of their batched code.
+ - Polygon/line assignment (assign_batch) and covering + clipping are
+   Arrow-native ``mapInArrow`` passes over ragged numpy in clip_vec (one
+   covering front-end, cover_rows; single-tile zooms: fast_batch_arrow;
+   multi-tile zooms: slow_batch_arrow; one shared quantize/finalize) — the
+   only Python crossings, placed AFTER relational filters (UDF-barrier
+   management, SURVEY.md §4.2). This module keeps the Spark plan around
+   them and the per-row reference clip (clip_reference_batch), which shares
+   none of their batched code.
  - The per-tile ``collect_list`` agg (tile_feature_lists_dim) runs on ONE
    hash(tile key) exchange over-partitioned ×OVERPART, unsalted; the salted
    two-phase shape (agg by (z,x,y,salt) then flatten, A2/J9) remains only in
@@ -26,7 +27,6 @@ Scale design:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from ..functions import kernels as K
 from ..plans import sqlgen as S
 from ..plans.session import shuffle_parts
-from .clip_vec import fast_batch_arrow, slow_batch_arrow
+from .clip_vec import (cover_rows, decode_clip_rings, fast_batch_arrow,
+                       slow_batch_arrow)
 
 ASSIGN_SCHEMA = "feature_id bigint, z int, x bigint, y bigint"
 CLIP_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, kind string, "
@@ -156,32 +157,37 @@ def assign_points(points: DataFrame, zooms: list[int]) -> DataFrame:
             .select("feature_id", "t.z", "t.x", "t.y"))
 
 
+def assign_batch(rb, zooms: list[int]):
+    """One Arrow batch of shapes (feature_id, kind, coords) → ASSIGN_SCHEMA
+    rows: ring 0 of every feature at every zoom, covered in one
+    clip_vec.cover_rows call (feature-major, then zoom order, each row's
+    tiles in kernel order)."""
+    import pyarrow as pa
+    is_line, ring_len, ring_start, verts, rc, first = decode_clip_rings(
+        rb, strip=False)
+    fids = np.asarray(rb.column(rb.schema.names.index("feature_id"))).astype(np.int64)
+    # a feature without a ring-0 vertex covers nothing
+    L0 = np.zeros(rc.size, np.int64)
+    L0[rc > 0] = ring_len[first[:-1][rc > 0]]
+    has = np.nonzero(L0 > 0)[0]
+    m = len(zooms)
+    feat = np.repeat(has, m)
+    zs = np.tile(np.asarray(zooms, np.int64), has.size)
+    r0 = first[feat]
+    row, x, y = cover_rows(zs, verts, ring_start[r0], ring_len[r0],
+                           is_line[feat])
+    return pa.RecordBatch.from_arrays(
+        [pa.array(fids[feat[row]], pa.int64()), pa.array(zs[row], pa.int32()),
+         pa.array(x, pa.int64()), pa.array(y, pa.int64())],
+        names=["feature_id", "z", "x", "y"])
+
+
 def assign_shapes(shapes: DataFrame, zooms: list[int]) -> DataFrame:
-    """G8: polygons/lines → covering tiles per zoom (Arrow-batched numpy)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            fid_o, z_o, x_o, y_o = [], [], [], []
-            for fid, kind, coords in zip(b["feature_id"], b["kind"], b["coords"]):
-                ring = np.asarray(coords[0], dtype=np.float64)
-                for z in zooms:
-                    if kind == "polygon":
-                        tiles = K.polygon_covering_tiles(ring, z)
-                    else:
-                        tiles = K.line_covering_tiles(ring, z)
-                    for xx, yy in tiles:
-                        fid_o.append(fid)
-                        z_o.append(z)
-                        x_o.append(xx)
-                        y_o.append(yy)
-            yield pd.DataFrame({
-                "feature_id": pd.Series(fid_o, dtype="int64"),
-                "z": pd.Series(z_o, dtype="int32"),
-                "x": pd.Series(x_o, dtype="int64"),
-                "y": pd.Series(y_o, dtype="int64"),
-            })
-
-    return shapes.select("feature_id", "kind", "coords").mapInPandas(fn, ASSIGN_SCHEMA)
+    """G8: polygons/lines → covering tiles per zoom, one assign_batch per
+    Arrow batch (no per-row Python)."""
+    return shapes.select("feature_id", "kind", "coords").mapInArrow(
+        lambda batches: (assign_batch(rb, zooms) for rb in batches),
+        ASSIGN_SCHEMA)
 
 
 def assign_features(features: DataFrame, zooms: list[int]) -> DataFrame:

@@ -55,12 +55,6 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
         # ~10k rows per Arrow batch: wide geometry rows (SURVEY.md §4.2)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # shuffle/broadcast block codec (SPARK_GRAFT_IO_CODEC): on this
-        # box shuffle files live on tmpfs, so shuffle bytes ARE memory
-        # traffic — the measured 32-core constraint. A/B'd lz4 (Spark
-        # default) vs zstd on the tile section; see BENCH/BASELINE.md.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
         .config("spark.sql.session.timeZone", "UTC")
         # single-JVM local mode puts ALL executor threads in the driver heap;
         # 16g measured flat-stable across reps on a 32-core box — 8g went
@@ -74,17 +68,15 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
     # Local-mode shuffle files on tmpfs when available: all N threads share
     # ONE disk in local mode, which serializes shuffle-heavy stages — an
     # artifact a real cluster (per-node SSDs scaling with node count) does
-    # not have. Honored first: SPARK_LOCAL_DIRS, an explicit spark.local.dir
-    # (via SPARK_GRAFT_LOCAL_DIR or spark-defaults), or the opt-out
-    # SPARK_GRAFT_NO_SHM=1. tmpfs competes with the JVM heap for RAM, so the
-    # override is also skipped when /dev/shm has < 8 GiB free (large spills
-    # that would fit on disk must not fail on a full tmpfs).
+    # not have. Honored first (and the way to keep shuffle files off
+    # tmpfs): SPARK_LOCAL_DIRS, or an explicit spark.local.dir via
+    # SPARK_GRAFT_LOCAL_DIR. tmpfs competes with the JVM heap for RAM, so
+    # the override is also skipped when /dev/shm has < 8 GiB free (large
+    # spills that would fit on disk must not fail on a full tmpfs).
     explicit = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if explicit:
         b = b.config("spark.local.dir", explicit)
-    elif ("SPARK_LOCAL_DIRS" not in os.environ
-          and os.environ.get("SPARK_GRAFT_NO_SHM") != "1"
-          and os.path.isdir("/dev/shm")):
+    elif "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
         try:
             st = os.statvfs("/dev/shm")
             shm_free = st.f_bavail * st.f_frsize
@@ -95,8 +87,9 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
             os.makedirs(shm, exist_ok=True)
             b = b.config("spark.local.dir", shm)
     # experiment passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — lets bench
-    # A/Bs (codec, compress on/off, …) run without code edits; applied LAST
-    # so an experiment can override any default above.
+    # A/Bs (e.g. spark.io.compression.codec, Spark's lz4 by default) run
+    # without code edits; applied LAST so an experiment can override any
+    # default above.
     for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF",
                                           "").split(";")):
         k, _, v = kv.partition("=")
