@@ -1,5 +1,8 @@
 """MVT 2.1 encoder round-trip tests (pure Python, no Spark)."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from tile_gen_spark.operators import mvt
 
 
@@ -152,3 +155,85 @@ def test_long_string_value_varint_length():
               "props": {"s": s}}]
     layer = mvt.decode_tile(mvt.encode_tile(feats))["layers"][0]
     assert mvt.decode_value(layer["values"][0]) == s
+
+
+# --- property: encode_tile / decode_tile round trip -------------------------
+
+_COORD = st.integers(-(1 << 16), 1 << 16)
+_VERTEX = st.tuples(_COORD, _COORD)
+_PROP_VALUE = st.one_of(
+    # a small pool of look-alikes, so the shared Value table's dedupe meets
+    # 1 / 1.0 / True and 0.0 / -0.0 within one layer
+    st.sampled_from([0, 1, 0.0, -0.0, 1.0, True, False, "", "1"]),
+    st.text(max_size=12), st.booleans(),
+    st.integers(-(1 << 63), (1 << 63) - 1), st.floats())
+
+
+@st.composite
+def _feature(draw):
+    kind = draw(st.sampled_from(["point", "line", "polygon"]))
+    if kind == "point":
+        pieces = draw(st.lists(st.lists(_VERTEX, min_size=1, max_size=1),
+                               min_size=1, max_size=3))
+    elif kind == "line":
+        pieces = draw(st.lists(st.lists(_VERTEX, min_size=2, max_size=8),
+                               min_size=1, max_size=3))
+    else:
+        # exterior ring plus holes; some rings repeat their first vertex,
+        # which the encoder drops before ClosePath
+        pieces = []
+        for ring in draw(st.lists(st.lists(_VERTEX, min_size=3, max_size=8),
+                                  min_size=1, max_size=4)):
+            pieces.append(ring + ring[:1] if draw(st.booleans()) else ring)
+    return {"feature_id": draw(st.integers(0, (1 << 64) - 1)), "kind": kind,
+            "geom": [[c for v in p for c in v] for p in pieces],
+            "props": draw(st.dictionaries(st.text(max_size=6), _PROP_VALUE,
+                                          max_size=4))}
+
+
+def _expected_paths(f):
+    out = []
+    for p in f["geom"]:
+        pts = [(p[i], p[i + 1]) for i in range(0, len(p), 2)]
+        if f["kind"] == "polygon" and len(pts) > 1 and pts[0] == pts[-1]:
+            pts = pts[:-1]
+        out.append(pts)
+    return out
+
+
+def _same_value(a, b):
+    if isinstance(a, float) and isinstance(b, float):
+        # bit-exact: 0.0 and -0.0 compare equal, NaN equals nothing
+        return a.hex() == b.hex()
+    return type(a) is type(b) and a == b
+
+
+@settings(max_examples=300, deadline=None, derandomize=True, database=None)
+@given(feats=st.lists(_feature(), max_size=6),
+       name=st.text(min_size=1, max_size=8), split=st.booleans())
+def test_encode_decode_roundtrip_property(feats, name, split):
+    """Every feature's id, type, geometry and typed props come back from the
+    wire bytes, in input order, in one layer or one layer per kind."""
+    layers = mvt.decode_tile(mvt.encode_tile(feats, layer_name=name,
+                                             split_layers=split))["layers"]
+    if split:
+        groups = [(f"{name}_{k}", [f for f in feats if f["kind"] == k])
+                  for k in ("point", "line", "polygon")]
+        groups = [g for g in groups if g[1]]
+    else:
+        groups = [(name, feats)]
+    assert [layer["name"] for layer in layers] == [g[0] for g in groups]
+    for layer, (_, want) in zip(layers, groups):
+        assert layer["version"] == 2 and layer["extent"] == 4096
+        assert len(layer["features"]) == len(want)
+        vals = [mvt.decode_value(v) for v in layer["values"]]
+        for got, f in zip(layer["features"], want):
+            assert got["id"] == f["feature_id"]
+            assert got["type"] == mvt.GEOM_TYPE[f["kind"]]
+            assert mvt.decode_geometry(got["geometry"]) == _expected_paths(f)
+            tags = got["tags"]
+            props = {layer["keys"][tags[i]]: vals[tags[i + 1]]
+                     for i in range(0, len(tags), 2)}
+            assert props.keys() == f["props"].keys()
+            for k, v in f["props"].items():
+                assert _same_value(props[k], v), (k, props[k], v)

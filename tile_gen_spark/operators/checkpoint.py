@@ -137,7 +137,8 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
             obs, F.count(F.lit(1)).alias("tiles"), F.sum("n_features").alias("feature_rows"))
         out_path = os.path.join(out_dir, f"z={z}")
         # O2 sink clustering: few files per zoom, rows sorted (z,x,y) inside
-        cluster_tiles(tiles).write.mode("overwrite").parquet(out_path)  # idempotent per zoom
+        sink = cluster_tiles(tiles)
+        sink.write.mode("overwrite").parquet(out_path)  # idempotent per zoom
         got = obs.get  # free — piggybacks on the sink action (S5/A3 metrics)
         n_tiles = int(got["tiles"])
         feature_rows = int(got["feature_rows"] or 0)
@@ -148,7 +149,9 @@ def run_tile_job(spark: SparkSession, features: DataFrame, out_dir: str,
         summary = zoom_summary_row(spark, z, stage, run_id, started, lineage,
                                    input_rows=feature_rows, output_rows=n_tiles)
         if n_tiles > 0:
-            written = spark.read.parquet(out_path)
+            # read back with the schema it was written with: inferring it
+            # from the footers would start a job of its own
+            written = spark.read.schema(sink.schema).parquet(out_path)
             ckpt.commit(summary.unionByName(
                 partition_metrics(written, z, stage, run_id, started, lineage)))
         else:

@@ -173,7 +173,9 @@ def encode_tile(features: list[dict], layer_name: str = "features",
         props = f.get("props") or {}
         for k in sorted(props):
             v = _norm_value(props[k])
-            vk = (type(v).__name__, v)  # 1 and True dedupe separately
+            # 1, 1.0 and True dedupe separately; floats by their exact bits,
+            # since 0.0 == -0.0 would merge the two zeros into one Value
+            vk = (type(v).__name__, v.hex() if isinstance(v, float) else v)
             if k not in kidx:
                 kidx[k] = len(keys)
                 keys.append(k)

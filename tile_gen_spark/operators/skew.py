@@ -4,9 +4,10 @@
 salted repartitioning and AQE skew-join splitting." AQE (enabled in
 plans/session.py) splits skewed JOIN partitions at runtime. The production
 ``collect_list`` agg (tiles.tile_feature_lists_dim) is unsalted — its one
-over-partitioned hash(tile key) exchange measured faster than the two-phase
-salt — so the factor picked here drives only the salted two-phase shape of
-the nested reference tiles.tile_feature_lists. The pre-pass is a ~KB
+hash(tile key) exchange, over-partitioned on large inputs
+(tiles.clip_parts), measured faster than the two-phase salt — so the factor
+picked here drives only the salted two-phase shape of the nested reference
+tiles.tile_feature_lists. The pre-pass is a ~KB
 aggregate collect (SURVEY.md §4.3).
 """
 

@@ -19,9 +19,12 @@ Scale design:
    them and the per-row reference clip (clip_reference_batch), which shares
    none of their batched code.
  - The per-tile ``collect_list`` agg (tile_feature_lists_dim) runs on ONE
-   hash(tile key) exchange over-partitioned ×OVERPART, unsalted; the salted
-   two-phase shape (agg by (z,x,y,salt) then flatten, A2/J9) remains only in
-   the nested reference tile_feature_lists.
+   hash(tile key) exchange, unsalted; the salted two-phase shape (agg by
+   (z,x,y,salt) then flatten, A2/J9) remains only in the nested reference
+   tile_feature_lists.
+ - The clip and agg exchanges take one partition count, clip_parts: the
+   shuffle partitions, over-partitioned ×OVERPART only when the input's
+   optimized-plan size is at least OVERPART_MIN_BYTES per partition.
 """
 
 from __future__ import annotations
@@ -52,11 +55,18 @@ CLIP_FLAT_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, "
                     "geom array<int>, off array<int>")
 
 #: Over-partitioning of the clip and agg exchanges relative to
-#: shuffle_parts: smaller tasks pack the waves evenly around the hot low-z
-#: tiles and cut per-task collect state. r7 A/B of the agg phase at the bench
-#: shape: ×1 = 8.7 s, ×4 = 6.5 s, ×8 = 6.5 s (×2 = 11.7 s — a reproducible
-#: hash-collision pathology at 128 partitions, avoided).
+#: shuffle_parts for large inputs: smaller tasks pack the waves evenly around
+#: the hot low-z tiles and cut per-task collect state. r7 A/B of the agg
+#: phase at the 400k-page shape (local[32]): ×1 = 8.7 s, ×4 = 6.5 s,
+#: ×8 = 6.5 s (×2 = 11.7 s — a reproducible hash-collision pathology at 128
+#: partitions, avoided).
 OVERPART = 4
+#: Input bytes per shuffle partition from which clip_parts over-partitions.
+#: Below it each extra Python task costs more than it spreads: the cached
+#: features of 4,000 uniform pages (1.4 MB) clip in a 36-task stage of 2.1 s
+#: at ×4 and a 12-task stage of 0.8 s at ×1 (4 shuffle partitions, 4 vCPU).
+#: The 400k city-skewed pages (113–139 MB) stay at ×4 up to 64 partitions.
+OVERPART_MIN_BYTES = 1 << 20
 
 #: flat (geom, off) → the public nested array<array<int>> ring list —
 #: pure Catalyst expression, no Python. geom is interleaved [qx, qy, …]; off
@@ -223,8 +233,21 @@ def clip_points_relational(points: DataFrame, zooms: list[int],
                     F.array(F.array("t.qx", "t.qy")).alias("geom"), "props"))
 
 
+def clip_parts(size_bytes: int, base: int) -> int:
+    """Partition count of the clip and agg exchanges for an input of
+    ``size_bytes`` at ``base`` shuffle partitions: ×OVERPART from
+    OVERPART_MIN_BYTES per partition up, else ``base``."""
+    return base * OVERPART if size_bytes >= base * OVERPART_MIN_BYTES else base
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's sizeInBytes of df's optimized plan — the measured bytes
+    of a materialized cache, else an estimate; reading it starts no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def _n_clip_parts(df: DataFrame) -> int:
-    return shuffle_parts(df.sparkSession) * OVERPART
+    return clip_parts(plan_bytes(df), shuffle_parts(df.sparkSession))
 
 
 def clip_reference_batch(b: pd.DataFrame,
@@ -356,18 +379,22 @@ def clip_shapes_direct(shapes: DataFrame, zooms: list[int],
 
 
 def clip_shapes_flat(shapes: DataFrame, zooms: list[int],
-                     extent: int = K.MVT_EXTENT) -> DataFrame:
+                     extent: int = K.MVT_EXTENT,
+                     n_parts: int | None = None) -> DataFrame:
     """clip_shapes_direct's flat core (CLIP_FLAT_SCHEMA): what actually
     crosses Arrow and the downstream agg exchanges. No kind/props columns,
     geom as ONE interleaved [qx, qy, …] int array + ring prefix offsets
-    (NULL off for single-piece rows)."""
+    (NULL off for single-piece rows). ``n_parts`` (default: clip_parts of
+    ``shapes``) is the partition count of both clip exchanges."""
     # Explode per (feature, zoom) BEFORE the Python stage and hash-spread on
     # (feature_id, z): clip CPU varies ~1000× per feature and grows with z, so
     # fine-grained rows pack the task waves evenly (the 64-partition version
     # ran local[32] in 2 straggler-dominated waves — measured 0.5 efficiency);
-    # OVERPART× over-partitioning bounds the max wave skew to ~1/OVERPART of
-    # a wave.
-    n_parts = _n_clip_parts(shapes)
+    # on large inputs clip_parts' OVERPART× over-partitioning bounds the max
+    # wave skew to ~1/OVERPART of a wave, and small ones keep one task per
+    # shuffle partition.
+    if n_parts is None:
+        n_parts = _n_clip_parts(shapes)
 
     # relational zoom split: bbox corner tiles (same G2 SQL text as the point
     # path, so the split can never disagree with the kernels) — zero Python.
@@ -545,14 +572,16 @@ def build_tile_features(features: DataFrame, zooms: list[int],
     TILEGEN_BROADCAST_DIM (the huge-dim escape hatch, no code change).
     Output equals tile_feature_lists over clip_points_relational ∪
     clip_shapes_reference (the nested per-row reference pipeline)."""
+    # one partition count, from the input's size, for the clip and the agg
+    n_parts = _n_clip_parts(features)
     pts = clip_points_flat(features.filter(F.col("kind") == "point"), zooms,
                            extent)
     shp = clip_shapes_flat(features.filter(F.col("kind") != "point"), zooms,
-                           extent)
+                           extent, n_parts=n_parts)
     dim = features.select("feature_id", "kind", "props")
     return tile_feature_lists_dim(pts.unionByName(shp), dim,
                                   broadcast_dim=broadcast_dim,
-                                  pack_key=max(zooms) <= 29)
+                                  pack_key=max(zooms) <= 29, n_agg=n_parts)
 
 
 #: r6 packed tile key: (z,x,y) as ONE bigint through the agg exchanges.
@@ -567,7 +596,8 @@ _TXY_MASK = (1 << 29) - 1
 
 def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
                            broadcast_dim: bool | None = None,
-                           pack_key: bool | None = None) -> DataFrame:
+                           pack_key: bool | None = None,
+                           n_agg: int | None = None) -> DataFrame:
     """A1/A2 with the props dim joined AFTER the last exchange: kind/props
     never enter ANY shuffle, and there is exactly ONE full-width collect.
 
@@ -588,6 +618,8 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
     ``broadcast_dim=False`` leaves the join unhinted — AQE picks a shuffle
     join for dims too big to broadcast (adds that join's exchange only);
     None reads TILEGEN_BROADCAST_DIM (default: force broadcast).
+    ``n_agg`` is the exchange's partition count (default: clip_parts of
+    ``clipped``; build_tile_features passes its clip's count).
     """
     # r7 (ADVICE r6): a direct caller with z > 29 used to get silently
     # corrupted packed keys (x bits overflow into the z field). When the
@@ -599,8 +631,9 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
     if pack_key is None:
         pack_key = True
     d = _dim_join_side(dim.select("feature_id", "kind", "props"), broadcast_dim)
-    # scale-proportional and AQE-exempt, over-partitioned like the clip
-    n_agg = shuffle_parts(clipped.sparkSession) * OVERPART
+    # scale-proportional and AQE-exempt, sized like the clip
+    if n_agg is None:
+        n_agg = _n_clip_parts(clipped)
 
     keys = ["_txy"] if pack_key else ["z", "x", "y"]
     pack_expr = (_TXY_PACK if not guarded else

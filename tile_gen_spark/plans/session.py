@@ -50,7 +50,8 @@ def get_spark(app: str = "tile-gen-spark", master: str | None = None,
         # measured SLOWER at local[32] (58.5 s vs 47.2 s pipeline) — the
         # Arrow extract wants few large batches (pandas .str vectorization
         # amortizes per-task fixed cost), and the stages that must scale
-        # (clip, salted agg) already pin explicit AQE-exempt partition counts.
+        # (the shape clip and the tile agg) pin explicit AQE-exempt
+        # partition counts sized from their input (tiles.clip_parts).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # ~10k rows per Arrow batch: wide geometry rows (SURVEY.md §4.2)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
