@@ -140,10 +140,11 @@ def q_latest_order_per_customer(d: str) -> str:
 def q_pip_join(d: str) -> str:
     """Even-odd ray-cast PIP in pure SQL (both dialects) — the oracle twin of
     the quadkey-bucketed pip_join operator. Boundary rule matches the kernel
-    (kernels.points_in_ring): a point ON an edge (|cross| ≤ 1e-12·max(1,len),
-    projection within the segment) counts as inside — with 6-decimal rounded
-    inputs a point CAN land exactly on an edge, and a strict-crossing oracle
-    would then diverge nondeterministically from the operator."""
+    (kernels.points_in_ring): a point ON an edge (within 1e-12° of it,
+    |cross| ≤ 1e-12·len, projection within the segment) counts as inside —
+    with 6-decimal rounded inputs a point CAN land exactly on an edge, and a
+    strict-crossing oracle would then diverge nondeterministically from the
+    operator."""
     pts = _points_cte(d, f"WHERE {PIP_POINT_FILTER}")
     verts = _zone_vertices(d, N_ZONES)
     return f"""
@@ -160,8 +161,8 @@ pe AS (
           AND p.lon < (e.x2 - e.x1) * (p.lat - e.y1) / (e.y2 - e.y1) + e.x1
          THEN 1 ELSE 0 END AS crossing,
     CASE WHEN abs((p.lon - e.x1) * (e.y2 - e.y1) - (p.lat - e.y1) * (e.x2 - e.x1))
-              <= 1e-12 * greatest(1.0, sqrt((e.x2 - e.x1) * (e.x2 - e.x1)
-                                            + (e.y2 - e.y1) * (e.y2 - e.y1)))
+              <= 1e-12 * sqrt((e.x2 - e.x1) * (e.x2 - e.x1)
+                              + (e.y2 - e.y1) * (e.y2 - e.y1))
           AND ((p.lon - e.x1) * (e.x2 - e.x1) + (p.lat - e.y1) * (e.y2 - e.y1)) >= 0
           AND ((p.lon - e.x1) * (e.x2 - e.x1) + (p.lat - e.y1) * (e.y2 - e.y1))
               <= ((e.x2 - e.x1) * (e.x2 - e.x1) + (e.y2 - e.y1) * (e.y2 - e.y1))

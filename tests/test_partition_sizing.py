@@ -1,15 +1,25 @@
-"""The clip and agg exchanges' partition count (tiles.clip_parts): the
-shuffle partitions, ×OVERPART only when the input's optimized-plan size is
-at least OVERPART_MIN_BYTES per partition. The rule is pinned at measured
-input sizes, build_tile_features is checked to put its one count on every
-clip and agg exchange, and its rows must not depend on that count."""
+"""Partition counts sized from plan bytes (plans.session.plan_bytes).
+
+- The clip and agg exchanges (tiles.clip_parts): the shuffle partitions,
+  ×OVERPART only when the input's optimized-plan size is at least
+  MIN_TASK_BYTES per partition. The rule is pinned at measured input sizes,
+  build_tile_features is checked to put its one count on every clip and agg
+  exchange, and its rows must not depend on that count.
+- The PIP zone side (spatial_join.zone_side): coalesced to one partition
+  per MIN_TASK_BYTES, on both pip_join paths, with rows independent of it.
+- plan_bytes reads a cache built after the DataFrame was first planned.
+"""
 
 import re
 
+import pytest
+from pyspark.sql import functions as F
+
 from tests.test_pipeline import _canon_tiles
 from tests.test_plans import _plan
+from tile_gen_spark.operators import spatial_join as SJ
 from tile_gen_spark.operators import tiles as T
-from tile_gen_spark.plans.session import shuffle_parts
+from tile_gen_spark.plans.session import MIN_TASK_BYTES, plan_bytes, shuffle_parts
 
 
 def _exchange_counts(plan: str) -> dict[str, list[int]]:
@@ -27,8 +37,8 @@ def test_clip_parts_at_measured_sizes():
     # 400k city-skewed pages (113 MB): the old ×4 at 8 and at 64 partitions
     assert T.clip_parts(113_000_000, 8) == 32
     assert T.clip_parts(113_000_000, 64) == 256
-    # the threshold is OVERPART_MIN_BYTES per shuffle partition, inclusive
-    edge = 4 * T.OVERPART_MIN_BYTES
+    # the threshold is MIN_TASK_BYTES per shuffle partition, inclusive
+    edge = 4 * MIN_TASK_BYTES
     assert T.clip_parts(edge - 1, 4) == 4
     assert T.clip_parts(edge, 4) == 4 * T.OVERPART
 
@@ -36,8 +46,8 @@ def test_clip_parts_at_measured_sizes():
 def test_build_tile_features_exchanges_use_derived_count(spark, features):
     base = shuffle_parts(spark)
     n = T._n_clip_parts(features)
-    # the test corpus is far below OVERPART_MIN_BYTES per partition
-    assert T.plan_bytes(features) < base * T.OVERPART_MIN_BYTES
+    # the test corpus is far below MIN_TASK_BYTES per partition
+    assert T.plan_bytes(features) < base * MIN_TASK_BYTES
     assert n == base
     counts = _exchange_counts(_plan(T.build_tile_features(features, [3, 7])))
     assert counts == {"barrier": [n], "clip": [n], "agg": [n]}, counts
@@ -55,3 +65,70 @@ def test_build_tile_features_rows_independent_of_count(spark, features,
     a, b = _canon_tiles(small), _canon_tiles(large)
     assert len(a) > 50
     assert a == b
+
+
+def test_plan_bytes_reads_cache_built_after_planning(spark):
+    from tile_gen_spark.sources.synth import gen_zones
+    df = gen_zones(spark, 40, seed=11).persist()
+    try:
+        # df's own plan is optimized (and its statistics kept) before the
+        # cache exists: it reports the source estimate from then on
+        stored = df._jdf.queryExecution().optimizedPlan().stats()
+        assert plan_bytes(df) == int(stored.sizeInBytes())
+        df.count()
+        cached = (spark._jsparkSession.sharedState().cacheManager()
+                  .lookupCachedData(df._jdf).get().cachedRepresentation()
+                  .cacheBuilder().sizeInBytesStats().value())
+        assert cached > 0
+        assert plan_bytes(df) == cached != int(stored.sizeInBytes())
+    finally:
+        df.unpersist()
+
+
+def _coalesce_counts(plan: str) -> list[int]:
+    """Partition counts of the Coalesce nodes of a formatted plan."""
+    return [int(n) for n in re.findall(
+        r"\(\d+\) Coalesce\nInput .*\nArguments: (\d+)", plan)]
+
+
+@pytest.fixture(scope="module")
+def pip_inputs(spark):
+    from tile_gen_spark.sources.synth import gen_zones
+    zones = gen_zones(spark, 40, seed=7).cache()
+    zones.count()
+    pts = spark.range(500).select(
+        F.col("id").alias("point_id"),
+        (F.pmod(F.hash("id"), F.lit(340000000)) / 1000000.0 - 170.0).alias("lon"),
+        (F.pmod(F.hash(F.col("id") + 99), F.lit(140000000)) / 1000000.0 - 70.0).alias("lat"))
+    yield pts, zones
+    zones.unpersist()
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_pip_join_coalesces_zone_side(spark, pip_inputs, broadcast,
+                                      monkeypatch):
+    pts, zones = pip_inputs
+    size = plan_bytes(zones.select("zone_id", "ring"))
+    n = max(1, -(-size // MIN_TASK_BYTES))
+    assert n == 1 < shuffle_parts(spark)      # 40 zones: a few KB
+    small = SJ.pip_join(pts, zones, res=5, broadcast_zones=broadcast)
+    # the covering and the per-edge table each read the coalesced zones
+    assert _coalesce_counts(_plan(small)) == [n, n]
+    rows = sorted(small.collect())
+    assert len(rows) > 0
+
+    monkeypatch.setattr(SJ, "plan_bytes", lambda df: 1 << 62)
+    large = SJ.pip_join(pts, zones, res=5, broadcast_zones=broadcast)
+    assert _coalesce_counts(_plan(large)) == []
+    assert sorted(large.collect()) == rows
+
+
+def test_zone_side_count_follows_plan_bytes(spark, pip_inputs, monkeypatch):
+    _, zones = pip_inputs
+    base = shuffle_parts(spark)
+    for size, want in ((1, 1), (MIN_TASK_BYTES, 1), (MIN_TASK_BYTES + 1, 2),
+                       ((base - 1) * MIN_TASK_BYTES, base - 1),
+                       ((base - 1) * MIN_TASK_BYTES + 1, None)):
+        monkeypatch.setattr(SJ, "plan_bytes", lambda df, s=size: s)
+        got = _coalesce_counts(_plan(SJ.zone_side(zones)))
+        assert got == ([want] if want else []), (size, got)

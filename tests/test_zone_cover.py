@@ -136,3 +136,15 @@ def test_empty_batch():
 def test_odd_coordinate_count_is_rejected():
     with pytest.raises(ValueError, match="odd number"):
         SJ.zone_cover_batch(_batch([1, 2], [_OPEN, _OPEN[:-1]]), 10, GCAP, CAP)
+
+
+@pytest.mark.parametrize("lat0,lat1,row", [(86.0, 88.0, 0), (-89.0, -86.0, 3)])
+def test_zone_past_clamp_covers_clamped_row(lat0, lat1, row):
+    # a zone wholly outside the Mercator band: its points bucket into the
+    # clamped row at their own column, which no tile bbox of the band
+    # reaches — the covering keeps every column of the zone in that row
+    ring = [-180.0, lat0, 0.0, lat0, 0.0, lat1, -180.0, lat1]
+    got = SJ.zone_cover_batch(_batch([1], [ring]), 2, GCAP, CAP)
+    kernel = K.polygon_covering_tiles(np.asarray(ring), 2)
+    assert kernel.shape[0] == 2                   # its two vertex tiles only
+    assert got.column("qb").to_pylist() == [x * 4 + row for x in (0, 1, 2)]

@@ -147,6 +147,13 @@ def quadkey_decode(qk: str) -> tuple[int, int, int]:
 # INSIDE. Vectorized across the point batch; loop over polygon edges only.
 # ---------------------------------------------------------------------------
 
+#: On-edge tolerance, a distance in degrees: a point within it of an edge
+#: (its projection inside the segment) counts as on the edge. |cross| is
+#: distance × len, so the test is |cross| <= ON_EDGE_TOL·len; a bound on
+#: |cross| that does not scale with len lets a very short edge claim points
+#: far from it (a 2e-16° edge claimed points 180° away at 1e-12).
+ON_EDGE_TOL = 1e-12
+
 def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """px, py: (N,) point coords. ring: flat [x0,y0,x1,y1,...] closed or open.
 
@@ -169,12 +176,17 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
             xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
         crosses = cond & (px < xint)
         inside ^= crosses
-        # boundary check: point on segment [p1,p2]
+        # boundary check: point within ON_EDGE_TOL of segment [p1,p2]
+        # (|cross| = distance·len); a zero-length edge (a repeated vertex)
+        # has cross = dot = 0 for every point, so it is skipped — its point
+        # is a vertex of the neighbouring edges
         dx, dy = x2 - x1, y2 - y1
+        seg_len2 = dx * dx + dy * dy
+        if seg_len2 == 0:
+            continue
         cross = (px - x1) * dy - (py - y1) * dx
         dot = (px - x1) * dx + (py - y1) * dy
-        seg_len2 = dx * dx + dy * dy
-        on_edge |= (np.abs(cross) <= 1e-12 * max(1.0, np.sqrt(seg_len2))) & (dot >= 0) & (dot <= seg_len2)
+        on_edge |= (np.abs(cross) <= ON_EDGE_TOL * np.sqrt(seg_len2)) & (dot >= 0) & (dot <= seg_len2)
     return inside | on_edge
 
 
@@ -186,7 +198,7 @@ def points_in_rings_vec(px: np.ndarray, py: np.ndarray,
     group by ring length). Open or closed rings both work: a duplicated
     closing vertex contributes a zero-length edge, masked by seg2 > 0.
     Arithmetic and boundary rule are identical to points_in_ring (one edge
-    per roll position, same 1e-12·max(1,len) on-edge tolerance), so results
+    per roll position, same ON_EDGE_TOL on-edge distance), so results
     match the scalar kernel bit-for-bit; this exists because the refine hot
     loop sees ~2000 tiny per-zone groups per Arrow batch, where per-call
     numpy overhead dominated (~170 µs/candidate → ~6 µs/candidate)."""
@@ -205,7 +217,7 @@ def points_in_rings_vec(px: np.ndarray, py: np.ndarray,
     cross = (pxc - x1) * dy - (pyc - y1) * dx
     dot = (pxc - x1) * dx + (pyc - y1) * dy
     seg2 = dx * dx + dy * dy
-    tol = 1e-12 * np.maximum(1.0, np.sqrt(seg2))
+    tol = ON_EDGE_TOL * np.sqrt(seg2)
     on_edge = ((np.abs(cross) <= tol) & (dot >= 0) & (dot <= seg2)
                & (seg2 > 0)).any(axis=1)
     return inside | on_edge

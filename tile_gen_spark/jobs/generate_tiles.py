@@ -65,6 +65,9 @@ def main(argv: list[str] | None = None) -> None:
 
     latest = latest_per_url(pages)
     feats = validity_filter(extract_and_parse(latest)).cache()
+    # build the cache before the first zoom, so every zoom's clip and agg
+    # exchanges are sized from the cached bytes (tiles.clip_parts)
+    n_features = feats.count()
 
     stats = run_tile_job(spark, feats, args.out, args.manifest,
                          parse_zooms(args.zooms), mvt=args.mvt,
@@ -75,7 +78,7 @@ def main(argv: list[str] | None = None) -> None:
         stats.update({"mvt_tree_tiles": tree["n_tiles"],
                       "mvt_tree_bytes": tree["n_bytes"]})
     stats.update({"wall_sec": round(time.time() - t0, 1),
-                  "n_features": feats.count()})
+                  "n_features": n_features})
     print(json.dumps(stats))
     spark.stop()
 

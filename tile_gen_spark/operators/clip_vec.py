@@ -381,7 +381,7 @@ def _dense_cover(zs, verts, S0, L0, is_line, xt, yt, x0, x1g, y0, y1g):
         x2, y2 = crx[i2], cry[i2]
         dx, dy = x2 - x1, y2 - y1
         seg2 = dx * dx + dy * dy
-        tol = 1e-12 * np.maximum(1.0, np.sqrt(seg2))
+        tol = K.ON_EDGE_TOL * np.sqrt(seg2)
         hit_b = np.zeros(n_unit, dtype=bool)
         for cx_, cy_ in ((west, south), (east, south), (east, north),
                          (west, north)):
@@ -393,9 +393,8 @@ def _dense_cover(zs, verts, S0, L0, is_line, xt, yt, x0, x1g, y0, y1g):
             par = np.bincount(iu[crosses], minlength=n_unit) % 2 == 1
             crossv = (px - x1) * dy - (py - y1) * dx
             dot = (px - x1) * dx + (py - y1) * dy
-            # NOTE: no seg2>0 mask — the scalar kernel treats a zero-length
-            # edge as matching every point; replicated bug-for-bug
-            on = (np.abs(crossv) <= tol) & (dot >= 0) & (dot <= seg2)
+            on = ((np.abs(crossv) <= tol) & (dot >= 0) & (dot <= seg2)
+                  & (seg2 > 0))
             on_u = np.bincount(iu[on], minlength=n_unit) > 0
             hit_b |= par | on_u
         covered |= hit_b

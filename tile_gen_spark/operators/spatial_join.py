@@ -9,6 +9,10 @@ join". Shape:
     - polygons via G8 covering tiles: one clip_vec.cover_rows call per
       Arrow batch of zones (the covering the tile assignment and clip use
       too); one row per covering bucket, with the zone's bbox.
+    The zone side (zone_id, ring) is first coalesced by its bytes
+    (zone_side): one task per MIN_TASK_BYTES of its plan size. Both dim
+    stages read it — the covering ``mapInArrow`` and the per-edge table of
+    step 3 — and each of their tasks pays a fixed cost whatever its size.
  2. **Equi-join** the buckets and keep candidates inside the zone bbox. A
     point lives in exactly ONE bucket, so the join emits each candidate
     (point, zone) pair at most once — no dropDuplicates shuffle needed
@@ -37,15 +41,15 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
-from ..plans.session import shuffle_parts
-from .clip_vec import SLOW_CAP, cover_rows
+from ..plans.session import MIN_TASK_BYTES, plan_bytes, shuffle_parts
+from .clip_vec import SLOW_CAP, _ragged_arange, cover_rows
 
 ZONE_QK_SCHEMA = ("zone_id bigint, qb bigint, bminx double, bmaxx double, "
                   "bminy double, bmaxy double")
 
 # bbox prefilter margin: the kernel's on-edge rule accepts points within
-# 1e-12·max(1,len) of an edge, which can sit just OUTSIDE the ring's bbox —
-# the margin keeps the prefilter a strict superset of the exact test
+# K.ON_EDGE_TOL (1e-12°) of an edge, which can sit just OUTSIDE the ring's
+# bbox — the margin keeps the prefilter a strict superset of the exact test
 _BBOX_EPS = 1e-9
 
 
@@ -91,6 +95,40 @@ def points_with_bucket(points: DataFrame, res: int,
         "qb", F.expr(f"coalesce(({x}) * {1 << res} + ({y}), -1)"))
 
 
+def _clamped_rows(zi, x, y, verts, S, res: int):
+    """Covering rows (zi, x, y) plus the clamped tile rows of the zones that
+    reach past them.
+
+    points_with_bucket clamps latitude to ±MAX_LAT, so a point north of the
+    top tile row (lat > 85.0511°) buckets into row 0 at its own column, and
+    one south of the bottom row into row 2^res - 1. A tile covering only
+    sees the part of a zone inside the Mercator band, so a zone with a
+    vertex past that row's outer edge also gets the whole row across its
+    column range — a superset of its clamped points' buckets, which the
+    exact refine trims. Rows come back in (zone, x, y) order then; batches
+    without such zones come back unchanged."""
+    if not S.size:
+        return zi, x, y
+    top = float(K.tile_bounds(res, 0, 0)[3])      # row 0's north edge
+    lat = verts[:, 1]
+    reach = [(k, row) for k, row in (
+        (np.nonzero(np.maximum.reduceat(lat, S) > top)[0], 0),
+        (np.nonzero(np.minimum.reduceat(lat, S) < -top)[0], (1 << res) - 1))
+        if k.size]
+    if not reach:
+        return zi, x, y
+    x0, _ = K.point_to_tile(np.minimum.reduceat(verts[:, 0], S), 0.0, res)
+    x1, _ = K.point_to_tile(np.maximum.reduceat(verts[:, 0], S), 0.0, res)
+    cols = [np.column_stack([zi, x, y])]
+    for k, row in reach:
+        cnt = x1[k] - x0[k] + 1
+        xs = np.repeat(x0[k], cnt) + _ragged_arange(cnt)
+        cols.append(np.column_stack([np.repeat(k, cnt), xs,
+                                     np.full(xs.size, row, np.int64)]))
+    u = np.unique(np.concatenate(cols).astype(np.int64), axis=0)
+    return u[:, 0], u[:, 1], u[:, 2]
+
+
 def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
                      cap: int = SLOW_CAP):
     """One Arrow batch of zones (zone_id, ring) → covering rows
@@ -100,7 +138,8 @@ def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
     clip_vec.cover_rows call (``gcap`` and ``cap`` route a bbox-sparse or
     over-budget zone alone through K.polygon_covering_tiles); the bbox
     columns come from ``reduceat``. The rows equal K.polygon_covering_tiles
-    per zone (tests pin it bit for bit).
+    per zone (tests pin it bit for bit), plus the clamped polar rows of a
+    zone reaching past ±85.0511° (_clamped_rows).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -117,6 +156,7 @@ def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
     ids, S, L = ids[keep], S[keep], L[keep]
     zi, x, y = cover_rows(np.full(ids.size, res, np.int64), verts, S, L,
                           np.zeros(ids.size, bool), cap, gcap)
+    zi, x, y = _clamped_rows(zi, x, y, verts, S, res)
     cols = [ids[zi], x * (1 << res) + y]
     for red, k, eps in ((np.minimum, 0, -_BBOX_EPS), (np.maximum, 0, _BBOX_EPS),
                         (np.minimum, 1, -_BBOX_EPS), (np.maximum, 1, _BBOX_EPS)):
@@ -125,6 +165,30 @@ def zone_cover_batch(rb, res: int, gcap: int = K.GRID_CAP,
     return pa.RecordBatch.from_arrays(
         [pa.array(c) for c in cols],
         names=["zone_id", "qb", "bminx", "bmaxx", "bminy", "bmaxy"])
+
+
+#: A ring whose last vertex is within np.allclose of its first is closed:
+#: kernels.points_in_ring and the covering drop that vertex, and the zone
+#: side drops it too, so every refine path sees the same edges.
+_NEAR = ("abs(try_element_at(ring, {0}) - try_element_at(ring, {1})) "
+         "<= 1e-8 + 1e-5 * abs(try_element_at(ring, {1}))")
+_RING = (f"CASE WHEN size(ring) >= 4 AND {_NEAR.format(1, -2)} AND "
+         f"{_NEAR.format(2, -1)} THEN slice(ring, 1, size(ring) - 2) "
+         "ELSE ring END")
+
+
+def zone_side(zones: DataFrame) -> DataFrame:
+    """zones projected to (zone_id, ring) — a closing vertex dropped as
+    kernels.points_in_ring drops it — and coalesced to one partition per
+    MIN_TASK_BYTES of its optimized-plan size (plan_bytes; at least one).
+
+    Zones are a small dim: 4,000 zones of ~50 vertices plan at 1.8 MB in 8
+    cached partitions, so without this the covering and the per-edge table
+    run 8 tasks each for ~0.1 s of work. From shuffle_parts × MIN_TASK_BYTES
+    up the zones keep their layout (coalesce can only merge partitions)."""
+    z = zones.select("zone_id", F.expr(_RING).alias("ring"))
+    n = max(1, -(-plan_bytes(z) // MIN_TASK_BYTES))
+    return z.coalesce(n) if n < shuffle_parts(z.sparkSession) else z
 
 
 def zones_covering_quadkeys(zones: DataFrame, res: int) -> DataFrame:
@@ -227,8 +291,7 @@ def pip_refine_relational(candidates: DataFrame, zones: DataFrame,
              .withColumn("_dx", _dx).withColumn("_dy", _dy)
              .withColumn("_seg2", F.col("_dx") * F.col("_dx")
                          + F.col("_dy") * F.col("_dy"))
-             .withColumn("_eps", F.lit(1e-12)
-                         * F.greatest(F.lit(1.0), F.sqrt(F.col("_seg2")))))
+             .withColumn("_eps", F.lit(K.ON_EDGE_TOL) * F.sqrt(F.col("_seg2"))))
     j = candidates.join(F.broadcast(edges) if broadcast else edges, "zone_id")
     # r7b: group on the two key columns only — lon/lat are functionally
     # dependent on point_id (every row of a group carries identical values),
@@ -310,6 +373,8 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
     if bbox is not None:
         points = bbox_filter(points, *bbox)
     pts = points_with_bucket(points.select("point_id", "lon", "lat"), res)
+    # one coalesced zone side feeds every dim stage: covering, edges, rings
+    zones = zone_side(zones)
     zqk = zones_covering_quadkeys(zones, res)
     # zone-bbox prefilter folded into the join condition: whole-stage-codegen
     # column comparisons, zero allocation, removes ~3/4 of candidates before

@@ -24,7 +24,8 @@ Scale design:
    tile_feature_lists.
  - The clip and agg exchanges take one partition count, clip_parts: the
    shuffle partitions, over-partitioned ×OVERPART only when the input's
-   optimized-plan size is at least OVERPART_MIN_BYTES per partition.
+   optimized-plan size (plans.session.plan_bytes) is at least
+   MIN_TASK_BYTES per partition.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
-from ..plans.session import shuffle_parts
+from ..plans.session import MIN_TASK_BYTES, plan_bytes, shuffle_parts
 from .clip_vec import (cover_rows, decode_clip_rings, fast_batch_arrow,
                        slow_batch_arrow)
 
@@ -61,12 +62,6 @@ CLIP_FLAT_SCHEMA = ("z int, x bigint, y bigint, feature_id bigint, "
 #: ×8 = 6.5 s (×2 = 11.7 s — a reproducible hash-collision pathology at 128
 #: partitions, avoided).
 OVERPART = 4
-#: Input bytes per shuffle partition from which clip_parts over-partitions.
-#: Below it each extra Python task costs more than it spreads: the cached
-#: features of 4,000 uniform pages (1.4 MB) clip in a 36-task stage of 2.1 s
-#: at ×4 and a 12-task stage of 0.8 s at ×1 (4 shuffle partitions, 4 vCPU).
-#: The 400k city-skewed pages (113–139 MB) stay at ×4 up to 64 partitions.
-OVERPART_MIN_BYTES = 1 << 20
 
 #: flat (geom, off) → the public nested array<array<int>> ring list —
 #: pure Catalyst expression, no Python. geom is interleaved [qx, qy, …]; off
@@ -236,14 +231,14 @@ def clip_points_relational(points: DataFrame, zooms: list[int],
 def clip_parts(size_bytes: int, base: int) -> int:
     """Partition count of the clip and agg exchanges for an input of
     ``size_bytes`` at ``base`` shuffle partitions: ×OVERPART from
-    OVERPART_MIN_BYTES per partition up, else ``base``."""
-    return base * OVERPART if size_bytes >= base * OVERPART_MIN_BYTES else base
+    MIN_TASK_BYTES per partition up, else ``base``.
 
-
-def plan_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes of df's optimized plan — the measured bytes
-    of a materialized cache, else an estimate; reading it starts no job."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    Below that each extra Python task costs more than it spreads: the cached
+    features of 4,000 uniform pages (1.4 MB) clip in a 36-task stage of
+    2.1 s at ×4 and a 12-task stage of 0.8 s at ×1 (4 shuffle partitions,
+    4 vCPU). The 400k city-skewed pages (113–139 MB) stay at ×4 up to 64
+    partitions."""
+    return base * OVERPART if size_bytes >= base * MIN_TASK_BYTES else base
 
 
 def _n_clip_parts(df: DataFrame) -> int:

@@ -12,7 +12,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+#: Input bytes per task below which a Python stage gets no more tasks: each
+#: task pays a fixed cost whatever its size (on 4 vCPU, tasks of an empty
+#: mapInArrow start 50–100 ms apart). The tile clip over-partitions only from
+#: this many bytes per shuffle partition (tiles.clip_parts); the PIP zone
+#: side runs one task per this many bytes (spatial_join.zone_side).
+MIN_TASK_BYTES = 1 << 20
 
 
 def default_driver_mem() -> str:
@@ -31,6 +38,17 @@ def shuffle_parts(spark: SparkSession) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's sizeInBytes of a fresh optimized plan of df — the measured
+    bytes of a materialized cache, else an estimate; reading it starts no job.
+
+    A Dataset keeps the statistics of its first optimization, so a cache
+    built after df was first planned would not show in df's own plan; a
+    derived ``select("*")`` is optimized anew and sees it."""
+    qe = df.select("*")._jdf.queryExecution()
+    return int(qe.optimizedPlan().stats().sizeInBytes())
 
 
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,

@@ -5,8 +5,9 @@ Driver-side only (plans are built, never executed) — safe to run anywhere.
 The optional repo_root lets the same script print BEFORE plans from a
 pristine checkout (PYTHONPATH-style import redirection).
 
-Expression ids (``feature_id#123L``) are written as ``#N``: they count up
-per session, so two builds of the same plan differ only there. With them
+Expression ids (``feature_id#123L``) are written as ``#N`` and exchange
+plan ids (``plan_id=1102``) as ``plan_id=N``: both count up per session,
+so two builds of the same plan differ only there. With them
 normalised, "plans unchanged" is ``diff -r <before_dir> <after_dir>``.
 """
 
@@ -28,7 +29,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def plan_of(df) -> str:
     jvm = df.sparkSession._jvm
     plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    return re.sub(r"#\d+", "#N", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
 
 
 def main() -> None:
