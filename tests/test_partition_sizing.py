@@ -6,20 +6,27 @@
   build_tile_features is checked to put its one count on every clip and agg
   exchange, and its rows must not depend on that count.
 - The PIP zone side (spatial_join.zone_side): coalesced to one partition
-  per MIN_TASK_BYTES, on both pip_join paths, with rows independent of it.
+  per MIN_TASK_BYTES, on both sides of the broadcast rule, with rows
+  independent of it.
+- The broadcast rule (session.broadcast_if_small) keeps its hint at the
+  measured 400k-page sizes and drops it over BROADCAST_MAX_BYTES.
 - plan_bytes reads a cache built after the DataFrame was first planned.
 """
 
+import contextlib
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from tests.test_pipeline import _canon_tiles
+from tests.test_pipeline import (_canon_tiles, n_broadcast_hints,
+                                 over_broadcast_cutoff)
 from tests.test_plans import _plan
 from tile_gen_spark.operators import spatial_join as SJ
 from tile_gen_spark.operators import tiles as T
-from tile_gen_spark.plans.session import MIN_TASK_BYTES, plan_bytes, shuffle_parts
+from tile_gen_spark.plans import session as session_module
+from tile_gen_spark.plans.session import (BROADCAST_MAX_BYTES, MIN_TASK_BYTES,
+                                          plan_bytes, shuffle_parts)
 
 
 def _exchange_counts(plan: str) -> dict[str, list[int]]:
@@ -111,16 +118,20 @@ def test_pip_join_coalesces_zone_side(spark, pip_inputs, broadcast,
     size = plan_bytes(zones.select("zone_id", "ring"))
     n = max(1, -(-size // MIN_TASK_BYTES))
     assert n == 1 < shuffle_parts(spark)      # 40 zones: a few KB
-    small = SJ.pip_join(pts, zones, res=5, broadcast_zones=broadcast)
-    # the covering and the per-edge table each read the coalesced zones
-    assert _coalesce_counts(_plan(small)) == [n, n]
-    rows = sorted(small.collect())
-    assert len(rows) > 0
+    # broadcast: the covering rows and the per-edge table are each hinted
+    with (contextlib.nullcontext() if broadcast
+          else over_broadcast_cutoff(spark)):
+        small = SJ.pip_join(pts, zones, res=5)
+        assert n_broadcast_hints(small) == (2 if broadcast else 0)
+        # the covering and the per-edge table each read the coalesced zones
+        assert _coalesce_counts(_plan(small)) == [n, n]
+        rows = sorted(small.collect())
+        assert len(rows) > 0
 
-    monkeypatch.setattr(SJ, "plan_bytes", lambda df: 1 << 62)
-    large = SJ.pip_join(pts, zones, res=5, broadcast_zones=broadcast)
-    assert _coalesce_counts(_plan(large)) == []
-    assert sorted(large.collect()) == rows
+        monkeypatch.setattr(SJ, "plan_bytes", lambda df: 1 << 62)
+        large = SJ.pip_join(pts, zones, res=5)
+        assert _coalesce_counts(_plan(large)) == []
+        assert sorted(large.collect()) == rows
 
 
 def test_zone_side_count_follows_plan_bytes(spark, pip_inputs, monkeypatch):
@@ -132,3 +143,17 @@ def test_zone_side_count_follows_plan_bytes(spark, pip_inputs, monkeypatch):
         monkeypatch.setattr(SJ, "plan_bytes", lambda df, s=size: s)
         got = _coalesce_counts(_plan(SJ.zone_side(zones)))
         assert got == ([want] if want else []), (size, got)
+
+
+def test_broadcast_rule_at_measured_sizes(pages, features, monkeypatch):
+    """The 400k-page shapes stay broadcast: the tile dim (~68 MB planned
+    before the features are built, pinned here at 78 MB) and the per-url
+    table (80 MB). The cutoff is BROADCAST_MAX_BYTES, inclusive."""
+    from tile_gen_spark.operators.extract import latest_per_url
+    for size, hints in ((78_000_000, 1), (BROADCAST_MAX_BYTES, 1),
+                        (BROADCAST_MAX_BYTES + 1, 0)):
+        monkeypatch.setattr(session_module, "plan_bytes", lambda df, s=size: s)
+        assert n_broadcast_hints(T.build_tile_features(features, [3])) == hints
+    for size, hints in ((80_000_000, 1), (BROADCAST_MAX_BYTES + 1, 0)):
+        monkeypatch.setattr(session_module, "plan_bytes", lambda df, s=size: s)
+        assert n_broadcast_hints(latest_per_url(pages)) == hints

@@ -4,15 +4,19 @@ Hypothesis draws a few zones — axis-aligned rectangles and small polygons
 with vertices on a 2.5° lattice or anywhere — and probes each with points on
 its vertices, on its edges, beyond the Mercator latitude clamp (±85.0511°,
 where the point buckets clamp to the top or bottom tile row) and on the
-±180° meridians. The exact pairs of pip_join (broadcast and shuffle paths)
-must equal kernels.points_in_ring per zone.
+±180° meridians. The exact pairs of pip_join, with the zone side under and
+over the broadcast cutoff (broadcast and shuffle joins), must equal
+kernels.points_in_ring per zone.
 """
+
+import contextlib
 
 import numpy as np
 import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from tests.test_pipeline import over_broadcast_cutoff
 from tile_gen_spark.functions import kernels as K
 from tile_gen_spark.operators.spatial_join import pip_join
 
@@ -92,9 +96,11 @@ def test_pip_join_matches_kernel(spark, case):
         pd.DataFrame({"point_id": np.arange(len(pts), dtype=np.int64),
                       "lon": pts[:, 0], "lat": pts[:, 1]}),
         "point_id bigint, lon double, lat double")
-    got = {(r["point_id"], r["zone_id"])
-           for r in pip_join(points, zones, res=res,
-                             broadcast_zones=broadcast).collect()}
+    # broadcast=False: both dim-side joins over the broadcast cutoff
+    with (contextlib.nullcontext() if broadcast
+          else over_broadcast_cutoff(spark)):
+        got = {(r["point_id"], r["zone_id"])
+               for r in pip_join(points, zones, res=res).collect()}
     want = {(int(p), zid) for zid, ring in enumerate(rings)
             for p in np.nonzero(K.points_in_ring(pts[:, 0], pts[:, 1], ring))[0]}
     assert got == want, (sorted(want - got)[:5], sorted(got - want)[:5])

@@ -7,12 +7,39 @@ parallelism, clip containment, join-output equality vs brute-force oracles,
 checkpoint-resume idempotence.
 """
 
+import contextlib
+import io
 import os
 import tempfile
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from tile_gen_spark.plans import session as session_module
+
+
+@contextlib.contextmanager
+def over_broadcast_cutoff(spark):
+    """Every broadcast_if_small input reads as over BROADCAST_MAX_BYTES and
+    Catalyst's own size threshold is off, so dim-side joins built and run
+    inside run as shuffle joins."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(session_module, "plan_bytes",
+                   lambda df: session_module.BROADCAST_MAX_BYTES + 1)
+        spark.conf.set(conf, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(conf, old)
+
+
+def n_broadcast_hints(df) -> int:
+    """Broadcast hints in df's optimized logical plan."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count(
+        "strategy=broadcast")
 
 
 def _canon_tiles(df):
@@ -381,6 +408,31 @@ def test_latest_per_url_bjoin_matches_window(spark, pages, monkeypatch):
         assert "html" not in m.group(1), m.group(1)
 
 
+def test_latest_per_url_shuffle_join_over_cutoff(spark, pages):
+    """Over BROADCAST_MAX_BYTES the per-url decision table is not hinted,
+    and with autoBroadcastJoinThreshold=-1 the join back is a shuffle join;
+    its rows equal the default broadcast plan's. (The exact-duplicate fault
+    and TILEGEN_LATEST_MODE are ROADMAP direction 5's own change.)"""
+    from tile_gen_spark.operators.extract import latest_per_url
+
+    def rows(df):
+        return sorted(df.withColumn("h", F.xxhash64("html")).drop("html")
+                      .collect())
+
+    default = latest_per_url(pages)
+    assert n_broadcast_hints(default) == 1
+    want = rows(default)
+    with over_broadcast_cutoff(spark):
+        big = latest_per_url(pages)
+        assert n_broadcast_hints(big) == 0
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            big._jdf.queryExecution(), "formatted")
+        assert "Broadcast" not in plan and "SortMergeJoin" in plan, plan
+        got = rows(big)
+    assert len(want) > 100
+    assert got == want
+
+
 def test_mvt_encode_tiles_spark(spark, features):
     from tile_gen_spark.operators.tiles import build_tile_features
     from tile_gen_spark.operators.mvt import encode_tiles, decode_tile
@@ -430,11 +482,11 @@ def test_zoom_density_grouped_agg(spark, features):
 
 
 def test_pip_join_shuffle_and_indexed_paths(spark):
-    """Non-default pip_join paths vs the numpy oracle: broadcast_zones=False
-    (r4: shuffle per-edge join + the SAME relational parity refine — plan
-    must contain NO Python node), its explicit pandas opt-in
-    (broadcast_zones=False, refine='indexed'), and the broadcast
-    refine='indexed' closure-held ring index."""
+    """pip_join paths vs the numpy oracle: the zone side over
+    BROADCAST_MAX_BYTES (r4: shuffle bucket and per-edge joins + the SAME
+    relational parity refine — no broadcast hint, and no Python node on the
+    candidate side), and refine='indexed' (closure-held rings) on both sides
+    of the broadcast rule."""
     from tile_gen_spark.sources.synth import gen_zones
     from tile_gen_spark.operators.spatial_join import pip_join
     from tile_gen_spark.functions import kernels as K
@@ -454,28 +506,25 @@ def test_pip_join_shuffle_and_indexed_paths(spark):
         for pid in pp["point_id"].to_numpy()[inside]:
             want.add((int(pid), int(zrow["zone_id"])))
     assert len(want) > 0
-    for kwargs in ({"broadcast_zones": False},
-                   {"broadcast_zones": False, "refine": "indexed"},
-                   {"refine": "indexed"}):
-        got = {(r["point_id"], r["zone_id"])
-               for r in pip_join(pts, zones, res=5, **kwargs).collect()}
-        assert got == want, f"pip_join({kwargs}) diverged from oracle"
 
-    # the r4 non-broadcast default must be zero-Python end-to-end past the
-    # zone bucketing stage: only the zone covering/edge dim prep may appear
-    # as an Arrow node; the candidate-side refine must not
-    import contextlib
-    import io
-    shuffle_rel = pip_join(pts, zones, res=5, broadcast_zones=False)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        shuffle_rel.explain()  # simple mode: each physical node appears once
+    def pairs(df):
+        return {(r["point_id"], r["zone_id"]) for r in df.collect()}
+
+    assert pairs(pip_join(pts, zones, res=5, refine="indexed")) == want
+    with over_broadcast_cutoff(spark):
+        assert pairs(pip_join(pts, zones, res=5, refine="indexed")) == want
+        shuffle_rel = pip_join(pts, zones, res=5)
+        assert n_broadcast_hints(shuffle_rel) == 0
+        assert pairs(shuffle_rel) == want
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            shuffle_rel.explain()  # simple mode: each physical node once
     plan = buf.getvalue()
     # zone dim prep (zones_covering_quadkeys' MapInArrow over zone_id+ring /
     # the cached synth source's MapInPandas) are the only allowed Arrow
-    # stages; the candidate-side refine must be pure
-    # codegen — no pandas node may touch point rows (the old path's pandas
-    # refine showed as a MapInPandas over point_id+ring)
+    # stages; the candidate-side refine must be pure codegen — no pandas
+    # node may touch point rows
+    assert "SortMergeJoin" in plan and "Broadcast" not in plan, plan
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 0, plan
     assert not any("MapInPandas" in l and "point_id" in l
                    for l in plan.splitlines()), plan
@@ -654,9 +703,9 @@ def test_ann_recall_clustered_regime(spark):
 
 
 def test_dim_agg_shuffle_join_fallback(spark, features):
-    """tile_feature_lists_dim(broadcast_dim=False) — the huge-dim fallback
-    (shuffle hash join on feature_id instead of a broadcast) — must produce
-    exactly the broadcast path's tiles."""
+    """tile_feature_lists_dim with the kind/props dim over
+    BROADCAST_MAX_BYTES — no broadcast hint, a shuffle join on feature_id —
+    must produce exactly the broadcast path's tiles."""
     from tile_gen_spark.operators.tiles import (clip_points_flat,
                                                 clip_shapes_flat,
                                                 tile_feature_lists_dim)
@@ -665,28 +714,15 @@ def test_dim_agg_shuffle_join_fallback(spark, features):
     flat = clip_points_flat(features.filter("kind='point'"), zooms).unionByName(
         clip_shapes_flat(features.filter("kind!='point'"), zooms))
     dim = features.select("feature_id", "kind", "props")
-    a = _canon_tiles(tile_feature_lists_dim(flat, dim, broadcast_dim=True))
-    b = _canon_tiles(tile_feature_lists_dim(flat, dim, broadcast_dim=False))
+    small = tile_feature_lists_dim(flat, dim)
+    assert n_broadcast_hints(small) == 1
+    a = _canon_tiles(small)
+    with over_broadcast_cutoff(spark):
+        large = tile_feature_lists_dim(flat, dim)
+        assert n_broadcast_hints(large) == 0
+        b = _canon_tiles(large)
     assert len(a) > 20
     assert a == b
-
-
-def test_broadcast_dim_env_knob(spark, features, monkeypatch):
-    """TILEGEN_BROADCAST_DIM=0 must remove the forced broadcast hint from
-    build_tile_features' dim join (ADVICE r4 #1: the non-code escape hatch
-    for dims too big to broadcast)."""
-    from tile_gen_spark.operators.tiles import build_tile_features
-
-    def n_broadcast_hints(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return plan.count("strategy=broadcast")
-
-    monkeypatch.setenv("TILEGEN_BROADCAST_DIM", "1")
-    forced = build_tile_features(features, [2])
-    monkeypatch.setenv("TILEGEN_BROADCAST_DIM", "0")
-    unhinted = build_tile_features(features, [2])
-    assert n_broadcast_hints(forced) >= 1
-    assert n_broadcast_hints(unhinted) == 0
 
 
 def test_knn_embeddings_chunked_query_side(spark):

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 from pyspark.sql.functions import pandas_udf
 
+from ..plans.session import broadcast_if_small
+
 FEATURES_SCHEMA = ("url string, feature_id bigint, kind string, "
                    "coords array<array<double>>, props map<string,string>")
 
@@ -189,18 +191,24 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
     default mode decides the winner per url on SMALL columns only —
     ``groupBy(url).agg(max(struct(warc_ts, xxhash64(html))))`` partial-
     aggregates map-side, so the only exchange carries one ~50-byte row per
-    url — and attaches the decision with a broadcast equi-join back on
-    (url, warc_ts, xxhash64(html)). The page payloads (html/text) never
-    enter ANY exchange and are never sorted; the old window shuffled + sorted
-    the full corpus by url just to drop the ~5% superseded snapshots.
+    url — and attaches the decision with an equi-join back on
+    (url, warc_ts, xxhash64(html)). The per-url decision table has one row
+    per url, so it is broadcast only while under BROADCAST_MAX_BYTES
+    (plans.session.broadcast_if_small); above that Catalyst/AQE pick the
+    join (a shuffle join on the keys, which moves the pages once). While it
+    broadcasts, the page payloads (html/text) never enter ANY exchange and
+    are never sorted; the old window shuffled + sorted the full corpus by
+    url just to drop the ~5% superseded snapshots.
 
     Tie-break matches the window exactly (desc warc_ts, desc xxhash64(html)).
     Caveat: rows that tie on ALL of (url, warc_ts, xxhash64(html)) — i.e.
     byte-identical re-deliveries of the same snapshot — would each survive
     the join where the window kept one arbitrarily; corpora that can contain
     such exact dup snapshots should set TILEGEN_LATEST_MODE=window (the
-    pre-r7 row_number path, kept verbatim below). Parity on the synthetic
-    corpus (which pins unique (url, warc_ts)) is asserted by pytest.
+    pre-r7 row_number path, kept verbatim below). Both the exact-duplicate
+    fault and TILEGEN_LATEST_MODE are still open (ROADMAP direction 5).
+    Parity on the synthetic corpus (which pins unique (url, warc_ts)) is
+    asserted by pytest, on the broadcast and the shuffle join.
     """
     import os
     if os.environ.get("TILEGEN_LATEST_MODE", "bjoin") == "window":
@@ -223,7 +231,7 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
            .select("url", F.col("_w.warc_ts").alias("warc_ts"),
                    F.col("_w._h").alias("_h")))
     return (pages.withColumn("_h", F.xxhash64("html"))
-            .join(F.broadcast(win), ["url", "warc_ts", "_h"])
+            .join(broadcast_if_small(win), ["url", "warc_ts", "_h"])
             .select(*cols))
 
 

@@ -16,14 +16,16 @@ join". Shape:
  2. **Equi-join** the buckets and keep candidates inside the zone bbox. A
     point lives in exactly ONE bucket, so the join emits each candidate
     (point, zone) pair at most once — no dropDuplicates shuffle needed
-    (cheaper than generic bucket joins that duplicate both sides). The zone
-    side is typically the small dim → broadcast when under the threshold;
-    AQE skew-split handles hot city buckets on the shuffle path.
+    (cheaper than generic bucket joins that duplicate both sides). The
+    covering rows are broadcast when under BROADCAST_MAX_BYTES
+    (plans.session.broadcast_if_small); above it the join is left to
+    Catalyst/AQE, whose skew-split handles hot city buckets.
  3. **Refine** with the exact even-odd PIP test (G7), relationally
     (pip_refine_relational): candidates join a per-edge table of the zones
-    (broadcast, or a shuffle join on zone_id when the zones are too big),
-    per-edge crossing and on-edge flags are codegen'd column arithmetic,
-    and a hash aggregate per (point, zone) takes the crossing parity.
+    (broadcast by the same rule, else a shuffle join on zone_id), per-edge
+    crossing and on-edge flags are codegen'd column arithmetic, and a hash
+    aggregate per (point, zone) takes the crossing parity. ``refine=
+    "indexed"`` instead holds the rings in the task closure.
 
 At 100 TB the shuffles are the bucket equi-join and, without a broadcast,
 the per-edge join (or none if the zone side broadcasts); the parity
@@ -41,7 +43,8 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
-from ..plans.session import MIN_TASK_BYTES, plan_bytes, shuffle_parts
+from ..plans.session import (MIN_TASK_BYTES, broadcast_if_small,
+                             plan_bytes, shuffle_parts)
 from .clip_vec import SLOW_CAP, _ragged_arange, cover_rows
 
 ZONE_QK_SCHEMA = ("zone_id bigint, qb bigint, bminx double, bmaxx double, "
@@ -200,37 +203,6 @@ def zones_covering_quadkeys(zones: DataFrame, res: int) -> DataFrame:
         ZONE_QK_SCHEMA)
 
 
-def pip_refine(candidates: DataFrame) -> DataFrame:
-    """Exact G7 refine over candidate pairs; input needs lon, lat, ring cols.
-
-    Rows are grouped by ring vertex count inside each Arrow batch and run
-    through ONE vectorized ray-cast per group (points_in_rings_vec) — the
-    per-zone grouping of round 1 made ~2000 numpy calls of ~6 candidates
-    each per batch, and call overhead dominated the whole join."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-        if f.name != "ring")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                yield b.drop(columns=["ring"])
-                continue
-            keep = np.zeros(len(b), dtype=bool)
-            px = b["lon"].to_numpy(dtype=np.float64)
-            py = b["lat"].to_numpy(dtype=np.float64)
-            lens = b["ring"].map(len).to_numpy(dtype=np.int64)
-            for L in np.unique(lens):
-                idx = np.nonzero(lens == L)[0]
-                rings = np.stack(
-                    [np.asarray(r, dtype=np.float64) for r in b["ring"].iloc[idx]]
-                ).reshape(len(idx), -1, 2)
-                keep[idx] = K.points_in_rings_vec(px[idx], py[idx], rings)
-            yield b.loc[keep].drop(columns=["ring"])
-
-    return candidates.mapInPandas(fn, out_schema)
-
-
 def zone_edges(zones: DataFrame) -> DataFrame:
     """zones(zone_id, ring) → one row per edge with flat double columns
     (x1, y1, x2, y2). Evaluated once per zone (dim-table scale)."""
@@ -244,14 +216,13 @@ def zone_edges(zones: DataFrame) -> DataFrame:
     return zones.select("zone_id", F.expr(edge))
 
 
-def pip_refine_relational(candidates: DataFrame, zones: DataFrame,
-                          broadcast: bool = True) -> DataFrame:
+def pip_refine_relational(candidates: DataFrame, zones: DataFrame) -> DataFrame:
     """Exact G7 refine with ZERO Python in the hot path: candidates join the
-    broadcast per-edge table, per-edge crossing/on-edge flags are flat-column
-    double arithmetic (whole-stage codegen, no arrays, no boxing), and the
-    per-candidate even-odd parity is a hash aggregate whose partial collapses
-    map-side (broadcast join preserves the probe partitioning, so every
-    candidate's edges sit in one partition). Same formulas and boundary rule
+    per-edge table (broadcast_if_small), per-edge crossing/on-edge flags
+    are flat-column double arithmetic (whole-stage codegen, no arrays, no
+    boxing), and the per-candidate even-odd parity is a hash aggregate whose
+    partial collapses map-side (broadcast join preserves the probe
+    partitioning, so every candidate's edges sit in one partition). Same formulas and boundary rule
     as kernels.points_in_ring — and structurally identical to the DuckDB
     oracle (q_pip_join), so all three agree bit-for-bit.
 
@@ -260,10 +231,10 @@ def pip_refine_relational(candidates: DataFrame, zones: DataFrame,
     the entire relational refine), and interpreted array HOFs allocate per
     element access and go GC-bound at high thread counts.
 
-    ``broadcast=False`` (r4): zone set too big for a broadcast — the same
-    per-edge join runs as a shuffle join on zone_id. The parity agg still
-    adds NO exchange: HashPartitioning(zone_id) is a subset of the group
-    keys (point_id, zone_id, lon, lat), so its ClusteredDistribution is
+    Per-edge table over BROADCAST_MAX_BYTES (r4): the same per-edge join
+    runs as a shuffle join on zone_id. The parity agg still adds NO
+    exchange: HashPartitioning(zone_id) is a subset of the group
+    keys (point_id, zone_id), so its ClusteredDistribution is
     already satisfied and the per-edge rows collapse partition-locally.
     Candidates shuffle once (on zone_id — replacing the broadcast), edges
     shuffle once (dim-scale); zero Python either way. Hot zones are the
@@ -292,13 +263,13 @@ def pip_refine_relational(candidates: DataFrame, zones: DataFrame,
              .withColumn("_seg2", F.col("_dx") * F.col("_dx")
                          + F.col("_dy") * F.col("_dy"))
              .withColumn("_eps", F.lit(K.ON_EDGE_TOL) * F.sqrt(F.col("_seg2"))))
-    j = candidates.join(F.broadcast(edges) if broadcast else edges, "zone_id")
+    j = candidates.join(broadcast_if_small(edges), "zone_id")
     # r7b: group on the two key columns only — lon/lat are functionally
     # dependent on point_id (every row of a group carries identical values),
     # so they ride as first() aggregates instead of widening the hash key
     # probed once per candidate×edge row (395M probes at the bench shape:
     # 4.37 → 4.08 s section median, identical pairs). zone_id stays in the
-    # group keys, so the broadcast=False path still adds no exchange
+    # group keys, so the shuffle join still adds no exchange
     # (HashPartitioning(zone_id) satisfies the agg's distribution).
     return (j.groupBy("point_id", "zone_id")
             .agg(F.first("lon").alias("lon"), F.first("lat").alias("lat"),
@@ -312,12 +283,12 @@ def pip_refine_indexed(candidates: DataFrame, zones: DataFrame) -> DataFrame:
     """Exact G7 refine with the zone rings held in the task closure.
 
     candidates carry only (…, zone_id, lon, lat) — no per-candidate ring
-    payload crosses Arrow or the repartition shuffle (the round-1 version
-    shipped a 12-double ring per candidate row and spent most of the join
-    re-materializing it in pandas: 29 µs/candidate, measured). Rings are
-    length-grouped and pre-stacked once on the driver (the same
-    broadcast-a-small-dim assumption the bucket join already makes); each
-    Arrow batch runs one vectorized ray-cast per length group."""
+    payload crosses Arrow (the round-1 version shipped a 12-double ring per
+    candidate row and spent most of the join re-materializing it in pandas:
+    29 µs/candidate, measured). Rings are length-grouped and pre-stacked
+    once on the driver, so the zone set must fit the driver and every task
+    whatever its size; each Arrow batch runs one vectorized ray-cast per
+    length group."""
     zp = zones.select("zone_id", "ring").toPandas()
     ids = zp["zone_id"].to_numpy(np.int64)
     rings = [np.asarray(r, dtype=np.float64) for r in zp["ring"]]
@@ -353,7 +324,6 @@ def pip_refine_indexed(candidates: DataFrame, zones: DataFrame) -> DataFrame:
 
 
 def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
-             broadcast_zones: bool = True,
              refine: str = "relational",
              bbox: tuple[float, float, float, float] | None = None) -> DataFrame:
     """points(point_id, lon, lat) ⨝ zones(zone_id, ring) → exact PIP pairs.
@@ -361,11 +331,15 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
     Returns (point_id, zone_id, lon, lat). THE join-output correctness
     artifact (``BASELINE.json:6`` "join output rows ... exactly").
 
-    ``refine`` (broadcast path only): ``"relational"`` (default — zero-Python
-    per-edge codegen + map-side parity agg) or ``"indexed"`` (rings held in
-    the task closure, one vectorized ray-cast per ring-length group per Arrow
-    batch — wins when zones have MANY vertices, where the exploded per-edge
-    join row count becomes the cost driver).
+    The covering rows and the per-edge table are each broadcast when under
+    BROADCAST_MAX_BYTES (plans.session.broadcast_if_small), else joined as
+    Catalyst/AQE choose; rows are the same either way.
+
+    ``refine``: ``"relational"`` (default — zero-Python per-edge codegen +
+    map-side parity agg) or ``"indexed"`` (rings held in the task closure,
+    one vectorized ray-cast per ring-length group per Arrow batch — wins
+    when zones have MANY vertices, where the exploded per-edge join row
+    count becomes the cost driver).
 
     ``bbox=(west, south, east, north)``: region prelude — bbox_filter the
     point side BEFORE bucketing, so the predicate reaches the parquet scan.
@@ -375,32 +349,16 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
     pts = points_with_bucket(points.select("point_id", "lon", "lat"), res)
     # one coalesced zone side feeds every dim stage: covering, edges, rings
     zones = zone_side(zones)
-    zqk = zones_covering_quadkeys(zones, res)
+    zqk = broadcast_if_small(zones_covering_quadkeys(zones, res))
     # zone-bbox prefilter folded into the join condition: whole-stage-codegen
     # column comparisons, zero allocation, removes ~3/4 of candidates before
     # anything Python sees. (The interpreted-HOF full ray cast was tried
     # here and is a trap: per-access boxing in lambda eval allocated ~60
     # objects/candidate·edge and went GC-bound at 32 threads.)
-    bbox = ((F.col("lon") >= F.col("bminx")) & (F.col("lon") <= F.col("bmaxx"))
-            & (F.col("lat") >= F.col("bminy")) & (F.col("lat") <= F.col("bmaxy")))
-    if broadcast_zones:
-        cand = (pts.join(F.broadcast(zqk), "qb", "inner").filter(bbox)
-                .select("point_id", "zone_id", "lon", "lat"))
-        if refine == "indexed":
-            return pip_refine_indexed(cand, zones)
-        return pip_refine_relational(cand, zones)
-    # zone set too big to broadcast: shuffle equi-join on the bucket, then
-    # the SAME relational per-edge parity refine as the broadcast path, run
-    # as a shuffle join on zone_id (r4 — replaces the ring-per-candidate
-    # Arrow crossing; tests assert no Python node in this plan either).
-    cand = (pts.join(zqk, "qb", "inner").filter(bbox)
+    in_bbox = ((F.col("lon") >= F.col("bminx")) & (F.col("lon") <= F.col("bmaxx"))
+               & (F.col("lat") >= F.col("bminy")) & (F.col("lat") <= F.col("bmaxy")))
+    cand = (pts.join(zqk, "qb", "inner").filter(in_bbox)
             .select("point_id", "zone_id", "lon", "lat"))
     if refine == "indexed":
-        # explicit opt-in retains the pandas kernel path (rings shipped per
-        # surviving candidate) for engines/zones where the per-edge
-        # explosion is worse than the Arrow crossing
-        cand = (cand.join(zones.select("zone_id", "ring"), "zone_id")
-                .select("point_id", "zone_id", "lon", "lat", "ring"))
-        return pip_refine(cand.repartition(shuffle_parts(points.sparkSession),
-                                           "point_id"))
-    return pip_refine_relational(cand, zones, broadcast=False)
+        return pip_refine_indexed(cand, zones)
+    return pip_refine_relational(cand, zones)

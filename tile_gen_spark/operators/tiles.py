@@ -26,11 +26,11 @@ Scale design:
    shuffle partitions, over-partitioned ×OVERPART only when the input's
    optimized-plan size (plans.session.plan_bytes) is at least
    MIN_TASK_BYTES per partition.
+ - The per-feature kind/props dim joins after the last exchange, broadcast
+   when under BROADCAST_MAX_BYTES (plans.session.broadcast_if_small).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
-from ..plans.session import MIN_TASK_BYTES, plan_bytes, shuffle_parts
+from ..plans.session import (MIN_TASK_BYTES, broadcast_if_small,
+                             plan_bytes, shuffle_parts)
 from .clip_vec import (cover_rows, decode_clip_rings, fast_batch_arrow,
                        slow_batch_arrow)
 
@@ -360,15 +361,16 @@ def clip_shapes_direct(shapes: DataFrame, zooms: list[int],
     ships coords ONCE per feature instead of once per zoom) and MULTI-TILE zooms
     (the batched covering+clip of clip_vec.slow_batch_arrow). Monotonicity
     makes the split exact: if the bbox fits one tile at z it fits at every
-    z' < z. Output rows equal clip_shapes_reference's."""
+    z' < z. The kind/props dim rejoins by plans.session.broadcast_if_small.
+    Output rows equal clip_shapes_reference's."""
     # flat core + relational nested view + per-FEATURE kind/props rejoin
     # (the parity pytest compares this whole composition — flat kernels AND
     # reconstruction — against clip_shapes_reference).
-    # The dim join follows the TILEGEN_BROADCAST_DIM policy (default
-    # broadcast: without the hint Catalyst planned a wide shuffle join AND
-    # re-ran the shapes lineage scan on the dim side — ADVICE r4 #3)
+    # The dim is broadcast when under BROADCAST_MAX_BYTES: without the hint
+    # Catalyst planned a wide shuffle join AND re-ran the shapes lineage
+    # scan on the dim side (ADVICE r4 #3)
     flat = clip_shapes_flat(shapes, zooms, extent)
-    dim = _dim_join_side(shapes.select("feature_id", "kind", "props"), None)
+    dim = broadcast_if_small(shapes.select("feature_id", "kind", "props"))
     return (nest_geom(flat).join(dim, "feature_id")
             .select("z", "x", "y", "feature_id", "kind", "geom", "props"))
 
@@ -535,23 +537,8 @@ def clip_points_flat(points: DataFrame, zooms: list[int],
                      F.lit(None).cast("array<int>").alias("off"))
 
 
-def _dim_join_side(dim: DataFrame, broadcast_dim: bool | None) -> DataFrame:
-    """Resolve how the per-feature kind/props dim enters a join:
-    True → force broadcast (bypasses autoBroadcastJoinThreshold — right when
-    the dim is known to fit executor memory, the measured local default);
-    False → unhinted, so Catalyst/AQE picks broadcast vs shuffle from the
-    dim's actual size — the non-code escape hatch for O(total features) dims
-    with wide props at cluster scale (ADVICE r4 #1). When None, the
-    TILEGEN_BROADCAST_DIM env (1|0|auto; unset → 1) decides."""
-    if broadcast_dim is None:
-        v = os.environ.get("TILEGEN_BROADCAST_DIM", "1").strip().lower()
-        broadcast_dim = v in ("1", "true", "yes")
-    return F.broadcast(dim) if broadcast_dim else dim
-
-
 def build_tile_features(features: DataFrame, zooms: list[int],
-                        extent: int = K.MVT_EXTENT,
-                        broadcast_dim: bool | None = None) -> DataFrame:
+                        extent: int = K.MVT_EXTENT) -> DataFrame:
     """EP2 pipeline: features → clipped per-tile rows → MVT-equivalent lists.
 
     Points take the zero-Python relational path; shapes take the Arrow clip
@@ -561,10 +548,9 @@ def build_tile_features(features: DataFrame, zooms: list[int],
     BETWEEN the single agg exchange and the single full-width collect, and
     the public nested schema is rebuilt relationally there
     (tile_feature_lists_dim). The tile key rides the exchange packed into
-    one bigint whenever every zoom is ≤ 29.
-    ``broadcast_dim``: True forces the kind/props dim broadcast, False
-    leaves the join unhinted (AQE sizes it), None reads
-    TILEGEN_BROADCAST_DIM (the huge-dim escape hatch, no code change).
+    one bigint whenever every zoom is ≤ 29. The kind/props dim is
+    broadcast when under BROADCAST_MAX_BYTES, else the join is left to
+    Catalyst/AQE (plans.session.broadcast_if_small).
     Output equals tile_feature_lists over clip_points_relational ∪
     clip_shapes_reference (the nested per-row reference pipeline)."""
     # one partition count, from the input's size, for the clip and the agg
@@ -575,7 +561,6 @@ def build_tile_features(features: DataFrame, zooms: list[int],
                            extent, n_parts=n_parts)
     dim = features.select("feature_id", "kind", "props")
     return tile_feature_lists_dim(pts.unionByName(shp), dim,
-                                  broadcast_dim=broadcast_dim,
                                   pack_key=max(zooms) <= 29, n_agg=n_parts)
 
 
@@ -590,14 +575,13 @@ _TXY_MASK = (1 << 29) - 1
 
 
 def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
-                           broadcast_dim: bool | None = None,
                            pack_key: bool | None = None,
                            n_agg: int | None = None) -> DataFrame:
     """A1/A2 with the props dim joined AFTER the last exchange: kind/props
     never enter ANY shuffle, and there is exactly ONE full-width collect.
 
-    Shape (r7): ONE exchange — repartition(n, key) → broadcast kind/props
-    join + relational geom re-nesting (both preserve the hash(key)
+    Shape (r7): ONE exchange — repartition(n, key) → kind/props dim join
+    + relational geom re-nesting (both preserve the hash(key)
     partitioning, so the final groupBy adds NO exchange) → single sorted
     full collect. No salt: a salted two-phase shape [partial collect per
     (key,salt) → second exchange → EXPLODE partials back to rows] spreads
@@ -610,9 +594,9 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
     (z int, x, y bigint) — −16 UnsafeRow bytes on every exchange row, with
     the unpack a post-agg projection on one row per TILE (so partitioning
     propagation never sees the unpacked columns and no exchange is added).
-    ``broadcast_dim=False`` leaves the join unhinted — AQE picks a shuffle
-    join for dims too big to broadcast (adds that join's exchange only);
-    None reads TILEGEN_BROADCAST_DIM (default: force broadcast).
+    The dim is broadcast when its plan is at most BROADCAST_MAX_BYTES
+    (plans.session.broadcast_if_small); a larger dim is left unhinted and
+    Catalyst/AQE pick the join, which adds that join's exchanges only.
     ``n_agg`` is the exchange's partition count (default: clip_parts of
     ``clipped``; build_tile_features passes its clip's count).
     """
@@ -625,7 +609,7 @@ def tile_feature_lists_dim(clipped: DataFrame, dim: DataFrame,
     guarded = pack_key is None
     if pack_key is None:
         pack_key = True
-    d = _dim_join_side(dim.select("feature_id", "kind", "props"), broadcast_dim)
+    d = broadcast_if_small(dim.select("feature_id", "kind", "props"))
     # scale-proportional and AQE-exempt, sized like the clip
     if n_agg is None:
         n_agg = _n_clip_parts(clipped)

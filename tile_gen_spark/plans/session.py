@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Input bytes per task below which a Python stage gets no more tasks: each
 #: task pays a fixed cost whatever its size (on 4 vCPU, tasks of an empty
@@ -20,6 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 #: this many bytes per shuffle partition (tiles.clip_parts); the PIP zone
 #: side runs one task per this many bytes (spatial_join.zone_side).
 MIN_TASK_BYTES = 1 << 20
+
+#: Optimized-plan size up to which a dim-side join input is broadcast
+#: (broadcast_if_small). Spark's 10 MB autoBroadcastJoinThreshold is too
+#: small: the tile kind/props dim of 400k pages plans at about 68 MB before
+#: the features are built, and above the threshold that join would become a
+#: sort-merge join with two more exchanges of the nested rows. 256 MiB is
+#: more than 3x that, and it absorbs plan_bytes' undercount of array-heavy
+#: projections (4,000 zones plan at 1.80 MB against a 3.30 MB cache).
+BROADCAST_MAX_BYTES = 256 << 20
 
 
 def default_driver_mem() -> str:
@@ -49,6 +59,13 @@ def plan_bytes(df: DataFrame) -> int:
     derived ``select("*")`` is optimized anew and sees it."""
     qe = df.select("*")._jdf.queryExecution()
     return int(qe.optimizedPlan().stats().sizeInBytes())
+
+
+def broadcast_if_small(df: DataFrame) -> DataFrame:
+    """The one broadcast rule for a dim-side join input: df hinted for
+    broadcast when its plan_bytes are at most BROADCAST_MAX_BYTES, else df
+    unhinted, so Catalyst and AQE pick the join from the sizes they see."""
+    return F.broadcast(df) if plan_bytes(df) <= BROADCAST_MAX_BYTES else df
 
 
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,
