@@ -9,7 +9,8 @@
   per MIN_TASK_BYTES, on both sides of the broadcast rule, with rows
   independent of it.
 - The broadcast rule (session.broadcast_if_small) keeps its hint at the
-  measured 400k-page sizes and drops it over BROADCAST_MAX_BYTES.
+  measured 400k-page sizes and drops it over BROADCAST_MAX_BYTES; pip_join
+  reads the zone side's bytes once.
 - plan_bytes reads a cache built after the DataFrame was first planned.
 """
 
@@ -141,19 +142,43 @@ def test_zone_side_count_follows_plan_bytes(spark, pip_inputs, monkeypatch):
                        ((base - 1) * MIN_TASK_BYTES, base - 1),
                        ((base - 1) * MIN_TASK_BYTES + 1, None)):
         monkeypatch.setattr(SJ, "plan_bytes", lambda df, s=size: s)
-        got = _coalesce_counts(_plan(SJ.zone_side(zones)))
-        assert got == ([want] if want else []), (size, got)
+        side, nbytes = SJ.zone_side(zones)
+        got = _coalesce_counts(_plan(side))
+        assert nbytes == size and got == ([want] if want else []), (size, got)
 
 
 def test_broadcast_rule_at_measured_sizes(pages, features, monkeypatch):
-    """The 400k-page shapes stay broadcast: the tile dim (~68 MB planned
-    before the features are built, pinned here at 78 MB) and the per-url
-    table (80 MB). The cutoff is BROADCAST_MAX_BYTES, inclusive."""
+    """bench.py's 400k-page shape stays broadcast. Read driver-side with the
+    features persisted but not built, as bench.py plans them: the tile
+    kind/props dim plans at 43,843,988 bytes and the per-url table at
+    25,822,170, both over Spark's 10 MB default threshold. The cutoff is
+    BROADCAST_MAX_BYTES, inclusive."""
     from tile_gen_spark.operators.extract import latest_per_url
-    for size, hints in ((78_000_000, 1), (BROADCAST_MAX_BYTES, 1),
+    for size, hints in ((43_843_988, 1), (BROADCAST_MAX_BYTES, 1),
                         (BROADCAST_MAX_BYTES + 1, 0)):
         monkeypatch.setattr(session_module, "plan_bytes", lambda df, s=size: s)
         assert n_broadcast_hints(T.build_tile_features(features, [3])) == hints
-    for size, hints in ((80_000_000, 1), (BROADCAST_MAX_BYTES + 1, 0)):
+    for size, hints in ((25_822_170, 1), (BROADCAST_MAX_BYTES + 1, 0)):
         monkeypatch.setattr(session_module, "plan_bytes", lambda df, s=size: s)
         assert n_broadcast_hints(latest_per_url(pages)) == hints
+
+
+def test_pip_join_reads_zone_bytes_once(pip_inputs, monkeypatch):
+    """The zone side's plan_bytes decide its coalesce, the covering rows'
+    broadcast and the indexed refine; only the per-edge table is read
+    again."""
+    pts, zones = pip_inputs
+    reads = []
+
+    def counting(read):
+        return lambda df: reads.append(df.columns) or read(df)
+
+    monkeypatch.setattr(SJ, "plan_bytes", counting(SJ.plan_bytes))
+    monkeypatch.setattr(session_module, "plan_bytes",
+                        counting(session_module.plan_bytes))
+    for refine in ("relational", "indexed"):
+        reads.clear()
+        SJ.pip_join(pts, zones, res=5, refine=refine)
+        assert reads == [["zone_id", "ring"]] + (
+            [["zone_id", "x1", "y1", "x2", "y2", "_dx", "_dy", "_seg2", "_eps"]]
+            if refine == "relational" else []), reads

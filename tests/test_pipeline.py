@@ -16,19 +16,21 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tile_gen_spark.operators import spatial_join as SJ
 from tile_gen_spark.plans import session as session_module
 
 
 @contextlib.contextmanager
 def over_broadcast_cutoff(spark):
-    """Every broadcast_if_small input reads as over BROADCAST_MAX_BYTES and
-    Catalyst's own size threshold is off, so dim-side joins built and run
-    inside run as shuffle joins."""
+    """BROADCAST_MAX_BYTES below every size, so every broadcast_if_small
+    input (and pip_join's zone side) is over the cutoff, and Catalyst's own
+    size threshold off: dim-side joins built and run inside run as shuffle
+    joins."""
     conf = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(conf)
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(session_module, "plan_bytes",
-                   lambda df: session_module.BROADCAST_MAX_BYTES + 1)
+        for module in (session_module, SJ):
+            mp.setattr(module, "BROADCAST_MAX_BYTES", -1)
         spark.conf.set(conf, "-1")
         try:
             yield
@@ -485,8 +487,8 @@ def test_pip_join_shuffle_and_indexed_paths(spark):
     """pip_join paths vs the numpy oracle: the zone side over
     BROADCAST_MAX_BYTES (r4: shuffle bucket and per-edge joins + the SAME
     relational parity refine — no broadcast hint, and no Python node on the
-    candidate side), and refine='indexed' (closure-held rings) on both sides
-    of the broadcast rule."""
+    candidate side), and refine='indexed': closure-held rings under the
+    cutoff, the relational refine over it."""
     from tile_gen_spark.sources.synth import gen_zones
     from tile_gen_spark.operators.spatial_join import pip_join
     from tile_gen_spark.functions import kernels as K
@@ -510,9 +512,19 @@ def test_pip_join_shuffle_and_indexed_paths(spark):
     def pairs(df):
         return {(r["point_id"], r["zone_id"]) for r in df.collect()}
 
-    assert pairs(pip_join(pts, zones, res=5, refine="indexed")) == want
+    def point_side_python(df) -> bool:
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple")
+        return any("MapInPandas" in l and "point_id" in l
+                   for l in plan.splitlines())
+
+    indexed = pip_join(pts, zones, res=5, refine="indexed")
+    assert point_side_python(indexed)
+    assert pairs(indexed) == want
     with over_broadcast_cutoff(spark):
-        assert pairs(pip_join(pts, zones, res=5, refine="indexed")) == want
+        indexed = pip_join(pts, zones, res=5, refine="indexed")
+        assert not point_side_python(indexed)
+        assert pairs(indexed) == want
         shuffle_rel = pip_join(pts, zones, res=5)
         assert n_broadcast_hints(shuffle_rel) == 0
         assert pairs(shuffle_rel) == want
@@ -526,9 +538,18 @@ def test_pip_join_shuffle_and_indexed_paths(spark):
     # node may touch point rows
     assert "SortMergeJoin" in plan and "Broadcast" not in plan, plan
     assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 0, plan
-    assert not any("MapInPandas" in l and "point_id" in l
-                   for l in plan.splitlines()), plan
+    assert not point_side_python(shuffle_rel), plan
     assert "HashAggregate" in plan  # the per-edge parity agg is relational
+
+
+def test_pip_join_rejects_unknown_refine(spark):
+    from tile_gen_spark.operators.spatial_join import pip_join
+    pts = spark.range(1).select(F.col("id").alias("point_id"),
+                                F.lit(0.5).alias("lon"), F.lit(0.5).alias("lat"))
+    zones = spark.createDataFrame([(1, [0.0, 0.0, 1.0, 0.0, 1.0, 1.0])],
+                                  "zone_id bigint, ring array<double>")
+    with pytest.raises(ValueError, match="refine"):
+        pip_join(pts, zones, refine="pandas")
 
 
 def test_pip_join_bbox_prelude(spark):

@@ -10,22 +10,25 @@ join". Shape:
       Arrow batch of zones (the covering the tile assignment and clip use
       too); one row per covering bucket, with the zone's bbox.
     The zone side (zone_id, ring) is first coalesced by its bytes
-    (zone_side): one task per MIN_TASK_BYTES of its plan size. Both dim
+    (zone_side, the one plan_bytes read of the zones): one task per
+    MIN_TASK_BYTES of its plan size. Both dim
     stages read it — the covering ``mapInArrow`` and the per-edge table of
     step 3 — and each of their tasks pays a fixed cost whatever its size.
  2. **Equi-join** the buckets and keep candidates inside the zone bbox. A
     point lives in exactly ONE bucket, so the join emits each candidate
     (point, zone) pair at most once — no dropDuplicates shuffle needed
     (cheaper than generic bucket joins that duplicate both sides). The
-    covering rows are broadcast when under BROADCAST_MAX_BYTES
-    (plans.session.broadcast_if_small); above it the join is left to
+    covering rows are broadcast when the zone side is under
+    BROADCAST_MAX_BYTES (plans.session.broadcast_if_small); above it the join is left to
     Catalyst/AQE, whose skew-split handles hot city buckets.
  3. **Refine** with the exact even-odd PIP test (G7), relationally
     (pip_refine_relational): candidates join a per-edge table of the zones
     (broadcast by the same rule, else a shuffle join on zone_id), per-edge
     crossing and on-edge flags are codegen'd column arithmetic, and a hash
     aggregate per (point, zone) takes the crossing parity. ``refine=
-    "indexed"`` instead holds the rings in the task closure.
+    "indexed"`` instead holds the rings in the task closure, so it runs
+    only while the zone side is under BROADCAST_MAX_BYTES; above it the
+    relational refine runs.
 
 At 100 TB the shuffles are the bucket equi-join and, without a broadcast,
 the per-edge join (or none if the zone side broadcasts); the parity
@@ -43,8 +46,8 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..plans import sqlgen as S
-from ..plans.session import (MIN_TASK_BYTES, broadcast_if_small,
-                             plan_bytes, shuffle_parts)
+from ..plans.session import (BROADCAST_MAX_BYTES, MIN_TASK_BYTES,
+                             broadcast_if_small, plan_bytes, shuffle_parts)
 from .clip_vec import SLOW_CAP, _ragged_arange, cover_rows
 
 ZONE_QK_SCHEMA = ("zone_id bigint, qb bigint, bminx double, bmaxx double, "
@@ -180,18 +183,20 @@ _RING = (f"CASE WHEN size(ring) >= 4 AND {_NEAR.format(1, -2)} AND "
          "ELSE ring END")
 
 
-def zone_side(zones: DataFrame) -> DataFrame:
+def zone_side(zones: DataFrame) -> tuple[DataFrame, int]:
     """zones projected to (zone_id, ring) — a closing vertex dropped as
     kernels.points_in_ring drops it — and coalesced to one partition per
     MIN_TASK_BYTES of its optimized-plan size (plan_bytes; at least one).
+    Returns the zone side and that size.
 
     Zones are a small dim: 4,000 zones of ~50 vertices plan at 1.8 MB in 8
     cached partitions, so without this the covering and the per-edge table
     run 8 tasks each for ~0.1 s of work. From shuffle_parts × MIN_TASK_BYTES
     up the zones keep their layout (coalesce can only merge partitions)."""
     z = zones.select("zone_id", F.expr(_RING).alias("ring"))
-    n = max(1, -(-plan_bytes(z) // MIN_TASK_BYTES))
-    return z.coalesce(n) if n < shuffle_parts(z.sparkSession) else z
+    nbytes = plan_bytes(z)
+    n = max(1, -(-nbytes // MIN_TASK_BYTES))
+    return (z.coalesce(n) if n < shuffle_parts(z.sparkSession) else z), nbytes
 
 
 def zones_covering_quadkeys(zones: DataFrame, res: int) -> DataFrame:
@@ -287,8 +292,8 @@ def pip_refine_indexed(candidates: DataFrame, zones: DataFrame) -> DataFrame:
     candidate row and spent most of the join re-materializing it in pandas:
     29 µs/candidate, measured). Rings are length-grouped and pre-stacked
     once on the driver, so the zone set must fit the driver and every task
-    whatever its size; each Arrow batch runs one vectorized ray-cast per
-    length group."""
+    (pip_join takes this path only under BROADCAST_MAX_BYTES); each Arrow
+    batch runs one vectorized ray-cast per length group."""
     zp = zones.select("zone_id", "ring").toPandas()
     ids = zp["zone_id"].to_numpy(np.int64)
     rings = [np.asarray(r, dtype=np.float64) for r in zp["ring"]]
@@ -332,24 +337,29 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
     artifact (``BASELINE.json:6`` "join output rows ... exactly").
 
     The covering rows and the per-edge table are each broadcast when under
-    BROADCAST_MAX_BYTES (plans.session.broadcast_if_small), else joined as
-    Catalyst/AQE choose; rows are the same either way.
+    BROADCAST_MAX_BYTES (plans.session.broadcast_if_small; the covering
+    rows by the zone side's bytes, which Catalyst also plans them at), else
+    joined as Catalyst/AQE choose; rows are the same either way.
 
     ``refine``: ``"relational"`` (default — zero-Python per-edge codegen +
     map-side parity agg) or ``"indexed"`` (rings held in the task closure,
     one vectorized ray-cast per ring-length group per Arrow batch — wins
     when zones have MANY vertices, where the exploded per-edge join row
-    count becomes the cost driver).
+    count becomes the cost driver). Every task then holds the whole zone
+    set, so over BROADCAST_MAX_BYTES ``"indexed"`` runs the relational
+    refine. Any other value is a ValueError.
 
     ``bbox=(west, south, east, north)``: region prelude — bbox_filter the
     point side BEFORE bucketing, so the predicate reaches the parquet scan.
     """
+    if refine not in ("relational", "indexed"):
+        raise ValueError(f"refine must be 'relational' or 'indexed': {refine!r}")
     if bbox is not None:
         points = bbox_filter(points, *bbox)
     pts = points_with_bucket(points.select("point_id", "lon", "lat"), res)
     # one coalesced zone side feeds every dim stage: covering, edges, rings
-    zones = zone_side(zones)
-    zqk = broadcast_if_small(zones_covering_quadkeys(zones, res))
+    zones, zbytes = zone_side(zones)
+    zqk = broadcast_if_small(zones_covering_quadkeys(zones, res), zbytes)
     # zone-bbox prefilter folded into the join condition: whole-stage-codegen
     # column comparisons, zero allocation, removes ~3/4 of candidates before
     # anything Python sees. (The interpreted-HOF full ray cast was tried
@@ -359,6 +369,6 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int = 6,
                & (F.col("lat") >= F.col("bminy")) & (F.col("lat") <= F.col("bmaxy")))
     cand = (pts.join(zqk, "qb", "inner").filter(in_bbox)
             .select("point_id", "zone_id", "lon", "lat"))
-    if refine == "indexed":
+    if refine == "indexed" and zbytes <= BROADCAST_MAX_BYTES:
         return pip_refine_indexed(cand, zones)
     return pip_refine_relational(cand, zones)

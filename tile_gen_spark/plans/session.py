@@ -23,12 +23,15 @@ from pyspark.sql import functions as F
 MIN_TASK_BYTES = 1 << 20
 
 #: Optimized-plan size up to which a dim-side join input is broadcast
-#: (broadcast_if_small). Spark's 10 MB autoBroadcastJoinThreshold is too
-#: small: the tile kind/props dim of 400k pages plans at about 68 MB before
-#: the features are built, and above the threshold that join would become a
-#: sort-merge join with two more exchanges of the nested rows. 256 MiB is
-#: more than 3x that, and it absorbs plan_bytes' undercount of array-heavy
-#: projections (4,000 zones plan at 1.80 MB against a 3.30 MB cache).
+#: (broadcast_if_small). Read at bench.py's tile_pipeline shape, driver-side
+#: (features persisted but not built when planned): at 400k pages the tile
+#: kind/props dim plans at 43.8 MB and the per-url decision table at
+#: 25.8 MB (0.45 and 0.26 MB at 4,000 pages). Spark's 10 MB
+#: autoBroadcastJoinThreshold would make both sort-merge joins: the dim's
+#: with two more exchanges of the nested rows, the per-url one moving every
+#: page. 256 MiB is more than 5x the dim, and it absorbs plan_bytes'
+#: undercount of array-heavy projections (4,000 zones plan at 1.80 MB
+#: against a 3.30 MB cache).
 BROADCAST_MAX_BYTES = 256 << 20
 
 
@@ -61,11 +64,20 @@ def plan_bytes(df: DataFrame) -> int:
     return int(qe.optimizedPlan().stats().sizeInBytes())
 
 
-def broadcast_if_small(df: DataFrame) -> DataFrame:
+def broadcast_if_small(df: DataFrame, nbytes: int | None = None) -> DataFrame:
     """The one broadcast rule for a dim-side join input: df hinted for
-    broadcast when its plan_bytes are at most BROADCAST_MAX_BYTES, else df
-    unhinted, so Catalyst and AQE pick the join from the sizes they see."""
-    return F.broadcast(df) if plan_bytes(df) <= BROADCAST_MAX_BYTES else df
+    broadcast when its size — nbytes if the caller has read it already,
+    else plan_bytes(df) — is at most BROADCAST_MAX_BYTES, else df unhinted,
+    so Catalyst and AQE pick the join from the sizes they see.
+
+    A hint rather than spark.sql.autoBroadcastJoinThreshold: that setting
+    belongs to whoever built the session (the driver contract's entry(spark)
+    and library callers bring their own, at the 10 MB default), and it
+    reaches every join, AQE's runtime conversions included, not only the
+    dim sides. Set to BROADCAST_MAX_BYTES in get_spark with the hints
+    removed, tools/dump_plans.py gives the same six plans."""
+    size = plan_bytes(df) if nbytes is None else nbytes
+    return F.broadcast(df) if size <= BROADCAST_MAX_BYTES else df
 
 
 def get_spark(app: str = "tile-gen-spark", master: str | None = None,
